@@ -10,7 +10,7 @@ classpath, so set-up time measures graft rather than sbt. The JVM's
 report lines pass through; the last stdout line is one JSON object
 with the keys correct, attempted, failed and metrics.
 
-Workloads: stream_tumbling, stream_timer, batch (see perfbench/README.md).
+Workloads: stream_timer, batch (see perfbench/README.md).
 """
 import argparse
 import hashlib

@@ -33,11 +33,16 @@ object BatchBench {
 
   private val setups = 3
   private val minPasses = 3
+  private val warmupS = 10
 
   def run(o: Opts, trace: Trace): Result = {
-    val order = new scala.util.Random(o.seed).shuffle(queries)
+    // Every pass runs the queries in its own seeded order. A query's
+    // time depends on what ran before it (JIT state, garbage), so one
+    // fixed order per seed gave each seed its own offset of about 10%.
+    val rng = new scala.util.Random(o.seed)
+    def order(): Seq[String] = rng.shuffle(queries)
     // dependency order first, then any build it does not list
-    val deps = order.flatMap(q => SparkEntry.buildDeps.getOrElse(q, Nil)).toSet
+    val deps = queries.flatMap(q => SparkEntry.buildDeps.getOrElse(q, Nil)).toSet
     val builds = SparkEntry.buildOrder.filter(deps) ++
       (deps -- SparkEntry.buildOrder).toSeq.sorted
     val expected = Expected.load(o.root.resolve("perfbench/expected.tsv"))
@@ -70,7 +75,16 @@ object BatchBench {
       System.currentTimeMillis() / 1e3 - t0
     }
 
-    val warm = Main.timed(trace.span("warmup") { pass(spark, dir.toString, order, trace) })
+    // Warm-up: whole passes for `warmupS`. Passes keep getting faster
+    // while the JIT compiles Catalyst and the operators; after one pass
+    // a run's median still depended on how far its JIT had got.
+    val warm = Main.timed(trace.span("warmup") {
+      val t = System.nanoTime()
+      var n = 0
+      while (n == 0 || (System.nanoTime() - t) / 1e9 < warmupS) {
+        pass(spark, dir.toString, order(), trace); n += 1
+      }
+    })
 
     // Measured window: whole passes until `seconds` have elapsed, and at
     // least three. Passes still speed up a little as the JIT settles, so
@@ -78,8 +92,12 @@ object BatchBench {
     // that fits three.
     val passes = mutable.ArrayBuffer.empty[Pass]
     val tStart = System.nanoTime()
+    val jit0 = Main.jitSeconds()
+    val host0 = Main.hostTicks()
     while (passes.size < minPasses || (System.nanoTime() - tStart) / 1e9 < o.seconds)
-      passes += trace.span(s"pass:${passes.size}") { pass(spark, dir.toString, order, trace) }
+      passes += trace.span(s"pass:${passes.size}") { pass(spark, dir.toString, order(), trace) }
+    val jitS = (Main.jitSeconds() - jit0) / passes.size
+    val steal = Main.stealPct(host0, Main.hostTicks())
     trace.drain()
 
     var failed = 0L
@@ -94,7 +112,12 @@ object BatchBench {
     val attempted = passes.map(_.results.size).sum.toLong
     val walls = passes.map(_.wallS)
     val cpus = passes.map(_.cpuS)
-    val perQueryMs = passes.flatMap(_.queryMs)
+    val perQueryMs = passes.flatMap(_.queryMs.map(_._2))
+    // typical time to a full result: each query's median over the passes,
+    // then their geometric mean, so every query weighs the same and no
+    // single pass or query sets the figure
+    val queryMedians = passes.flatMap(_.queryMs).groupMap(_._1)(_._2).values.map(Main.median(_))
+    val latencyMs = math.exp(queryMedians.map(math.log).sum / queryMedians.size)
     val gc = Main.gcSeconds()
     spark.stop()
 
@@ -127,6 +150,7 @@ object BatchBench {
       ("scan.rows", cnt("", "input_rows"), "count"),
       ("scan.files", scanFiles, "count"),
       ("jvm.gc_s", gc, "s"),
+      ("jvm.jit_s", jitS, "s"),
       ("jvm.rss_peak_mb", Main.rssPeakMb(), "MB"),
       ("jvm.heap_peak_mb", Main.heapPeakMb(), "MB")) ++ buildLayer)
 
@@ -136,7 +160,7 @@ object BatchBench {
         ("setup_s", setupS, "s"),
         ("cpu_s", Main.median(cpus), "s"),
         ("work_p50_ms", Main.median(walls) * 1e3, "ms"),
-        ("latency_p50_ms", Main.median(perQueryMs), "ms")),
+        ("latency_ms", latencyMs, "ms")),
       perLayer = perLayer,
       report = Seq(
         ("setup_s", setupS, "s"),
@@ -144,15 +168,17 @@ object BatchBench {
         ("warmup_s", warm._2, "s"),
         ("query_wall_s", Main.median(walls), "s"),
         ("query_wall_passes", n, "count"),
+        ("query_latency_ms", latencyMs, "ms"),
         ("query_p50_ms", Main.median(perQueryMs), "ms"),
         ("cpu_s", Main.median(cpus), "s"),
-        ("rss_peak_mb", Main.rssPeakMb(), "MB")))
+        ("rss_peak_mb", Main.rssPeakMb(), "MB"),
+        ("host_steal_pct", steal, "%")))
   }
 
   /** One timed pass. `results` holds each query's columns and rows (or
     * its error); they are checked after the measured window.
     */
-  case class Pass(wallS: Double, cpuS: Double, queryMs: Seq[Double],
+  case class Pass(wallS: Double, cpuS: Double, queryMs: Seq[(String, Double)],
                   results: Seq[(String, Either[String, (Seq[String], Array[Row])])],
                   scanFiles: Long)
 
@@ -161,7 +187,7 @@ object BatchBench {
     var wall = 0.0
     var cpu = 0.0
     var files = 0L
-    val ms = mutable.ArrayBuffer.empty[Double]
+    val ms = mutable.ArrayBuffer.empty[(String, Double)]
     val results = order.map { q =>
       val c0 = Main.cpuSeconds()
       val t0 = System.nanoTime()
@@ -177,7 +203,7 @@ object BatchBench {
       val dt = (System.nanoTime() - t0) / 1e9
       wall += dt
       cpu += Main.cpuSeconds() - c0
-      ms += dt * 1e3
+      ms += q -> dt * 1e3
       q -> res
     }
     Pass(wall, cpu, ms.toSeq, results, files)

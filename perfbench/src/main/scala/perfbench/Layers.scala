@@ -47,6 +47,7 @@ object Layers {
     "build.jobs" -> "count",
     "build.postings_s" -> "s",
     "jvm.gc_s" -> "s",
+    "jvm.jit_s" -> "s",
     "jvm.heap_peak_mb" -> "MB",
     "jvm.rss_peak_mb" -> "MB")
 

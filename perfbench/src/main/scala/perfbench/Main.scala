@@ -34,7 +34,6 @@ case class Result(attempted: Long, failed: Long,
   */
 object Main {
   val workloads: Map[String, (Opts, Trace) => Result] = Map(
-    "stream_tumbling" -> StreamBench.tumbling,
     "stream_timer" -> StreamBench.timer,
     "batch" -> BatchBench.run)
 
@@ -77,7 +76,7 @@ object Main {
       if (!Files.exists(f)) Map.empty
       else Files.readAllLines(f).asScala.map(_.split('\t'))
         .collect { case Array(n, v) => n -> v.toDouble }.toMap
-    r.endToEnd.filter(m => m._1 == "work_p50_ms" || m._1 == "latency_p50_ms")
+    r.endToEnd.filter(m => m._1 == "work_p50_ms" || m._1 == "latency_ms")
       .map { case (n, v, _) =>
         val b = base.getOrElse(n, v)
         (s"trace.overhead.$n", if (b == 0) 0.0 else v / b - 1, "ratio")
@@ -109,6 +108,24 @@ object Main {
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
   def cpuSeconds(): Double = os.getProcessCpuTime / 1e9
+
+  /** Seconds the JIT compilers have spent compiling, summed over the
+    * compiler threads. The workloads generate new classes on every
+    * micro-batch and batch pass, so this keeps growing after warm-up.
+    */
+  def jitSeconds(): Double = ManagementFactory.getCompilationMXBean.getTotalCompilationTime / 1e3
+
+  /** This machine's CPU ticks stolen by its host, and all its CPU
+    * ticks (/proc/stat). Other tenants of a shared host slow every
+    * timing; the share of stolen ticks shows when they did.
+    */
+  def hostTicks(): (Long, Long) = {
+    val f = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim.split("\\s+").drop(1).map(_.toLong)
+    (f(7), f.sum)
+  }
+
+  def stealPct(from: (Long, Long), to: (Long, Long)): Double =
+    100.0 * (to._1 - from._1) / math.max(1L, to._2 - from._2)
 
   def jvmStartMs: Long = ManagementFactory.getRuntimeMXBean.getStartTime
 

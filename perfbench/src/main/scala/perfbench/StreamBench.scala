@@ -10,9 +10,9 @@ import scala.jdk.CollectionConverters._
 import graft.streaming.{StreamingFraud, Transaction}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress, Trigger}
 
-/** Open-loop streaming workloads. The generator is Spark's `rate`
+/** Open-loop streaming workload. The generator is Spark's `rate`
   * source: its row timestamps are the rows' scheduled creation times,
   * on a wall-clock schedule that does not slow down when the pipeline
   * does. Seed-salted hashes of the row number project each row into the
@@ -21,34 +21,25 @@ import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
 object StreamBench {
 
   /** One streaming workload's shape. `dueMs` is how long after an
-    * alert's `windowStartMs` the alert became due: the window end for
-    * tumbling windows, the fire time for timers.
+    * alert's `windowStartMs` the alert became due (the fire time).
     */
   case class Shape(name: String, rowsPerSecond: Int, accounts: Long, skewMs: Long,
                    dueMs: Long, warmupS: Int, pipeline: DataFrame => DataFrame)
-
-  /** The reference's in-order FraudDetectionJob: 3 s tumbling windows,
-    * 0 s watermark (its ascending timestamp extractor), threshold 10000.
-    * 512,000 rows/s makes 1000/rate exact in binary, so the rate
-    * source's timestamps can be recomputed bit-exactly for the check.
-    */
-  val tumblingShape: Shape = Shape("stream_tumbling", 512000, 10000L, 0L,
-    3000L, 7, tx => StreamingFraud.tumblingAlerts(tx, 3, 10000.0, "0 seconds"))
 
   /** The reference's FraudDetector: a timer 5 s after every element,
     * +-3 s event-time skew under a 5 s watermark. Threshold 0.0: at
     * the reference's 10000 this detector stops alerting in steady
     * state, which would leave no latency samples. 12,000 rows/s keeps
     * a 4-core box below saturation even when other tenants slow it.
+    * 15 s of warm-up: until then the state grows and the JIT is still
+    * compiling, and the CPU per micro-batch keeps falling.
     */
   val timerShape: Shape = Shape("stream_timer", 12000, 100000L, 3000L,
-    5000L, 7, timerPipeline)
+    5000L, 15, timerPipeline)
 
   private def timerPipeline(tx: DataFrame): DataFrame =
     StreamingFraud.perElementTimerDetector(tx.as[Transaction](Encoders.product[Transaction]),
       5, 0.0, "5 seconds").toDF()
-
-  def tumbling(o: Opts, trace: Trace): Result = run(o, trace, tumblingShape)
 
   def timer(o: Opts, trace: Trace): Result = run(o, trace, timerShape)
 
@@ -105,6 +96,9 @@ object StreamBench {
     val ckpt = o.work.resolve(s"ckpt-${shape.name}")
     Main.deleteTree(ckpt)
     val emitted = new ConcurrentLinkedQueue[Emitted]()
+    val cpuAt = new ConcurrentLinkedQueue[(Long, Double)]()
+    val cpuProbe = new CpuProbe(cpuAt)
+    spark.streams.addListener(cpuProbe)
     // Start at a fixed sub-second phase: 1 s triggers fire on whole
     // seconds, and the rate source's second boundaries follow its
     // creation time, so the phase between them shifts every latency.
@@ -127,14 +121,19 @@ object StreamBench {
       while (System.currentTimeMillis() < t && q.isActive) Thread.sleep(math.min(50L, t - System.currentTimeMillis()).max(1L))
     sleepUntil(t0)
     val cpu0 = Main.cpuSeconds()
+    val jit0 = Main.jitSeconds()
+    val host0 = Main.hostTicks()
     sleepUntil(t1)
     val cpu1 = Main.cpuSeconds()
+    val jit1 = Main.jitSeconds()
+    val steal = Main.stealPct(host0, Main.hostTicks())
     // let the batch running at t1 finish, so its progress is recorded
     val lastId = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
     val deadline = System.currentTimeMillis() + 15000
     while (q.isActive && Option(q.lastProgress).map(_.batchId).getOrElse(-1L) <= lastId &&
       System.currentTimeMillis() < deadline) Thread.sleep(20)
     q.stop()
+    spark.streams.removeListener(cpuProbe)
     val creationMs = Files.readAllLines(ckpt.resolve("sources/0/0")).asScala.last.trim.toLong
     val queryFailed = q.exception.isDefined
     q.exception.foreach(e => System.err.println(s"[perfbench] ${shape.name} query failed: ${e.getMessage}"))
@@ -150,8 +149,7 @@ object StreamBench {
       e.rows.map(r => (e.emitMs - r.getAs[Long]("windowStartMs") - shape.dueMs).toDouble))
 
     val ((checked, mismatched, checkReport), checkS) = Main.timed {
-      if (shape eq tumblingShape) checkTumbling(spark, o, shape, creationMs, inWindow)
-      else checkTimerReplay(spark, o, shape)
+      checkTimerReplay(spark, o, shape)
     }
     val fewSamples = if (latencies.size < 1000) {
       System.err.println(s"[perfbench] only ${latencies.size} alerts in the measured window")
@@ -166,6 +164,7 @@ object StreamBench {
     spark.stop()
     Main.deleteTree(ckpt)
 
+    val cpuS = cpuOverWindow(cpuAt.asScala.toSeq, t0, t1)
     val durs = measured.map(p => dur(p, "triggerExecution"))
     val rows = measured.map(_.numInputRows).sum
     val capacity = if (durs.sum > 0) rows / (durs.sum / 1e3) else 0.0
@@ -174,11 +173,11 @@ object StreamBench {
     Result(attempted, failed,
       endToEnd = Seq(
         ("setup_s", setupS, "s"),
-        ("cpu_s", cpu1 - cpu0, "s"),
+        ("cpu_s", cpuS, "s"),
         ("work_p50_ms", Main.median(durs), "ms"),
-        ("latency_p50_ms", p50, "ms")),
+        ("latency_ms", p50, "ms")),
       perLayer = Layers.fill(perLayer ++ Seq(
-        ("jvm.gc_s", gc, "s"), ("jvm.heap_peak_mb", Main.heapPeakMb(), "MB"),
+        ("jvm.gc_s", gc, "s"), ("jvm.jit_s", jit1 - jit0, "s"), ("jvm.heap_peak_mb", Main.heapPeakMb(), "MB"),
         ("jvm.rss_peak_mb", Main.rssPeakMb(), "MB"))),
       report = Seq(
         ("setup_s", setupS, "s"),
@@ -191,10 +190,36 @@ object StreamBench {
         ("microbatch_p50_ms", Main.median(durs), "ms"),
         ("microbatches", durs.size.toDouble, "count"),
         ("capacity_rows_per_s", capacity, "rows/s"),
-        ("cpu_s", cpu1 - cpu0, "s"),
+        ("cpu_s", cpuS, "s"),
+        ("cpu_window_s", cpu1 - cpu0, "s"),
         ("rss_peak_mb", Main.rssPeakMb(), "MB"),
+        ("host_steal_pct", steal, "%"),
         ("check_s", checkS, "s"),
         ("source_phase_ms", (creationMs % 1000).toDouble, "ms")) ++ checkReport)
+  }
+
+  /** Records the process CPU time as each micro-batch's progress
+    * arrives, keyed by wall-clock time.
+    */
+  private class CpuProbe(out: ConcurrentLinkedQueue[(Long, Double)]) extends StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      out.add((System.currentTimeMillis(), Main.cpuSeconds()))
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  }
+
+  /** Process CPU-seconds over the window [t0, t1): the median CPU rate
+    * between consecutive micro-batch completions inside it, times its
+    * length. Each interval holds one batch and the idle time after it,
+    * so the median is robust to a single GC pause, compaction or JIT
+    * burst, where a plain difference over the window is not.
+    */
+  private def cpuOverWindow(at: Seq[(Long, Double)], t0: Long, t1: Long): Double = {
+    val in = at.filter { case (t, _) => t >= t0 && t < t1 }
+    val rates = in.zip(in.drop(1)).collect {
+      case ((ta, ca), (tb, cb)) if tb > ta => (cb - ca) / ((tb - ta) / 1e3)
+    }
+    Main.median(rates) * (t1 - t0) / 1e3
   }
 
   private def startMs(p: StreamingQueryProgress): Long = Instant.parse(p.timestamp).toEpochMilli
@@ -265,34 +290,6 @@ object StreamBench {
   }
 
   // ---- checks ----------------------------------------------------------
-
-  /** Tumbling alerts of every window emitted in the measured window must
-    * equal a batch recomputation over the same generated rows. The rate
-    * source gives row `v` the timestamp `creation + round(v * 1000 /
-    * rate)`; its creation time is the first entry of the source's
-    * checkpoint log.
-    */
-  private def checkTumbling(spark: SparkSession, o: Opts, shape: Shape, creation: Long,
-                            inWindow: Seq[Emitted]): (Long, Long, Seq[(String, Double, String)]) = {
-    val got = inWindow.flatMap(_.rows.map(key)).toSet
-    val windows = got.map(_._2)
-    if (windows.isEmpty) return (0L, 0L, Seq(("check_windows", 0.0, "count")))
-    val rate = shape.rowsPerSecond.toLong
-    val lo = math.max(0L, (windows.min - creation) * rate / 1000 - rate)
-    val hi = (windows.max + shape.dueMs - creation) * rate / 1000 + rate
-    val rows = spark.range(lo, hi, 1, o.cores).select(col("id").as("value"),
-      timestamp_millis(lit(creation) + (col("id") * 1000 + rate / 2).divide(lit(rate)).cast("long"))
-        .as("timestamp"))
-    val expected = shape.pipeline(transactions(rows, o.seed, shape.accounts, shape.skewMs))
-      .filter(col("windowStartMs").isin(windows.toSeq: _*))
-      .collect().map(key).toSet
-    val diff = (got -- expected) ++ (expected -- got)
-    if (diff.nonEmpty) System.err.println(
-      s"[perfbench] stream_tumbling: ${diff.size} alerts differ from the recomputation, e.g. ${diff.take(3)}")
-    ((got ++ expected).size.toLong, diff.size.toLong,
-      Seq(("check_windows", windows.size.toDouble, "count"),
-        ("check_alerts", expected.size.toDouble, "count")))
-  }
 
   /** Replay sizes: every account sees rows in every batch, and timers
     * fire from about the fifth batch on. One second of event time per
