@@ -198,17 +198,14 @@ object Bench {
     // hidden build. Excluded from the headline total (below) so the
     // round-over-round trend of query cost stays comparable; tracked
     // per-name in queries/reps/cpu/io like everything else.
-    // dependency-aware build order (buildOrder first, rest
-    // alphabetical): a stored-index build consumes the memoized model,
-    // so the model row must pay its own cost, not the index row
-    val buildRank = SparkEntry.buildOrder.zipWithIndex.toMap
-    val buildEntries = SparkEntry.builds.toSeq
-      .sortBy { case (name, _) =>
-        (buildRank.getOrElse(name, Int.MaxValue), name) }
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
+    // dependency order: a stored-index build consumes the stored
+    // model, so the model row must pay its own cost, not the index row
+    val builds = SparkEntry.builds
+    val buildEntries = SparkEntry.buildOrder
+      .filter(name => only.isEmpty || only(name))
+      .map { name =>
         (name, (s: org.apache.spark.sql.SparkSession, d: String) => {
-          fn(s, d); spark.emptyDataFrame
+          builds(name)(s, d); spark.emptyDataFrame
         }, 1)
       }
     // Measure the HEAVY tier FIRST, at process start — freshest heap
@@ -220,8 +217,7 @@ object Bench {
     // list = the r12 rows >= 1.9 s wall; buildDeps-filtered so a
     // future heavy build CONSUMER cannot land here and re-absorb its
     // one-time build into rep 1 (those stay after the _build_ rows).
-    val heavyTier = Seq("clean_corpus", "q_hits", "split_by_cluster",
-      "dedup_clusters", "q_textrank", "dedup_minhash", "q_ks_test",
+    val heavyTier = Seq("clean_corpus", "q_hits", "q_ks_test",
       "q_pagerank").filterNot(SparkEntry.buildDeps.contains)
     val heavyEntries = heavyTier
       .filter(name => (only.isEmpty || only(name)) &&

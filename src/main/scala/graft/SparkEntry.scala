@@ -951,7 +951,7 @@ object SparkEntry {
     // doubled-delimiter word encoding — see operators/Bpe.scala.
     "q_bpe_vocab" -> ((s, dir) => {
       import s.implicits._
-      bpeMergesFor(s, dir, 10).toDF().orderBy(col("merge_round"))
+      bpeMerges(s, dir).toDF().orderBy(col("merge_round"))
     }),
 
     // the induced vocabulary APPLIED: per-source token accounting
@@ -960,15 +960,15 @@ object SparkEntry {
     // unrolls into 10 literal replaces inside one codegen'd map-only
     // projection over the (source, word) frequency table, so apply
     // cost is O(vocab), never O(corpus) — and the merge table itself
-    // is induced ONCE per corpus (bpeMergesFor: train once, apply
-    // many — the ivfModels serving shape).
+    // is induced ONCE per corpus (bpeMerges: train once, apply
+    // many — the ivfModel serving shape).
     "q_bpe_tokenize" -> ((s, dir) =>
       // the (source, word) frequency table comes from the STORED
-      // token stream (r17, §2.4 — see bpeMergesFor); same multiset as
+      // token stream (r17, §2.4 — see bpeMerges); same multiset as
       // re-splitting the text, spec-gated, output unchanged
       operators.Bpe.tokenizeTermsWith(
         tokensOf(s, dir).select(col("source"), col("term").as("word")),
-        bpeMergesFor(s, dir, 10))),
+        bpeMerges(s, dir))),
 
     "q_asof" -> ((s, dir) => {
       // point-in-time: each purchase matched to the user's latest
@@ -2807,8 +2807,8 @@ object SparkEntry {
     // identical — Dedup.minhashPairsFromStored).
     "dedup_minhash" -> ((s, dir) => {
       val full = Dedup.extendIndex(
-        Dedup.loadBandIndex(s, ensureMinhashIndexDir(s, dir)),
-        Dedup.loadBandIndex(s, ensureMinhashPlantedDir(s, dir)))
+        Dedup.loadBandIndex(s, minhashIndexDir(s, dir)),
+        Dedup.loadBandIndex(s, minhashPlantedDir(s, dir)))
       Dedup.minhashPairsFromStored(full, minJaccard = 0.5)
     }),
 
@@ -2838,7 +2838,7 @@ object SparkEntry {
       // 22.5k, a 41× batch-shingle blowup that read as superlinear
       // admission cost in the scale-timing table when it was really
       // an inverted corpus:batch ratio.
-      val idxPath = ensureMinhashIndexDir(s, dir)
+      val idxPath = minhashIndexDir(s, dir)
       Dedup.admitBatch(Dedup.loadBandIndex(s, idxPath),
         all.filter(pmod(col("doc_id"), lit(KeyShift)) >= 1000000L),
         "doc_id", "text", minJaccard = 0.5)
@@ -2856,7 +2856,7 @@ object SparkEntry {
     // extension is live in the index.
     "dedup_minhash_ext" -> ((s, dir) => {
       val all = withPlantedNearDups(Tables.documents(s, dir))
-      val extPath = ensureMinhashExtDir(s, dir)
+      val extPath = minhashExtDir(s, dir)
       Dedup.admitBatch(Dedup.loadBandIndex(s, extPath),
         all.filter(pmod(col("doc_id"), lit(KeyShift)) >= 1000000L &&
           pmod(col("doc_id"), lit(20)) >= 10),
@@ -2960,7 +2960,7 @@ object SparkEntry {
     // recall contract gates it.
     "ann_ivf_stored" -> ((s, dir) => {
       val (model, lists) = Similarity.loadIvfIndex(s,
-        ensureIvfIndexDir(s, dir))
+        ivfIndexDir(s, dir))
       val approx = Similarity.ivfSearchStored(model, lists,
         Tables.embeddings(s, dir), "vec_id", "embedding",
         queryMaxId = 9, k = 5, nprobe = 6)
@@ -2974,7 +2974,7 @@ object SparkEntry {
     // parquet terms, gated end to end from storage.
     "ann_ivfpq_stored" -> ((s, dir) => {
       val (coarse, pq, lists) = Similarity.loadIvfPqIndex(s,
-        ensureIvfPqIndexDir(s, dir))
+        ivfPqIndexDir(s, dir))
       val approx = Similarity.ivfPqSearchStored(coarse, pq, lists,
         Tables.embeddings(s, dir), "vec_id", "embedding",
         queryMaxId = 9, k = 5, nprobe = 6)
@@ -4210,61 +4210,62 @@ object SparkEntry {
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
   }
 
+  // ---- stored indexes: one [[Stored]] each, deps declared first ----
+
   /** Per-corpus-dir IVF model cache backing `ann_ivf`'s
     * train-once/search-many shape. Also steadies results: searches
     * against ONE model are exactly deterministic, while re-training
     * can wobble centroids in the last ulp (avg partials merge in
     * shuffle-fetch order — see the model-reuse spec).
     */
-  private val ivfModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.IvfModel]
-
-  private def ivfModel(s: SparkSession, dir: String): Similarity.IvfModel =
-    ivfModels.getOrElseUpdate(dir,
-      Similarity.ivfTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
-        nlist = 16, iters = 3, trainFraction = 0.25))
-
-  /** A per-JVM temp dir for a `_build_*` table, deleted on JVM exit.
-    * The stored streams are corpus-scale (the postings tables run to
-    * several times the raw text), so orphaning one per bench JVM —
-    * wait_and_pin runs three SFs plus reruns — accumulates multi-GB
-    * /tmp garbage; the shutdown hook bounds live disk to the running
-    * JVMs' working sets.
-    */
-  private def tempBuildDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles()
-        if (cs != null) cs.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
-    p.toString
+  private val ivfModel = Stored("_build_ivf_model") { (s, dir) =>
+    Similarity.ivfTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
+      nlist = 16, iters = 3, trainFraction = 0.25)
   }
+
+  /** Same train-once memoization for the product quantizer. */
+  private val pqModel = Stored("_build_pq_model") { (s, dir) =>
+    Similarity.pqTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
+      m = 8, ksub = 16, iters = 3, trainFraction = 0.5)
+  }
+
+  /** Build-once memoization of the SAVED IVF index (cl-partitioned
+    * parquet lists + params table, [[Similarity.saveIvfIndex]]):
+    * `ann_ivf_stored` serves from the path alone — the 100 TB shape
+    * where a search reads ~nprobe/nlist of the index files via
+    * partition pruning instead of re-assigning the corpus.
+    */
+  private val ivfIndexDir = Stored.table("_build_ivf_index", ivfModel) {
+    (s, dir, p) =>
+      Similarity.saveIvfIndex(ivfModel(s, dir), Tables.embeddings(s, dir),
+        "vec_id", "embedding", p)
+  }
+
+  /** Same for the composed IVF+PQ index ([[Similarity.saveIvfPqIndex]]):
+    * codes-only ADC scan + shortlist-joined vector reads, from storage.
+    */
+  private val ivfPqIndexDir =
+    Stored.table("_build_ivfpq_index", ivfModel, pqModel) { (s, dir, p) =>
+      Similarity.saveIvfPqIndex(ivfModel(s, dir), pqModel(s, dir),
+        Tables.embeddings(s, dir), "vec_id", "embedding", p)
+    }
 
   /** Build-once memoization of the SAVED minhash band index (temp
     * parquet dir per dataset dir): `dedup_minhash_inc` admissions load
     * from storage, the production serving shape.
     */
-  private[graft] val minhashIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def ensureMinhashIndexDir(s: SparkSession, dir: String): String =
-    minhashIndexDirs.getOrElseUpdate(dir, {
-      val p = tempBuildDir("graft_minhash_index")
+  private[graft] val minhashIndexDir = Stored.table("_build_minhash_index") {
+    (s, dir, p) =>
       val all = withPlantedNearDups(Tables.documents(s, dir))
       val built = Dedup.buildBandIndex(
         all.filter(pmod(col("doc_id"), lit(KeyShift)) < 1000000L),
         "doc_id", "text", shingleN = 3, k = 64, bands = 32)
       Dedup.saveBandIndex(built, p)
       built.shingles.unpersist(blocking = false)
-      p
-    })
+  }
 
   /** Build-once memoization of the saved band index of the PLANTED
-    * docs (pmod ≥ 1e6) — the complement of [[ensureMinhashIndexDir]]'s
+    * docs (pmod ≥ 1e6) — the complement of [[minhashIndexDir]]'s
     * corpus partition, so corpus-index ∪ planted-index is a stored
     * band index of `dedup_minhash`'s ENTIRE input and the corpus
     * self-dedup query serves from storage
@@ -4275,38 +4276,29 @@ object SparkEntry {
     * pays only the planted tenth of the corpus; the union happens at
     * read over the two loaded parquet indexes.
     */
-  private[graft] val minhashPlantedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def ensureMinhashPlantedDir(s: SparkSession, dir: String): String =
-    minhashPlantedDirs.getOrElseUpdate(dir, {
-      val p = tempBuildDir("graft_minhash_planted")
+  private val minhashPlantedDir = Stored.table("_build_minhash_planted") {
+    (s, dir, p) =>
       val all = withPlantedNearDups(Tables.documents(s, dir))
       val built = Dedup.buildBandIndex(
         all.filter(pmod(col("doc_id"), lit(KeyShift)) >= 1000000L),
         "doc_id", "text", shingleN = 3, k = 64, bands = 32)
       Dedup.saveBandIndex(built, p)
       built.shingles.unpersist(blocking = false)
-      p
-    })
+  }
 
   /** Build+EXTEND-once memoization of the saved extended band index
     * (dedup_minhash_ext): corpus index ∪ first planted batch, saved
     * once per dataset dir — repeated gate runs measure the admission
     * of the second batch, the daily rolling cost.
     */
-  private[graft] val minhashExtDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def ensureMinhashExtDir(s: SparkSession, dir: String): String =
-    minhashExtDirs.getOrElseUpdate(dir, {
-      val p = tempBuildDir("graft_minhash_ext")
+  private val minhashExtDir =
+    Stored.table("_build_minhash_ext", minhashIndexDir) { (s, dir, p) =>
       val all = withPlantedNearDups(Tables.documents(s, dir))
       // the base is the SAVED corpus index, loaded — one corpus
       // shingle pass per dataset dir, shared with dedup_minhash_inc
       // (the rolling-index contract: extension starts from storage;
       // measured at sf0.1 this build fell 7.0 → 2.0 CPU-s)
-      val base = Dedup.loadBandIndex(s, ensureMinhashIndexDir(s, dir))
+      val base = Dedup.loadBandIndex(s, minhashIndexDir(s, dir))
       // batch membership is pmod(id, 1e9) >= 1e6 (the same §6
       // id-domain partition as dedup_minhash_inc — the absolute
       // `>= 1e6` threshold swept scale replicas' ORIGINAL docs into
@@ -4323,37 +4315,7 @@ object SparkEntry {
         "doc_id", "text", base.shingleN, base.k, base.nBands)
       Dedup.saveBandIndex(Dedup.extendIndex(base, batchIdx), p)
       batchIdx.shingles.unpersist(blocking = false)
-      p
-    })
-
-  /** Build-once memoization of the SAVED near-dup CLUSTER table
-    * (`(doc_id, cluster_id)` for every doc appearing in a jaccard≥0.1
-    * pair): cluster formation is one corpus job — pair generation +
-    * connected components — whose assignment table three downstream
-    * passes consume (cluster listing, survivorship, leakage-safe
-    * splits). Stored per dataset dir like the basket-rules table, so
-    * each consumer reads a cluster-count-sized parquet instead of
-    * re-paying shingling + the component iteration (measured at
-    * sf0.1: the three consumers' steady CPU fell from ~3.5 each to
-    * reads; the one build pays ~4 CPU-s).
-    */
-  private[graft] val dedupClusterDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val p = dedupClusterDirs.getOrElseUpdate(dir, {
-      val path = tempBuildDir("graft_dedup_clusters")
-      // the pair list serves from the STORED shingle-pair tables —
-      // this build no longer re-runs the corpus shingle pipeline
-      Dedup.clusters(
-        Dedup.jaccardFromStored(s, shinglePairsDir(s, dir),
-          minJaccard = 0.1),
-        "id_a", "id_b")
-        .write.mode("overwrite").parquet(path)
-      path
-    })
-    operators.ParquetIO.read(s, p)
-  }
+    }
 
   /** Build-once memoization of the STORED df-capped shingle-pair
     * tables (round-14 verdict task 4, measured variant: rather than
@@ -4367,81 +4329,57 @@ object SparkEntry {
     * three identical pipelines, eliminated twice over. Serving reads
     * are candidate-volume joins.
     */
-  private[graft] val shinglePairsDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def shinglePairsDir(s: SparkSession, dir: String): String =
-    shinglePairsDirs.getOrElseUpdate(dir, {
-      val path = tempBuildDir("graft_shingle_pairs")
+  private val shinglePairsDir = Stored.table("_build_shingle_pairs") {
+    (s, dir, p) =>
       Dedup.buildShinglePairs(Tables.documents(s, dir), "doc_id", "text",
-        shingleN = 3, maxShingleDf = 50, path)
-      path
-    })
+        shingleN = 3, maxShingleDf = 50, p)
+  }
 
-  /** Build-once memoization of the SAVED IVF index (cl-partitioned
-    * parquet lists + params table, [[Similarity.saveIvfIndex]]):
-    * `ann_ivf_stored` serves from the path alone — the 100 TB shape
-    * where a search reads ~nprobe/nlist of the index files via
-    * partition pruning instead of re-assigning the corpus.
+  /** Build-once memoization of the SAVED near-dup CLUSTER table
+    * (`(doc_id, cluster_id)` for every doc appearing in a jaccard≥0.1
+    * pair): cluster formation is one corpus job — pair generation +
+    * connected components — whose assignment table three downstream
+    * passes consume (cluster listing, survivorship, leakage-safe
+    * splits). Stored per dataset dir like the basket-rules table, so
+    * each consumer reads a cluster-count-sized parquet instead of
+    * re-paying shingling + the component iteration (measured at
+    * sf0.1: the three consumers' steady CPU fell from ~3.5 each to
+    * reads; the one build pays ~4 CPU-s).
     */
-  private[graft] val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val dedupClusterDir =
+    Stored.table("_build_dedup_clusters", shinglePairsDir) { (s, dir, p) =>
+      // the pair list serves from the STORED shingle-pair tables —
+      // this build no longer re-runs the corpus shingle pipeline
+      Dedup.clusters(
+        Dedup.jaccardFromStored(s, shinglePairsDir(s, dir),
+          minJaccard = 0.1),
+        "id_a", "id_b")
+        .write.mode("overwrite").parquet(p)
+    }
 
-  private def ensureIvfIndexDir(s: SparkSession, dir: String): String =
-    ivfIndexDirs.getOrElseUpdate(dir, {
-      val p = tempBuildDir("graft_ivf_index")
-      Similarity.saveIvfIndex(ivfModel(s, dir), Tables.embeddings(s, dir),
-        "vec_id", "embedding", p)
-      p
-    })
-
-  /** Same for the composed IVF+PQ index ([[Similarity.saveIvfPqIndex]]):
-    * codes-only ADC scan + shortlist-joined vector reads, from storage.
-    */
-  private[graft] val ivfPqIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def ensureIvfPqIndexDir(s: SparkSession, dir: String): String =
-    ivfPqIndexDirs.getOrElseUpdate(dir, {
-      val p = tempBuildDir("graft_ivfpq_index")
-      Similarity.saveIvfPqIndex(ivfModel(s, dir), pqModel(s, dir),
-        Tables.embeddings(s, dir), "vec_id", "embedding", p)
-      p
-    })
-
-  /** Same train-once memoization for the product quantizer. */
-  private val pqModels =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.PqModel]
-
-  private def pqModel(s: SparkSession, dir: String): Similarity.PqModel =
-    pqModels.getOrElseUpdate(dir,
-      Similarity.pqTrain(Tables.embeddings(s, dir), "vec_id", "embedding",
-        m = 8, ksub = 16, iters = 3, trainFraction = 0.5))
+  private def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    operators.ParquetIO.read(s, dedupClusterDir(s, dir))
 
   /** Build-once memoization of the SAVED capped basket-rules table
     * (round-10 verdict #5: q_copurchase/q_basket_lift/q_item_sims
     * each re-paid the Σ|basket|² projection — 112 CPU-s combined at
     * sf0.1). One parquet build per dataset dir, three bounded
-    * readers — the minhashIndexDirs serving shape applied to
+    * readers — the minhashIndexDir serving shape applied to
     * co-occurrence. Stored with the shared support floor n_co >= 2
     * (every consumer filters at least that hard).
     */
-  private[graft] val basketRulesDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def basketRules(s: SparkSession, dir: String): DataFrame = {
-    val p = basketRulesDirs.getOrElseUpdate(dir, {
-      val path = tempBuildDir("graft_basket_rules")
+  private val basketRulesDir = Stored.table("_build_basket_rules") {
+    (s, dir, p) =>
       val baskets = Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
       operators.CoOccur.buildRulesTable(baskets, "cust", "part",
-        maxBasket = 40, minCo = 2L, path)
-      path
-    })
-    operators.ParquetIO.read(s, p)
+        maxBasket = 40, minCo = 2L, p)
   }
+
+  private def basketRules(s: SparkSession, dir: String): DataFrame =
+    operators.ParquetIO.read(s, basketRulesDir(s, dir))
 
   /** Build-once memoization of the tokenized-corpus STREAM tables
     * (round-13 verdict #2: the steepest 10×-data rows — text_oov
@@ -4457,16 +4395,10 @@ object SparkEntry {
     * corpus-wide distinct + df aggregation per query. See
     * [[operators.Postings]].
     */
-  private[graft] val postingsDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def postingsDir(s: SparkSession, dir: String): String =
-    postingsDirs.getOrElseUpdate(dir, {
-      val path = tempBuildDir("graft_postings")
-      operators.Postings.build(Tables.documents(s, dir),
-        "doc_id", "source", "text", path)
-      path
-    })
+  private val postingsDir = Stored.table("_build_postings") { (s, dir, p) =>
+    operators.Postings.build(Tables.documents(s, dir),
+      "doc_id", "source", "text", p)
+  }
 
   private def tokensOf(s: SparkSession, dir: String): DataFrame =
     operators.Postings.tokens(s, postingsDir(s, dir))
@@ -4474,120 +4406,81 @@ object SparkEntry {
   private def pairsOf(s: SparkSession, dir: String, d: Int): DataFrame =
     operators.Postings.pairs(s, postingsDir(s, dir), d)
 
-  /** The one-time per-dataset BUILD steps behind the memoized serving
-    * tables/models, exposed by name so the benchmark can time each as
-    * its own `_build_*` row (round-11 verdict item 5: the 5.4 s /
-    * 83.9 CPU-s basket-rules build landed in whichever consumer's
-    * rep 1 touched it first, and best-of-2 hid it to a footnote).
-    * Each is idempotent (memoized per dataset dir); running one twice
-    * measures ~0 the second time, which is exactly the serving-shape
-    * claim. Keys start with '_' so they sort ahead of every query.
-    */
-  def builds: Map[String, (SparkSession, String) => Unit] = Map(
-    "_build_basket_rules" ->
-      ((s, dir) => { basketRules(s, dir): Unit }),
-    "_build_minhash_index" ->
-      ((s, dir) => { ensureMinhashIndexDir(s, dir): Unit }),
-    "_build_dedup_clusters" ->
-      ((s, dir) => { dedupClusters(s, dir): Unit }),
-    "_build_minhash_ext" ->
-      ((s, dir) => { ensureMinhashExtDir(s, dir): Unit }),
-    "_build_minhash_planted" ->
-      ((s, dir) => { ensureMinhashPlantedDir(s, dir): Unit }),
-    "_build_ivf_model" ->
-      ((s, dir) => { ivfModel(s, dir): Unit }),
-    "_build_pq_model" ->
-      ((s, dir) => { pqModel(s, dir): Unit }),
-    "_build_bpe_merges" ->
-      ((s, dir) => { bpeMergesFor(s, dir, 10): Unit }),
-    "_build_ivf_index" ->
-      ((s, dir) => { ensureIvfIndexDir(s, dir): Unit }),
-    "_build_ivfpq_index" ->
-      ((s, dir) => { ensureIvfPqIndexDir(s, dir): Unit }),
-    "_build_postings" ->
-      ((s, dir) => { postingsDir(s, dir): Unit }),
-    "_build_shingle_pairs" ->
-      ((s, dir) => { shinglePairsDir(s, dir): Unit }))
-
-  /** Dependency-aware execution order for [[builds]]: the stored-index
-    * builds consume the memoized MODELS, so the model builds must be
-    * timed first — alphabetical order would run `_build_ivf_index`
-    * before `_build_ivf_model` and silently absorb the training cost
-    * into the index row. Names absent here sort after, alphabetically.
-    */
-  def buildOrder: Seq[String] = Seq(
-    "_build_ivf_model", "_build_pq_model",
-    "_build_ivf_index", "_build_ivfpq_index",
-    // the extended band index loads the saved base index (alphabetic
-    // order would run the extension first and fold the base build in)
-    "_build_minhash_index", "_build_minhash_ext", "_build_minhash_planted",
-    // cluster formation consumes the stored shingle-pair tables
-    // (alphabetic order would run clusters first and fold the pair
-    // build's corpus shingle pipeline into the cluster row)
-    "_build_shingle_pairs", "_build_dedup_clusters",
-    // BPE induction reads the stored token stream (r17) — alphabetic
-    // order would run bpe_merges first and fold the postings build in
-    "_build_postings", "_build_bpe_merges")
-
-  /** Which memoized one-time [[builds]] each query consumes — so the
-    * benchmark can auto-include the right `_build_*` rows when run
-    * with an explicit query filter (otherwise the filtered consumer's
-    * rep 1 silently re-absorbs the build cost best-of-2 then hides,
-    * the exact round-11 artifact defect the `_build_*` rows fixed).
-    */
-  def buildDeps: Map[String, Seq[String]] = Map(
-    "q_copurchase" -> Seq("_build_basket_rules"),
-    "q_basket_lift" -> Seq("_build_basket_rules"),
-    "q_item_sims" -> Seq("_build_basket_rules"),
-    "dedup_minhash" -> Seq("_build_minhash_index", "_build_minhash_planted"),
-    "dedup_minhash_inc" -> Seq("_build_minhash_index"),
-    "dedup_minhash_ext" -> Seq("_build_minhash_index", "_build_minhash_ext"),
-    "dedup_jaccard" -> Seq("_build_shingle_pairs"),
-    "dedup_containment" -> Seq("_build_shingle_pairs"),
-    "dedup_clusters" -> Seq("_build_shingle_pairs", "_build_dedup_clusters"),
-    "dedup_survivors" -> Seq("_build_shingle_pairs", "_build_dedup_clusters"),
-    "split_by_cluster" -> Seq("_build_shingle_pairs", "_build_dedup_clusters"),
-    "ann_ivf" -> Seq("_build_ivf_model"),
-    "ann_ivfpq" -> Seq("_build_ivf_model", "_build_pq_model"),
-    "ann_knn_graph" -> Seq("_build_ivf_model"),
-    "semantic_dedup" -> Seq("_build_ivf_model"),
-    "ann_pq" -> Seq("_build_pq_model"),
-    "ann_ivf_stored" -> Seq("_build_ivf_model", "_build_ivf_index"),
-    "ann_ivfpq_stored" ->
-      Seq("_build_ivf_model", "_build_pq_model", "_build_ivfpq_index"),
-    "q_bpe_vocab" -> Seq("_build_postings", "_build_bpe_merges"),
-    "q_bpe_tokenize" -> Seq("_build_postings", "_build_bpe_merges"),
-    "q_tfidf" -> Seq("_build_postings"),
-    "text_oov" -> Seq("_build_postings"),
-    "q_source_overlap" -> Seq("_build_postings"),
-    "q_collocations" -> Seq("_build_postings"),
-    "q_skipgram_pmi" -> Seq("_build_postings"),
-    "q_textrank" -> Seq("_build_postings"),
-    "q_lm_score" -> Seq("_build_postings"),
-    "q_phrase" -> Seq("_build_postings"),
-    "q_phrase_tag" -> Seq("_build_postings"),
-    "q_search" -> Seq("_build_postings"),
-    "q_search_ranked" -> Seq("_build_postings"),
-    "q_rrf_fusion" -> Seq("_build_postings"))
-
-  /** Induce-once memoization of the BPE merge table per (corpus dir,
-    * merge budget) — induction is deterministic, so vocab emission and
-    * tokenize application consume ONE model (the ivfModels shape:
+  /** Induce-once memoization of the BPE merge table per corpus dir
+    * (10 merges) — induction is deterministic, so vocab emission and
+    * tokenize application consume ONE model (the ivfModel shape:
     * induction is training, application is serving).
     */
-  private val bpeMerges = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), Seq[operators.Bpe.Merge]]
-
-  private def bpeMergesFor(s: SparkSession, dir: String,
-                           merges: Int): Seq[operators.Bpe.Merge] =
-    // induction's word-frequency front end reads the STORED positional
-    // postings instead of re-splitting corpus text (r17, guide §2.4):
-    // tokens IS split(text, " ") row-per-occurrence (Postings.build),
-    // and lowering per token ≡ lowering the text before the split —
-    // BpeSpec gates terms-derived ≡ docs-derived on the real corpus
-    bpeMerges.getOrElseUpdate((dir, merges),
+  private val bpeMerges = Stored("_build_bpe_merges", postingsDir) {
+    (s, dir) =>
+      // induction's word-frequency front end reads the STORED
+      // positional postings instead of re-splitting corpus text (r17,
+      // guide §2.4): tokens IS split(text, " ") row-per-occurrence
+      // (Postings.build), and lowering per token ≡ lowering the text
+      // before the split — BpeSpec gates terms-derived ≡ docs-derived
+      // on the real corpus
       operators.Bpe.induceMergesFromTerms(
-        tokensOf(s, dir).select(col("term").as("word")), merges))
+        tokensOf(s, dir).select(col("term").as("word")), 10)
+  }
+
+  private[graft] val stored: Seq[Stored[_]] = Seq(ivfModel, pqModel,
+    ivfIndexDir, ivfPqIndexDir, minhashIndexDir, minhashPlantedDir,
+    minhashExtDir, shinglePairsDir, dedupClusterDir, basketRulesDir,
+    postingsDir, bpeMerges)
+
+  /** The one-time per-dataset BUILD steps behind the stored indexes,
+    * exposed by name so the benchmark can time each as its own
+    * `_build_*` row (round-11 verdict item 5: the 5.4 s / 83.9 CPU-s
+    * basket-rules build landed in whichever consumer's rep 1 touched
+    * it first, and best-of-2 hid it to a footnote). Each builds once
+    * per dataset dir; running one twice measures ~0 the second time,
+    * which is exactly the serving-shape claim. Keys start with '_' so
+    * they sort ahead of every query.
+    */
+  def builds: Map[String, (SparkSession, String) => Unit] =
+    stored.map(st =>
+      st.name -> ((s: SparkSession, dir: String) => { st(s, dir); () })).toMap
+
+  /** [[builds]] in dependency order (ties by name), so each build row
+    * pays only its own cost, never that of a model or table it reads.
+    */
+  def buildOrder: Seq[String] = Stored.order(stored).map(_.name)
+
+  /** The stored indexes each query reads directly; see [[buildDeps]]. */
+  private def queryUses: Map[String, Seq[Stored[_]]] = Seq(
+    Seq(basketRulesDir) -> Seq("q_copurchase", "q_basket_lift", "q_item_sims"),
+    Seq(minhashIndexDir, minhashPlantedDir) -> Seq("dedup_minhash"),
+    Seq(minhashIndexDir) -> Seq("dedup_minhash_inc"),
+    Seq(minhashExtDir) -> Seq("dedup_minhash_ext"),
+    Seq(shinglePairsDir) -> Seq("dedup_jaccard", "dedup_containment"),
+    Seq(dedupClusterDir) ->
+      Seq("dedup_clusters", "dedup_survivors", "split_by_cluster"),
+    Seq(ivfModel) -> Seq("ann_ivf", "ann_knn_graph", "semantic_dedup"),
+    Seq(ivfModel, pqModel) -> Seq("ann_ivfpq"),
+    Seq(pqModel) -> Seq("ann_pq"),
+    Seq(ivfIndexDir) -> Seq("ann_ivf_stored"),
+    Seq(ivfPqIndexDir) -> Seq("ann_ivfpq_stored"),
+    Seq(bpeMerges) -> Seq("q_bpe_vocab"),
+    Seq(postingsDir, bpeMerges) -> Seq("q_bpe_tokenize"),
+    Seq(postingsDir) -> Seq("q_tfidf", "text_oov", "q_source_overlap",
+      "q_collocations", "q_skipgram_pmi", "q_textrank", "q_lm_score",
+      "q_phrase", "q_phrase_tag", "q_search", "q_search_ranked",
+      "q_rrf_fusion")
+  ).flatMap { case (uses, qs) => qs.map(_ -> uses) }.toMap
+
+  /** Every [[builds]] row each query consumes, directly or through
+    * another build, in [[buildOrder]] — so the benchmark can
+    * auto-include the right `_build_*` rows when run with an explicit
+    * query filter (otherwise the filtered consumer's rep 1 silently
+    * re-absorbs the build cost best-of-2 then hides, the exact
+    * round-11 artifact defect the `_build_*` rows fixed).
+    * PlanRegressionSpec checks it against the stored indexes each
+    * query actually reads.
+    */
+  def buildDeps: Map[String, Seq[String]] = queryUses.map { case (q, uses) =>
+    val all = Stored.closure(uses).map(_.name)
+    q -> buildOrder.filter(all)
+  }
 
   /** Single-row ANN recall contract: |approx ∩ exact top-k| over the
     * exact top-k pair count, gated at `minPermille`. Exact side and

@@ -210,7 +210,7 @@ object Postings {
     * tokenize cache, so run sequentially each writer's straggler tail
     * leaves cores idle; measured r16 at `local[32]`: sequential
     * 4.4-4.9 s vs concurrent 2.2-2.3 s steady at sf0.1, 22.0-26.6 vs
-    * 11.5-12.4 s at 10× data — interleaved reps, Profile14).
+    * 11.5-12.4 s at 10× data — interleaved reps, OPTIMIZATION_r16.md).
     * The two dictionary derivations chain INSIDE the future of the
     * stream they aggregate (bigram dictionaries after the dbigrams
     * write, df_lower after the dtokens_lower write), so they overlap

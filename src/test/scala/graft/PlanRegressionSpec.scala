@@ -13,6 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanRegressionSpec extends AnyFunSuite with SparkSpec {
 
+  // the stored indexes each query read while the plan pass built it
+  private val reads =
+    scala.collection.mutable.Map.empty[String, Set[Stored[_]]]
+
   test("per-query plan shape matches the frozen baseline; " +
       "no query plans an unpartitioned WindowExec") {
     val path = java.nio.file.Paths.get(PlanBaseline.path)
@@ -29,7 +33,9 @@ class PlanRegressionSpec extends AnyFunSuite with SparkSpec {
       // warm (second-construction) metrics: memoized model/index
       // builds happen on the first call, so the measured plan is
       // independent of which suites ran before this one
-      val m = PlanAudit.warmMetrics(fn, spark, sf)
+      val (m, touched) =
+        Stored.recording(PlanAudit.warmMetrics(fn, spark, sf))
+      reads(name) = touched
       if (m.unpartitionedWindows > 0)
         drift += s"$name: ${m.unpartitionedWindows} unpartitioned WindowExec"
       baseline.get(name) match {
@@ -46,5 +52,20 @@ class PlanRegressionSpec extends AnyFunSuite with SparkSpec {
     val stale = baseline.keySet -- SparkEntry.queries.keySet
     stale.foreach(n => drift += s"$n: baseline entry for removed query")
     assert(drift.isEmpty, drift.mkString("\n"))
+  }
+
+  test("buildDeps of every query equals the closure of the stored " +
+      "indexes it read during construction") {
+    assert(reads.keySet == SparkEntry.queries.keySet,
+      "the plan pass above did not construct every query")
+    val deps = SparkEntry.buildDeps
+    val wrong = reads.toSeq.sortBy(_._1).flatMap { case (name, touched) =>
+      val got = Stored.closure(touched).map(_.name)
+      val declared = deps.getOrElse(name, Nil).toSet
+      if (got == declared) None
+      else Some(s"$name: read ${got.toSeq.sorted} but buildDeps has " +
+        declared.toSeq.sorted)
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
   }
 }
