@@ -3,8 +3,8 @@
 
 Runs graft.tools.StreamBench across the four shape families the
 streaming surface is graded on — in-order, out-of-order, the
-panes-vs-naive sliding state layout, and the timer-vs-tws detector
-pair — at fixed configured rates, and writes one JSON doc with every
+panes-vs-naive sliding state layout, and the per-element-timer
+detector — at fixed configured rates, and writes one JSON doc with every
 run's engine-reported numbers. Compare rounds with:
 
     python3 scripts/stream_bench.py STREAM_BENCH_r10.json        # run + write
@@ -16,8 +16,7 @@ accumulates backlog against a slow consumer, so a rate far above
 capacity makes the first catch-up batch outlive any budget and the
 shape reports nothing. Slightly-above-capacity keeps the pipeline
 saturated (the number measures the ENGINE, not the arrival rate)
-while batches still complete inside the budget. The tws/timer RATIO
-is the per-element-timer signal, not the absolute.
+while batches still complete inside the budget.
 """
 import json, re, subprocess, sys
 
@@ -27,7 +26,6 @@ SHAPES = [
     ("panes",    32_000_000, 45),
     ("sliding",   4_000_000, 90),
     ("timer",     2_000_000, 90),  # capacity ~1.56M after the r13 batched state fold (was 234k at per-element immutable Seq :+ / contains — O(n²) per key-batch)
-    ("tws",       4_000_000, 90),  # capacity ~2.9M after the r12 min-timer coalescing (one armed native timer per key; was ~330k at one registerTimer per distinct expiry, ~71k per-element)
 ]
 
 
@@ -92,10 +90,9 @@ def diff(prev_path, cur_path):
         # so cross-round ratios aren't read as engine deltas
         lim = " (rate-limited)" if cur.get(k, {}).get("rate_limited") else ""
         print(f"{k:10s} {ps} {cs} {rs}{lim}")
-    for a, b, label in [("panes", "sliding", "pane-layout win"),
-                        ("tws", "timer", "native-timer win")]:
-        if a in cur and b in cur and cur[b]["value"] > 0:
-            print(f"{label}: {cur[a]['value'] / cur[b]['value']:.2f}x")
+    if "panes" in cur and "sliding" in cur and cur["sliding"]["value"] > 0:
+        print(f"pane-layout win: "
+              f"{cur['panes']['value'] / cur['sliding']['value']:.2f}x")
 
 
 def main():

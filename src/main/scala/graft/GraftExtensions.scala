@@ -21,8 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(Kernels.getClass.getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // auto pane/slice optimization for sliding-window aggregates
-    ext.injectOptimizerRule(_ => graft.plans.PaneSlidingAggRule)
     ext.injectFunction((
       FunctionIdentifier("graft_simhash64"),
       info("graft_simhash64", "graft_simhash64(array<string>) - 64-bit SimHash"),

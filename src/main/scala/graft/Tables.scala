@@ -14,9 +14,8 @@ object Tables {
     * generator has shipped both isAdjustedToUTC=true and =false
     * (NTZ-inferred) micros, and engine semantics must not depend on
     * which one this round's files carry. Under the UTC session
-    * timezone the cast is value-preserving, and downstream plan
-    * matching (e.g. PaneSlidingAggRule's window-struct check) sees
-    * one stable type.
+    * timezone the cast is value-preserving, and every window, interval
+    * and epoch expression downstream sees one stable type.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.col

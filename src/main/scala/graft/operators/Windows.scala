@@ -148,8 +148,7 @@ object Windows {
     * pane trick (CustomSlidingWindow.java:25-127), with watermark
     * propagation across both stateful operators handled by the
     * streaming planner. Equivalence + two-state-store plan shape are
-    * spec-checked; the batch analog is [[paneSlidingAgg]] /
-    * [[graft.plans.PaneSlidingAggRule]].
+    * spec-checked; the batch analog is [[paneSlidingAgg]].
     */
   def streamingPaneSlidingAgg(events: DataFrame, key: String, tsCol: String,
                               valCol: String, sizeSec: Long, slideSec: Long,

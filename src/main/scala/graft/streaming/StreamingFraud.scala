@@ -51,73 +51,6 @@ object StreamingFraud {
       .select(col("accountId"), unix_millis(col("w.start")).as("windowStartMs"),
         col("mean_amount"), col("cnt"))
 
-  /** Buffered records per account between timer firings — mirrors the
-    * reference FraudDetector's ListState buffer + sum ValueState.
-    */
-  case class DetectorState(firstTsMs: Long, sum: Double, cnt: Long)
-
-  /** Event-time timer fraud detector — the reference FraudDetector
-    * (FraudDetector.java:69-119): buffer transactions per account,
-    * register an event-time timer `windowSec` after the first buffered
-    * element, and when the watermark passes it, alert if the buffered
-    * sum exceeds the threshold, then clear all state (the reference
-    * clears buffer + sum on every firing).
-    */
-  def timerDetector(tx: Dataset[Transaction], windowSec: Long,
-                    threshold: Double,
-                    watermarkDelay: String = "5 seconds"): Dataset[Alert] = {
-    implicit val alertEnc: Encoder[Alert] = Encoders.product[Alert]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val stEnc: Encoder[DetectorState] = Encoders.product[DetectorState]
-
-    tx.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.accountId)
-      .flatMapGroupsWithState[DetectorState, Alert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (accountId: Long, events: Iterator[Transaction],
-         state: GroupState[DetectorState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            if (st.sum > threshold)
-              Iterator(Alert(accountId, st.firstTsMs, st.sum, st.cnt))
-            else Iterator.empty
-          } else {
-            // Spark fires a key's timeout only in batches where that key
-            // receives NO data (FlatMapGroupsWithStateExec processes new
-            // data first, then timeouts for the remaining keys). So a key
-            // whose window expired but that keeps receiving data must
-            // flush the expired window HERE — otherwise the
-            // setTimeoutTimestamp below would be <= the watermark and
-            // throw, killing the query.
-            val wm = state.getCurrentWatermarkMs()
-            val pending = state.getOption
-            val expired =
-              pending.filter(st => st.firstTsMs + windowSec * 1000 <= wm)
-            val flushed = expired match {
-              case Some(st) if st.sum > threshold =>
-                Iterator.single(Alert(accountId, st.firstTsMs, st.sum, st.cnt))
-              case _ => Iterator.empty
-            }
-            var st =
-              if (expired.isDefined) DetectorState(Long.MaxValue, 0d, 0L)
-              else pending.getOrElse(DetectorState(Long.MaxValue, 0d, 0L))
-            events.foreach { t =>
-              val tms = t.ts.getTime
-              st = DetectorState(math.min(st.firstTsMs, tms), st.sum + t.amount,
-                st.cnt + 1)
-            }
-            state.update(st)
-            // earliest pending timer wins, as in Flink's timer service.
-            // New rows are never late (ts >= watermark) so the timer is
-            // normally > wm already; the clamp is belt-and-braces.
-            state.setTimeoutTimestamp(
-              math.max(st.firstTsMs + windowSec * 1000, wm + 1))
-            flushed
-          }
-      }
-  }
-
   /** One buffered transaction (the reference ListState's Tuple2). */
   case class BufferedTx(tsMs: Long, amount: Double)
 
@@ -127,15 +60,16 @@ object StreamingFraud {
     */
   case class PerElementState(pending: Seq[Long], buffer: Seq[BufferedTx])
 
-  /** Faithful per-element-timer fraud detector. The reference
-    * (FraudDetector.java:83) registers an event-time timer at EVERY
-    * element's `ts + windowSec`; `onTimer(t)` sums buffered records in
+  /** The fraud detector: the reference FraudDetector with its
+    * per-element timers. The reference (FraudDetector.java:83)
+    * registers an event-time timer at EVERY element's
+    * `ts + windowSec`; `onTimer(t)` sums buffered records in
     * `[t - windowSec, t)`, alerts over threshold, and clears the
     * buffer — but the OTHER registered timers stay armed, so a pending
     * timer from an old element can later fire over records buffered
-    * after the clear. [[timerDetector]]'s single earliest-timer state
-    * diverges there (it would re-anchor on the next element); this
-    * variant keeps the full pending-timer list in state, arms Spark's
+    * after the clear. A single earliest-timer state would diverge
+    * there (it would re-anchor on the next element); this detector
+    * keeps the full pending-timer list in state, arms Spark's
     * single GroupState timeout at the earliest pending fire time, and
     * drains every expired timer in event-time order on each firing or
     * data batch (expired timers after the first see the cleared
@@ -325,137 +259,11 @@ object StreamingFraud {
               }
             }
             state.update(st)
-            // safe for the same reason as in timerDetector: maxTs is
-            // from this batch's (non-late) rows, so it is >= watermark
+            // safe: maxTs is from this batch's (non-late) rows, so it
+            // is >= watermark
             state.setTimeoutTimestamp(maxTs + timeoutSec * 1000)
             fired.result().iterator
           }
       }
-  }
-
-  /** [[perElementTimerDetector]] on Spark 4's `transformWithState`.
-    * `StatefulProcessor` is the 1:1 structural analog of the
-    * reference's KeyedProcessFunction (FraudDetector.java): named
-    * state primitives through the handle (the ListState buffer maps
-    * to `getListState`) and a real per-key timer service with one
-    * `handleExpiredTimer` callback, Flink's `onTimer`. The reference
-    * registers a timer at EVERY element (reference :83); this
-    * processor keeps that per-element expiry set in a ValueState and
-    * arms the native service with only the MINIMUM — on firing it
-    * drains every pending expiry the eviction watermark passed, in
-    * event-time order, which is result-identical to per-expiry native
-    * registration (the runtime fires exactly the expiries <= eviction
-    * watermark, in order) while cutting timer-CF RocksDB writes from
-    * O(elements) to O(1) per (key, batch). Requires the RocksDB
-    * state store provider, matching the reference's RocksDB backend.
-    */
-  /** The full pending-expiry set of one key, carried in a single
-    * ValueState blob (sorted ascending, distinct). Bounded: only
-    * expiries in `(watermark, max buffered ts + windowSec]` survive a
-    * drain, so the array tracks the key's in-flight horizon, not its
-    * history.
-    */
-  case class PendingExpiries(exp: Array[Long])
-
-  class PerElementTimerProcessor(windowSec: Long, threshold: Double)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, Transaction, Alert] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState,
-      TimeMode, TimerValues, TTLConfig, ValueState}
-
-    @transient private var buf: ListState[BufferedTx] = _
-    @transient private var pending: ValueState[PendingExpiries] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[BufferedTx]("buffer",
-        Encoders.product[BufferedTx], TTLConfig.NONE)
-      pending = getHandle.getValueState[PendingExpiries]("pending",
-        Encoders.product[PendingExpiries], TTLConfig.NONE)
-    }
-
-    private def pendingExp: Array[Long] =
-      Option(pending.get()).map(_.exp).getOrElse(Array.empty[Long])
-
-    override def handleInputRows(key: Long, rows: Iterator[Transaction],
-                                 tv: TimerValues): Iterator[Alert] = {
-      // one appendList + one pending-set write + ONE registerTimer per
-      // (key, micro-batch): the full expiry set lives in our own
-      // ValueState and only the MINIMUM is armed with the native timer
-      // service. The r11 version registered one native timer per
-      // DISTINCT expiry — at ms-grained event time that is O(rows)
-      // timer-CF RocksDB writes per batch, and it capped the shape at
-      // ~300k rows/s; coalescing to the min is the O(rows) -> O(1)
-      // step. Result-equivalence to per-expiry registration: timers
-      // fire when the eviction watermark passes them, and
-      // handleExpiredTimer below drains EVERY pending expiry <= that
-      // watermark in event-time order — exactly the set and order the
-      // native service would have fired this batch (asserted by the
-      // equivalence specs, including the randomized feed).
-      val batch = rows.map(t => BufferedTx(t.ts.getTime, t.amount)).toArray
-      if (batch.nonEmpty) {
-        buf.appendList(batch)
-        val w = windowSec * 1000
-        val merged = (pendingExp ++ batch.map(_.tsMs + w)).distinct.sorted
-        pending.update(PendingExpiries(merged))
-        // re-arming an already-registered expiry overwrites the same
-        // (key, ts) timer-CF entry — harmless; a new batch can arm an
-        // EARLIER min than the currently-armed one (a non-late row
-        // with ts below pending.head - windowSec), leaving the old
-        // min armed as a stale timer whose firing drains as a no-op.
-        getHandle.registerTimer(merged.head)
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(key: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Alert] = {
-      // drain EVERY pending expiry the eviction watermark passed, in
-      // event-time order — the same per-firing semantics as the
-      // reference onTimer (sum records in [t-window, t), alert over
-      // threshold, clear the WHOLE buffer), so firings after the
-      // first see an empty buffer exactly like a native per-expiry
-      // drain of a watermark jump. tv.getCurrentWatermarkInMs() is
-      // the eviction watermark that expired this timer; max with the
-      // expiry itself is belt-and-braces.
-      val wm = math.max(tv.getCurrentWatermarkInMs(), info.getExpiryTimeInMs())
-      val p = pendingExp
-      if (p.isEmpty || p.head > wm) Iterator.empty // stale/superseded min
-      else {
-        val (expired, remaining) = p.partition(_ <= wm)
-        var records = buf.get().toSeq // ONE list read for the whole drain
-        val alerts = List.newBuilder[Alert]
-        expired.foreach { t => // already ascending (p is sorted)
-          val inWin = records.filter(r =>
-            r.tsMs >= t - windowSec * 1000 && r.tsMs < t)
-          val sum = inWin.map(_.amount).sum
-          records = Nil // reference onTimer clears the whole buffer
-          if (sum > threshold)
-            alerts += Alert(key, t - windowSec * 1000, sum,
-              inWin.size.toLong)
-        }
-        buf.clear() // one store op for the N firings' clears
-        if (remaining.nonEmpty) {
-          pending.update(PendingExpiries(remaining))
-          getHandle.registerTimer(remaining.head)
-        } else pending.clear()
-        alerts.result().iterator
-      }
-    }
-  }
-
-  /** The per-element-timer detector through `transformWithState` —
-    * result-equivalent to [[perElementTimerDetector]] (asserted by
-    * spec), with the timer service native instead of emulated.
-    */
-  def timerDetectorTws(tx: Dataset[Transaction], windowSec: Long,
-                       threshold: Double,
-                       watermarkDelay: String = "5 seconds"): Dataset[Alert] = {
-    import org.apache.spark.sql.streaming.TimeMode
-    implicit val alertEnc: Encoder[Alert] = Encoders.product[Alert]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    tx.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.accountId)
-      .transformWithState(new PerElementTimerProcessor(windowSec, threshold),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -20,16 +20,15 @@ object StreamBench {
     val rowsPerSec = args.headOption.map(_.toInt).getOrElse(2000000)
     val seconds = args.lift(1).map(_.toInt).getOrElse(20)
     // pipeline under test: "tumbling" (default, the fraud pipeline),
-    // "sliding" (naive size/slide window explode), or "panes"
-    // (streamingPaneSlidingAgg) — sliding vs panes on the same
-    // size/slide measures the pane state layout's win directly.
+    // "sliding" (naive size/slide window explode), "panes"
+    // (streamingPaneSlidingAgg), "timer" (perElementTimerDetector),
+    // "dedup" or "ooo" — sliding vs panes on the same size/slide
+    // measures the pane state layout's win directly.
     val pipeline = args.lift(2).getOrElse("tumbling")
     val b0 = GraftSession.builder(appName = "graft-streambench")
-    // transformWithState requires the RocksDB provider (and "timer"
-    // runs on it too so the tws comparison isolates the API, not the
-    // state store)
-    val spark = (if (pipeline == "tws" || pipeline == "timer" ||
-        pipeline == "ooo")
+    // "timer" and "ooo" run on the RocksDB provider, the reference's
+    // state backend
+    val spark = (if (pipeline == "timer" || pipeline == "ooo")
       graft.streaming.GraftStreams.withRocksDBState(b0) else b0).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -50,14 +49,6 @@ object StreamBench {
         // per-element timer detector, GroupState emulation: pending
         // fire-time list managed in user state
         StreamingFraud.perElementTimerDetector(
-          tx.as[graft.streaming.Transaction](
-            org.apache.spark.sql.Encoders.product),
-          windowSec = 5, threshold = 1e12, watermarkDelay = "2 seconds")
-          .toDF()
-      case "tws" =>
-        // same detector on transformWithState's native timer service
-        // (requires the RocksDB provider GraftSession already sets)
-        StreamingFraud.timerDetectorTws(
           tx.as[graft.streaming.Transaction](
             org.apache.spark.sql.Encoders.product),
           windowSec = 5, threshold = 1e12, watermarkDelay = "2 seconds")

@@ -19,6 +19,42 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   private def tx(acct: Long, amount: Double, offsetSec: Long) =
     Transaction(acct, amount, new java.sql.Timestamp(Base + offsetSec * 1000))
 
+  private val RocksDBProvider = Seq(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Runs `body` with session confs set, restoring the previous values. */
+  private def withConf[T](kvs: Seq[(String, String)])(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Seeded feed for the detector specs: 6 keys, 8 batches of 25 rows
+    * whose offsets drift forward 7 s a batch with ±2 s jitter (out of
+    * order, never behind the 2 s watermark), then a closing row at
+    * 200 s that makes every pending timer due.
+    */
+  private lazy val randomFeed: Seq[Seq[Transaction]] = {
+    val rng = new scala.util.Random(20260815L)
+    (0 until 8).map { b =>
+      (0 until 25).map { _ =>
+        tx(rng.nextInt(6).toLong, (rng.nextInt(12) * 10).toDouble,
+          math.max(0, b * 7 + rng.nextInt(7) - 2).toLong)
+      }
+    } :+ Seq(tx(99, 1, 200))
+  }
+
+  /** Alert rows as sorted (account, window start, cents, count). */
+  private def alertKeys(alerts: DataFrame): Seq[FraudDetectorModel.Alert] =
+    alerts.select("accountId", "windowStartMs", "total", "cnt").collect()
+      .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100),
+        r.getLong(3))).toSeq.sorted
+
   private def runToSink(df: DataFrame, name: String, mode: String)(
       feed: (Int => Unit) => Unit): DataFrame = {
     val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
@@ -118,10 +154,14 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("timer detector buffers per account and alerts on event-time timeout") {
+    // per-element order: acct 1 arms timers {6, 7}, acct 2 arms {6}.
+    // The t=60 row moves the watermark to 58 s; timer@6 fires [1,6) =
+    // {1:60, 2:70} → one alert (ws=1 s, 130, 2 records) and clears
+    // the buffer, so timer@7 sees nothing; acct 2's 10 stays below 100.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val alerts = StreamingFraud.timerDetector(input.toDS(), windowSec = 5,
-      threshold = 100.0, watermarkDelay = "2 seconds")
+    val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+      windowSec = 5, threshold = 100.0, watermarkDelay = "2 seconds")
     val sink = runToSink(alerts.toDF(), "t_timer", "append") { step =>
       input.addData(tx(1, 60, 1), tx(1, 70, 2)) // timer at t=6s
       input.addData(tx(2, 10, 1)) // below threshold, timer at 6s
@@ -399,14 +439,13 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("timer detector runs on the RocksDB state store provider") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    // acct 1's single row arms timer@6; watermark 58 s fires [1,6) =
+    // 200 > 100 → exactly one alert
+    withConf(RocksDBProvider) {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Transaction]
-      val alerts = StreamingFraud.timerDetector(input.toDS(), windowSec = 5,
-        threshold = 100.0, watermarkDelay = "2 seconds")
+      val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+        windowSec = 5, threshold = 100.0, watermarkDelay = "2 seconds")
       val sink = runToSink(alerts.toDF(), "t_timer_rocks", "append") { step =>
         input.addData(tx(1, 200, 1))
         step(0)
@@ -416,11 +455,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         step(0)
       }
       assert(sink.filter(col("accountId") === 1).count() === 1)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -575,14 +609,18 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pending timer fires before same-batch data, clearing the buffer") {
-    // mirrors the reference: onTimer clears ALL state (FraudDetector
-    // .java:114-118); a later transaction starts a fresh buffer. The
-    // expired window is flushed either by the timeout path (key got no
-    // data that batch) or by the data-path flush in timerDetector.
+    // mirrors the reference: onTimer clears the buffer (FraudDetector
+    // .java:114-118); a later transaction starts a fresh buffer.
+    // Per-element order: acct 1 arms timers {6, 7}. Watermark 98 s
+    // makes both due; they fire before acct 1's next row is buffered,
+    // whether in Spark's no-data batch or at the start of the t=99
+    // batch: timer@6 → [1,6) = 130 alerts (ws=1 s), timer@7 sees the
+    // cleared buffer. The t=99 row (50) arms timer@104, which the
+    // t=200 row fires over [99,104) = 50 < 100: no second alert.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val alerts = StreamingFraud.timerDetector(input.toDS(), windowSec = 5,
-      threshold = 100.0, watermarkDelay = "2 seconds")
+    val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+      windowSec = 5, threshold = 100.0, watermarkDelay = "2 seconds")
     val sink = runToSink(alerts.toDF(), "t_timerclear", "append") { step =>
       input.addData(tx(1, 60, 1), tx(1, 70, 2)) // sum 130, timer at 6s
       step(0)
@@ -633,98 +671,53 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(acct1.toSeq === Seq((Base, 130.0, 2L), (Base + 3000, 120.0, 1L)))
   }
 
-  test("transformWithState detector reproduces the per-element-timer " +
-      "semantics through the native timer service") {
-    // identical feed and expectations as the flatMapGroupsWithState
-    // emulation above: the native multi-timer service must drain
-    // expired timers in event-time order, later firings seeing the
-    // buffer cleared by earlier ones. transformWithState requires the
-    // RocksDB provider (as the reference requires its RocksDB backend).
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      implicit val sqlCtx = spark.sqlContext
-      val input = MemoryStream[Transaction]
-      val alerts = StreamingFraud.timerDetectorTws(input.toDS(),
-        windowSec = 5, threshold = 100.0, watermarkDelay = "2 seconds")
-      val sink = runToSink(alerts.toDF(), "t_tws", "append") { step =>
-        input.addData(tx(1, 60, 0), tx(1, 70, 3)) // timers {5, 8}
-        step(0)
-        input.addData(tx(9, 1, 8)) // wm → 6 > 5: timer@5 fires [0,5) = 130
-        step(0)
-        input.addData(tx(1, 120, 7)) // buffered after the clear; timers {8, 12}
-        step(0)
-        input.addData(tx(9, 1, 11)) // wm → 9 > 8: timer@8 fires [3,8) = {7:120}
-        step(0)
-        input.addData(tx(9, 1, 20)) // wm → 18: timer@12 fires empty buffer
-        step(0)
-      }
-      val acct1 = sink.filter(col("accountId") === 1).collect()
-        .map(r => (r.getLong(1), r.getDouble(2), r.getLong(3))).sortBy(_._1)
-      assert(acct1.toSeq === Seq((Base, 130.0, 2L), (Base + 3000, 120.0, 1L)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
+  test("timer detector equals the plain-Scala reference-order model on " +
+      "a randomized multi-batch feed") {
+    // out-of-order rows inside the 2 s lateness allowance, watermark
+    // jumps that expire SEVERAL timers at once, and post-clear arrivals
+    // under still-armed timers — none hand-traced; the alert multisets
+    // (sums in cents) must equal FraudDetectorModel's
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Transaction]
+    val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+      windowSec = 5, threshold = 150.0, watermarkDelay = "2 seconds")
+    val sink = runToSink(alerts.toDF(), "t_model", "append") { step =>
+      randomFeed.foreach { rows => input.addData(rows: _*); step(0) }
     }
+    val got = alertKeys(sink)
+    val expected = FraudDetectorModel.run(randomFeed, windowMs = 5000,
+      delayMs = 2000, threshold = 150.0).sorted
+    assert(expected.nonEmpty, "feed should produce alerts")
+    assert(got === expected)
   }
 
-  test("tws min-timer coalescing is alert-equivalent to the GroupState " +
-      "emulation on a randomized multi-batch feed") {
-    // the coalesced pending-set design (one armed native timer per
-    // key) must reproduce the per-element-timer semantics on feeds it
-    // was never hand-traced on: seeded pseudo-random amounts/offsets
-    // across 6 keys and 8 micro-batches, including out-of-order rows
-    // inside the 2 s lateness allowance, watermark jumps that expire
-    // SEVERAL timers at once, and post-clear arrivals under
-    // still-armed timers. Both detectors consume the identical feed;
-    // the full alert multisets must match.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  test("timer detector restarted from its checkpoint after any batch " +
+      "emits the uninterrupted run's alerts (RocksDB, changelog)") {
+    // exactly-once across a stop/restart at every batch boundary: the
+    // pending timers and buffers live in RocksDB state, the offsets in
+    // the checkpoint, and the parquet sink overwrites a replayed batch
+    withConf(RocksDBProvider ++ Seq(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "2")) {
       implicit val sqlCtx = spark.sqlContext
-      val rng = new scala.util.Random(20260815L)
-      // batches of (acct, amount, offsetSec); offsets drift forward so
-      // watermarks advance, with +-2s jitter for out-of-orderness
-      val batches = (0 until 8).map { b =>
-        (0 until 25).map { _ =>
-          val base = b * 7
-          tx(rng.nextInt(6).toLong, (rng.nextInt(12) * 10).toDouble,
-            math.max(0, base + rng.nextInt(7) - 2).toLong)
-        }
-      }
-      def run(name: String,
-              mk: org.apache.spark.sql.Dataset[Transaction] =>
-                org.apache.spark.sql.Dataset[graft.streaming.Alert]) = {
+      def run(stopAfter: Int): Seq[FraudDetectorModel.Alert] = {
+        val dir = java.nio.file.Files.createTempDirectory("graft_restart").toString
         val input = MemoryStream[Transaction]
-        val sink = runToSink(mk(input.toDS()).toDF(), name, "append") { step =>
-          batches.foreach { rows => input.addData(rows: _*); step(0) }
-          input.addData(tx(99, 1, 200)) // close every window
-          step(0)
+        val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+          windowSec = 5, threshold = 150.0, watermarkDelay = "2 seconds").toDF()
+        def feed(batches: Seq[Seq[Transaction]]): Unit = {
+          val q = GraftStreams.parquetAlertSink(alerts, s"$dir/out", s"$dir/ckpt")
+          try batches.foreach { rows => input.addData(rows: _*); q.processAllAvailable() }
+          finally q.stop()
         }
-        sink.collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 100), r.getLong(3)))
-          .toSeq.sorted
+        Seq(randomFeed.take(stopAfter), randomFeed.drop(stopAfter))
+          .filter(_.nonEmpty).foreach(feed)
+        alertKeys(spark.read.parquet(s"$dir/out"))
       }
-      val emulated = run("t_eq_emul",
-        StreamingFraud.perElementTimerDetector(_, windowSec = 5,
-          threshold = 150.0, watermarkDelay = "2 seconds"))
-      val native = run("t_eq_tws",
-        StreamingFraud.timerDetectorTws(_, windowSec = 5,
-          threshold = 150.0, watermarkDelay = "2 seconds"))
-      assert(emulated.nonEmpty, "feed should produce alerts")
-      assert(native === emulated)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
+      val uninterrupted = run(randomFeed.length)
+      assert(uninterrupted.nonEmpty, "feed should produce alerts")
+      (1 until randomFeed.length).foreach { k =>
+        assert(run(k) === uninterrupted, s"restart after batch $k")
       }
     }
   }
@@ -774,34 +767,36 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("key receiving data every batch still flushes its expired window") {
     // Spark fires a key's event-time timeout only in batches where that
-    // key receives no data, so a hot key that never goes quiet must have
-    // its expired window flushed in the DATA path — otherwise the old
-    // code re-armed a timer below the watermark and the query died with
-    // IllegalArgumentException (reference FraudDetector.java:83 fires
-    // per-element timers regardless of further traffic).
+    // key receives no data, so a hot key that never goes quiet must
+    // have its expired timers drained in the DATA path — otherwise the
+    // timeout would be re-armed below the watermark and the query would
+    // die with IllegalArgumentException (reference FraudDetector.java:83
+    // fires per-element timers regardless of further traffic).
+    // Per-element order: batch 1 arms {6, 7} over {1:60, 2:70}; batch 2
+    // (wm still 0) buffers 50:5 and arms timer@55. Watermark 98 s then
+    // makes 6, 7 and 55 due, all firing before the t=99 row: timer@6 →
+    // [1,6) = 130 (the 5 at t=50 is outside the window) and clears the
+    // WHOLE buffer, so timers 7 and 55 see nothing. The t=99 row (150)
+    // arms timer@104, fired by watermark 198 s → [99,104) = 150.
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val alerts = StreamingFraud.timerDetector(input.toDS(), windowSec = 5,
-      threshold = 100.0, watermarkDelay = "2 seconds")
+    val batches = Seq(
+      Seq(tx(1, 60, 1), tx(1, 70, 2)),
+      Seq(tx(1, 5, 50), tx(9, 1, 100)), // key 1 keeps receiving
+      Seq(tx(1, 150, 99)), // wm 98 s > timer 6 s, key 1 has data again
+      Seq(tx(9, 1, 200)),
+      Seq(tx(9, 1, 201)))
+    val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+      windowSec = 5, threshold = 100.0, watermarkDelay = "2 seconds")
     val sink = runToSink(alerts.toDF(), "t_timerhot", "append") { step =>
-      input.addData(tx(1, 60, 1), tx(1, 70, 2)) // buffer 130, timer at 6s
-      step(0)
-      input.addData(tx(1, 5, 50), tx(9, 1, 100)) // key 1 keeps receiving;
-      step(0)                                    // wm → 98s after this batch
-      // wm now 98s > timer 6s, and key 1 gets data in the SAME batch:
-      // the 135-buffer must flush as an alert and a fresh buffer start
-      input.addData(tx(1, 150, 99))
-      step(0)
-      input.addData(tx(9, 1, 200))
-      step(0)
-      input.addData(tx(9, 1, 201)) // wm → 198s fires the fresh buffer
-      step(0)
+      batches.foreach { rows => input.addData(rows: _*); step(0) }
     }
     val acct1 = sink.filter(col("accountId") === 1).collect()
       .map(r => (r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    assert(acct1.length === 2, s"got ${acct1.mkString(",")}")
-    assert(acct1(0) === ((Base + 1000, 135.0)))
-    assert(acct1(1) === ((Base + 99000, 150.0)))
+    assert(acct1.toSeq === Seq((Base + 1000, 130.0), (Base + 99000, 150.0)))
+    assert(FraudDetectorModel.run(batches, windowMs = 5000, delayMs = 2000,
+      threshold = 100.0).filter(_._1 == 1L).map(a => (a._2, a._3)).sorted ===
+      Seq((Base + 1000, 13000L), (Base + 99000, 15000L)))
   }
 
   test("alert sink recovers from its checkpoint: stop/restart is exactly-once") {
