@@ -17,11 +17,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * are kept per query name and can be scraped/asserted; wiring them
   * into a metrics registry (Prometheus servlet via
   * spark.metrics.conf) is configuration, not code.
+  *
+  * A second map keeps the state-store gauges of each query's progress
+  * (`stateOperators`), summed over its stateful operators.
   */
 class Metrics extends StreamingQueryListener {
 
   /** name → (inputRowsPerSecond, processedRowsPerSecond, batchDurationMs) */
   val gauges = new ConcurrentHashMap[String, (Double, Double, Long)]()
+
+  /** name → (numRowsTotal, memoryUsedBytes) over all state operators */
+  val stateGauges = new ConcurrentHashMap[String, (Long, Long)]()
 
   override def onQueryStarted(event: QueryStartedEvent): Unit = ()
 
@@ -31,6 +37,9 @@ class Metrics extends StreamingQueryListener {
     val duration = Option(p.durationMs.get("triggerExecution"))
       .map(_.longValue).getOrElse(0L)
     gauges.put(name, (p.inputRowsPerSecond, p.processedRowsPerSecond, duration))
+    if (p.stateOperators.nonEmpty)
+      stateGauges.put(name, (p.stateOperators.map(_.numRowsTotal).sum,
+        p.stateOperators.map(_.memoryUsedBytes).sum))
   }
 
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()

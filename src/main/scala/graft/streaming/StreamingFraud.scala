@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -51,14 +53,44 @@ object StreamingFraud {
       .select(col("accountId"), unix_millis(col("w.start")).as("windowStartMs"),
         col("mean_amount"), col("cnt"))
 
-  /** One buffered transaction (the reference ListState's Tuple2). */
-  case class BufferedTx(tsMs: Long, amount: Double)
-
   /** Per-element timer emulation state: every element's pending fire
-    * time plus the record buffer (reference FraudDetector.java keeps
-    * ListState<Tuple2> + per-element registered timers).
+    * time plus the record buffer as parallel (tsMs, amount) arrays in
+    * arrival order (reference FraudDetector.java keeps ListState<Tuple2>
+    * + per-element registered timers). Held in GroupState packed by
+    * [[PerElementState.encode]].
     */
-  case class PerElementState(pending: Seq[Long], buffer: Seq[BufferedTx])
+  final class PerElementState(val pending: Array[Long], val tsMs: Array[Long],
+                              val amounts: Array[Double])
+
+  object PerElementState {
+    val Empty = new PerElementState(Array.emptyLongArray, Array.emptyLongArray,
+      Array.emptyDoubleArray)
+
+    /** Int pending count, the pending longs, int buffer count, then one
+      * (tsMs long, amount double) pair per buffered record.
+      */
+    def encode(s: PerElementState): Array[Byte] = {
+      val n = s.tsMs.length
+      val bb = ByteBuffer.allocate(8 + 8 * s.pending.length + 16 * n)
+      bb.putInt(s.pending.length)
+      s.pending.foreach(bb.putLong)
+      bb.putInt(n)
+      var i = 0
+      while (i < n) { bb.putLong(s.tsMs(i)); bb.putDouble(s.amounts(i)); i += 1 }
+      bb.array()
+    }
+
+    def decode(bytes: Array[Byte]): PerElementState = {
+      val bb = ByteBuffer.wrap(bytes)
+      val pending = Array.fill(bb.getInt())(bb.getLong())
+      val n = bb.getInt()
+      val tsMs = new Array[Long](n)
+      val amounts = new Array[Double](n)
+      var i = 0
+      while (i < n) { tsMs(i) = bb.getLong(); amounts(i) = bb.getDouble(); i += 1 }
+      new PerElementState(pending, tsMs, amounts)
+    }
+  }
 
   /** The fraud detector: the reference FraudDetector with its
     * per-element timers. The reference (FraudDetector.java:83)
@@ -81,57 +113,66 @@ object StreamingFraud {
                               watermarkDelay: String = "5 seconds"): Dataset[Alert] = {
     implicit val alertEnc: Encoder[Alert] = Encoders.product[Alert]
     implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val stEnc: Encoder[PerElementState] = Encoders.product[PerElementState]
+    // the state is one BinaryType column packed by PerElementState.
+    // A product encoder of collections would decode through
+    // MapObjects, whose lambda names change every micro-batch, so
+    // Spark would compile a new state projection per batch. A binary
+    // column has no MapObjects: its projection compiles once, and the
+    // timeout scan over every key is a byte copy.
+    implicit val stEnc: Encoder[Array[Byte]] = Encoders.BINARY
     val windowMs = windowSec * 1000
 
-    // drain timers <= wm in event-time order: each scans the buffer
-    // for [t-window, t) then clears it (reference onTimer), later
-    // expired timers therefore see an empty buffer
+    // drain timers <= wm in event-time order: each sums the buffer
+    // over [t-window, t) in arrival order then clears it (reference
+    // onTimer), later expired timers therefore see an empty buffer
     def drain(accountId: Long, wm: Long,
               st: PerElementState): (List[Alert], PerElementState) = {
       val (expired, remaining) = st.pending.sorted.partition(_ <= wm)
-      var buffer = st.buffer
-      val alerts = expired.flatMap { t =>
-        val inWin = buffer.filter(r => r.tsMs >= t - windowMs && r.tsMs < t)
-        val sum = inWin.map(_.amount).sum
-        buffer = Nil // reference clears the whole buffer on every firing
-        if (sum > threshold)
-          Some(Alert(accountId, t - windowMs, sum, inWin.size.toLong))
+      var tsMs = st.tsMs
+      var amounts = st.amounts
+      val alerts = expired.iterator.flatMap { t =>
+        var sum = 0d
+        var cnt = 0L
+        var i = 0
+        while (i < tsMs.length) {
+          if (tsMs(i) >= t - windowMs && tsMs(i) < t) { sum += amounts(i); cnt += 1 }
+          i += 1
+        }
+        // reference clears the whole buffer on every firing
+        tsMs = Array.emptyLongArray
+        amounts = Array.emptyDoubleArray
+        if (sum > threshold) Some(Alert(accountId, t - windowMs, sum, cnt))
         else None
       }.toList
-      (alerts, PerElementState(remaining, buffer))
+      (alerts, new PerElementState(remaining, tsMs, amounts))
     }
 
     tx.withWatermark("ts", watermarkDelay)
       .groupByKey(_.accountId)
-      .flatMapGroupsWithState[PerElementState, Alert](
+      .flatMapGroupsWithState[Array[Byte], Alert](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (accountId: Long, events: Iterator[Transaction],
-         state: GroupState[PerElementState]) =>
+         state: GroupState[Array[Byte]]) =>
           val wm = state.getCurrentWatermarkMs()
-          val st0 = state.getOption.getOrElse(PerElementState(Nil, Nil))
+          val st0 = state.getOption.map(PerElementState.decode)
+            .getOrElse(PerElementState.Empty)
           val (alerts, drained) = drain(accountId, wm, st0)
-          // fold new elements BATCHED (the tws processor's discipline
-          // brought back to the emulation): the r12 shape re-built
-          // both state Seqs with `:+` and a linear `contains` PER
-          // ELEMENT — O(n²) copying inside every (key, batch), which
-          // is what held the emulated path at 234k rows/s. One
-          // buffer concat and one distinct over (old ++ new) timers
-          // preserve arrival order and the dedup semantics exactly.
-          val newBuf = scala.collection.mutable.ArrayBuffer.empty[BufferedTx]
-          val newTimers = scala.collection.mutable.ArrayBuffer.empty[Long]
+          // fold the batch's rows at once: one append to each buffer
+          // column and one distinct over (old ++ new) timers keep
+          // arrival order and Flink's per-key timer dedup
+          val newTs = scala.collection.mutable.ArrayBuilder.make[Long]
+          val newAmounts = scala.collection.mutable.ArrayBuilder.make[Double]
           events.foreach { t =>
-            val tms = t.ts.getTime
-            newTimers += tms + windowMs
-            newBuf += BufferedTx(tms, t.amount)
+            newTs += t.ts.getTime
+            newAmounts += t.amount
           }
-          val st = PerElementState(
-            (drained.pending ++ newTimers).distinct,
-            drained.buffer ++ newBuf)
-          if (st.pending.isEmpty) state.remove()
+          val addedTs = newTs.result()
+          val pending = (drained.pending ++ addedTs.map(_ + windowMs)).distinct
+          if (pending.isEmpty) state.remove()
           else {
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(st.pending.min, wm + 1))
+            state.update(PerElementState.encode(new PerElementState(pending,
+              drained.tsMs ++ addedTs, drained.amounts ++ newAmounts.result())))
+            state.setTimeoutTimestamp(math.max(pending.min, wm + 1))
           }
           alerts.iterator
       }

@@ -2,8 +2,10 @@ package graft
 
 import graft.streaming._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming semantics of the reference jobs, driven synchronously
@@ -406,6 +408,26 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       val (_, processed, duration) = metrics.gauges.get("t_metrics")
       assert(processed >= 0.0)
       assert(duration >= 0L)
+      // a detector query: its three keys' timers (6, 7, 8 s) stay armed
+      // under the 5 s delay, so every progress reports their state rows
+      val txs = MemoryStream[Transaction]
+      val detector = StreamingFraud.perElementTimerDetector(txs.toDS(),
+        windowSec = 5, threshold = 0.0, watermarkDelay = "5 seconds")
+      val qd = detector.writeStream.format("memory").queryName("t_metrics_state")
+        .outputMode("append").start()
+      try {
+        txs.addData(tx(1, 10, 1), tx(2, 20, 2))
+        qd.processAllAvailable()
+        txs.addData(tx(3, 30, 3))
+        qd.processAllAvailable()
+      } finally qd.stop()
+      waited = 0
+      while (!metrics.stateGauges.containsKey("t_metrics_state") && waited < 50) {
+        Thread.sleep(100); waited += 1
+      }
+      val (stateRows, stateBytes) = metrics.stateGauges.get("t_metrics_state")
+      assert(stateRows >= 2L)
+      assert(stateBytes > 0L)
     } finally spark.streams.removeListener(metrics)
   }
 
@@ -689,6 +711,39 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       delayMs = 2000, threshold = 150.0).sorted
     assert(expected.nonEmpty, "feed should produce alerts")
     assert(got === expected)
+  }
+
+  test("timer detector equals the model under a negative threshold: " +
+      "timers due after a clear emit zero-sum, zero-count alerts") {
+    // below-zero threshold: every firing alerts, so the timers a
+    // watermark jump drains after the first one (empty buffer) must
+    // each emit (ws, 0.0, 0) exactly as the model does
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Transaction]
+    val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
+      windowSec = 5, threshold = -1.0, watermarkDelay = "2 seconds")
+    val sink = runToSink(alerts.toDF(), "t_model_neg", "append") { step =>
+      randomFeed.foreach { rows => input.addData(rows: _*); step(0) }
+    }
+    val got = alertKeys(sink)
+    val expected = FraudDetectorModel.run(randomFeed, windowMs = 5000,
+      delayMs = 2000, threshold = -1.0).sorted
+    assert(expected.exists { case (_, _, cents, cnt) => cents == 0 && cnt == 0 },
+      "feed should drain timers over a cleared buffer")
+    assert(got === expected)
+  }
+
+  test("timer detector keeps its per-key state in one BinaryType column") {
+    // the packed layout: nested collections in the state encoder would
+    // bring back the per-batch MapObjects projection
+    implicit val sqlCtx = spark.sqlContext
+    val alerts = StreamingFraud.perElementTimerDetector(
+      MemoryStream[Transaction].toDS(), windowSec = 5, threshold = 0.0)
+    val schemas = alerts.queryExecution.analyzed.collect {
+      case f: FlatMapGroupsWithState => f.stateEncoder.schema
+    }
+    assert(schemas.length === 1)
+    assert(schemas.head.map(_.dataType) === Seq(BinaryType))
   }
 
   test("timer detector restarted from its checkpoint after any batch " +
