@@ -1,10 +1,10 @@
 #!/bin/bash
 # Canary-gated 3-SF bench pin (round-13 verdict task 1): poll the
 # host-window canary; the moment it reads clean, pin bench_full /
-# bench_sf0.5 / bench_sf1.0 — and the streaming bench (round-14
-# verdict task 2: STREAM_BENCH needs the same window discipline) —
-# in ONE window with canary stamps between artifacts. Log everything
-# to /tmp/pin_log.txt.
+# bench_sf0.5 / bench_sf1.0 in ONE window with canary stamps between
+# artifacts. Log everything to /tmp/pin_log.txt. Streaming numbers
+# come from perfbench (`python3 perfbench/run.py --workload
+# stream_timer`), not from this script.
 #
 # CANARY REFS (r16 refresh — round-15 verdict task 4): the r12-era
 # clean refs (q_topk_agg 0.28 / q_cusum 0.24 / q_pagerank 1.66 s)
@@ -26,7 +26,6 @@ ROUNDS=${1:-24}         # poll attempts before giving up
 SMALL_BAR=${SMALL_BAR:-1.25}
 PR_BAR=${PR_BAR:-1.10}
 SLEEP=${2:-400}         # seconds between polls
-STREAM=${STREAM:-1}     # also pin STREAM_BENCH_${R}.json in-window
 
 canary_ratios() {
   java -Xmx32g -XX:+UseG1GC -cp "$CP" graft.Bench q_topk_agg q_cusum q_pagerank 2>/dev/null \
@@ -92,22 +91,6 @@ for i in $(seq 1 "$ROUNDS"); do
       fi
       stamp "after $outf"
     done
-    if [ "$STREAM" = "1" ]; then
-      echo "$(date -u +%H:%M:%S) stream bench -> STREAM_BENCH_${R}.json" >> "$LOG"
-      # capture the exit code: stream_bench.py raises SystemExit when a
-      # shape yields no bench line, and the artifact may then be
-      # missing or stale — a 'done' line there would misreport the pin
-      # (round-15 advice)
-      python3 scripts/stream_bench.py "STREAM_BENCH_${R}.json" \
-        > /tmp/stream_bench_stdout_$$.txt 2>&1
-      src=$?
-      if [ "$src" -eq 0 ]; then
-        echo "$(date -u +%H:%M:%S) done STREAM_BENCH_${R}.json" >> "$LOG"
-      else
-        echo "$(date -u +%H:%M:%S) STREAM BENCH FAILED (exit=$src; artifact missing or stale — see /tmp/stream_bench_stdout_$$.txt)" >> "$LOG"
-      fi
-      stamp "after STREAM_BENCH_${R}.json"
-    fi
     echo "$(date -u +%H:%M:%S) PIN COMPLETE" >> "$LOG"
     exit 0
   fi

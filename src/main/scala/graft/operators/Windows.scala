@@ -16,11 +16,13 @@ import org.apache.spark.sql.types._
   *    sliding windows into panes of gcd(size, slide), accumulates per
   *    pane, and combines panes per window. Here that becomes a
   *    two-level relational aggregation: pre-aggregate per tumbling
-  *    pane (1x the input, full map-side partial aggregation), explode
+  *    pane (1x the input, full map-side partial aggregation), assign
   *    each pane to the windows that contain it, and combine the
   *    already-tiny partials. The naive plan replicates every input row
   *    size/slide times *before* the shuffle; the pane plan replicates
   *    only pane partials, which is the whole point at 100 TB.
+  *    Both sliding operators run on a batch frame or on a watermarked
+  *    stream.
   *  - incremental window-sum merge across firings (reference persists
   *    windowStart_accountId sums in RocksDB and re-adds; batch analog
   *    is the per-key running total over window sums)
@@ -70,118 +72,60 @@ object Windows {
 
   /** Keyed sliding-window aggregation via the built-in assigner.
     * Spark explodes each row into size/slide windows, then shuffles
-    * on (key, window). Baseline for `paneSlidingAgg`.
+    * on (key, window); on a stream each row updates size/slide window
+    * states. Baseline for `paneSlidingAgg`. Runs on a batch frame or
+    * on a stream the caller has given a watermark.
     */
   def slidingAgg(events: DataFrame, key: String, tsCol: String,
                  valCol: String, sizeSec: Long, slideSec: Long): DataFrame =
-    events
-      .groupBy(col(key),
-        window(col(tsCol), s"$sizeSec seconds", s"$slideSec seconds").as("w"))
-      .agg(
-        sum(col(valCol).cast(Dec)).cast(DecOut).as("sum_dec"),
-        count(lit(1)).as("cnt"))
-      .select(
-        col(key),
-        unix_timestamp(col("w.start")).as("ws"),
-        col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"),
-        expr("cast(sum_dec * 100 as bigint) div cnt").as("mean_cents"))
+    slidingWindows(events, key, col(tsCol), sizeSec, slideSec,
+      sum(col(valCol).cast(Dec)), count(lit(1)))
 
   /** Pane/slice-optimized sliding-window aggregation (same result set
-    * as [[slidingAgg]]).
+    * as [[slidingAgg]]), as two chained time-window aggregations:
     *
-    * Phase 1: tumbling pre-aggregation per pane of gcd(size, slide) —
-    * input touched once, map-side combine applies.
-    * Phase 2: explode each pane partial to the (≤ ceil(size/slide)+1)
-    * windows containing it and combine partials.
-    *
-    * Window boundaries are slide-aligned and pane divides slide, so a
-    * pane is wholly inside a window iff ws <= paneStart and
-    * paneStart + pane <= ws + size — which makes pane partials
-    * lossless (reference: CustomSlidingWindow.java pane slicing).
-    */
-  def paneSlidingAgg(events: DataFrame, key: String, tsCol: String,
-                     valCol: String, sizeSec: Long, slideSec: Long): DataFrame = {
-    val paneSec = gcd(sizeSec, slideSec)
-    val maxJ = (sizeSec + slideSec - 1) / slideSec // ceil(size/slide)
-
-    val panePartials = events
-      .groupBy(col(key), windowStart(col(tsCol), paneSec).as("pane"))
-      .agg(
-        sum(col(valCol).cast(Dec)).as("psum"),
-        count(lit(1)).as("pcnt"))
-
-    // candidate ws values: slide-aligned at/below pane start, walking
-    // back while the pane still fits in [ws, ws + size)
-    val aligned = (floor(col("pane") / slideSec) * slideSec).cast(LongType)
-    val wsCandidates = filter(
-      transform(sequence(lit(0L), lit(maxJ)), j => aligned - j * slideSec),
-      ws => ws + sizeSec >= col("pane") + paneSec && ws <= col("pane"))
-
-    panePartials
-      .select(col(key), explode(wsCandidates).as("ws"), col("psum"), col("pcnt"))
-      .groupBy(col(key), col("ws"))
-      .agg(sum(col("psum")).cast(DecOut).as("sum_dec"), sum(col("pcnt")).as("cnt"))
-      .select(
-        col(key), col("ws"),
-        col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"),
-        expr("cast(sum_dec * 100 as bigint) div cnt").as("mean_cents"))
-  }
-
-  /** STREAMING pane-sliced sliding aggregation — the reference's
-    * CustomSlidingWindow pane state layout expressed natively in
-    * Structured Streaming as chained time-window aggregations
-    * (supported for append streams since Spark 3.4):
-    *
-    *   state store 1: tumbling gcd(size, slide) pane partials —
-    *     each input row folds into exactly ONE pane row;
-    *   state store 2: `window(window_time(pane), size, slide)`
-    *     re-aggregates pane partials into sliding windows.
+    *   1. tumbling panes of gcd(size, slide) — each input row folds
+    *      into exactly ONE pane partial (map-side combine in batch,
+    *      one state row per pane on a stream);
+    *   2. `window(window_time(pane), size, slide)` re-aggregates the
+    *      pane partials into the sliding windows.
     *
     * Soundness: `window_time(pane)` is the pane's end−1µs instant;
     * window starts are slide-aligned and pane | slide, so the sliding
     * windows containing that instant are exactly the windows that
     * contain the whole pane (ws < paneStart+pane ⟺ ws ≤ paneStart for
-    * pane-aligned ws; instant < ws+size ⟺ paneStart+pane ≤ ws+size).
-    * Same result set as [[slidingAgg]]; per-element state work drops
-    * from size/slide window-row updates to one pane update, pane
-    * merges amortize across the pane's elements — the reference's
-    * pane trick (CustomSlidingWindow.java:25-127), with watermark
-    * propagation across both stateful operators handled by the
-    * streaming planner. Equivalence + two-state-store plan shape are
-    * spec-checked; the batch analog is [[paneSlidingAgg]].
+    * pane-aligned ws; instant < ws+size ⟺ paneStart+pane ≤ ws+size),
+    * which makes pane partials lossless (reference:
+    * CustomSlidingWindow.java:25-127 pane slicing). Runs on a batch
+    * frame or on a stream the caller has given a watermark; there the
+    * streaming planner propagates the watermark across both stateful
+    * operators.
     */
-  def streamingPaneSlidingAgg(events: DataFrame, key: String, tsCol: String,
-                              valCol: String, sizeSec: Long, slideSec: Long,
-                              watermarkDelay: String): DataFrame = {
+  def paneSlidingAgg(events: DataFrame, key: String, tsCol: String,
+                     valCol: String, sizeSec: Long, slideSec: Long): DataFrame = {
     val paneSec = gcd(sizeSec, slideSec)
-    events
-      .withWatermark(tsCol, watermarkDelay)
+    val panes = events
       .groupBy(col(key), window(col(tsCol), s"$paneSec seconds").as("pw"))
       .agg(sum(col(valCol).cast(Dec)).as("psum"), count(lit(1)).as("pcnt"))
-      .groupBy(col(key),
-        window(window_time(col("pw")), s"$sizeSec seconds",
-          s"$slideSec seconds").as("w"))
-      .agg(sum(col("psum")).cast(DecOut).as("sum_dec"),
-        sum(col("pcnt")).as("cnt"))
+    slidingWindows(panes, key, window_time(col("pw")), sizeSec, slideSec,
+      sum(col("psum")), sum(col("pcnt")))
+  }
+
+  /** Groups by key and the sliding windows containing `ts`, then
+    * projects the sliding operators' shared output: `ws` (BIGINT
+    * epoch seconds), `sum_val`, `cnt`, `mean_cents`.
+    */
+  private def slidingWindows(df: DataFrame, key: String, ts: Column,
+                             sizeSec: Long, slideSec: Long,
+                             sumDec: Column, cnt: Column): DataFrame =
+    df.groupBy(col(key),
+        window(ts, s"$sizeSec seconds", s"$slideSec seconds").as("w"))
+      .agg(sumDec.cast(DecOut).as("sum_dec"), cnt.as("cnt"))
       .select(
         col(key),
         unix_timestamp(col("w.start")).as("ws"),
         col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"),
         expr("cast(sum_dec * 100 as bigint) div cnt").as("mean_cents"))
-  }
-
-  /** The naive counterpart of [[streamingPaneSlidingAgg]]: one
-    * sliding-window groupBy, so Spark replicates every row into
-    * size/slide window states. Delegates to [[slidingAgg]] so the
-    * aggregate arithmetic and output columns are identical to the
-    * pane variant BY CONSTRUCTION — a pane-vs-naive benchmark then
-    * measures the state layout alone.
-    */
-  def streamingNaiveSlidingAgg(events: DataFrame, key: String, tsCol: String,
-                               valCol: String, sizeSec: Long, slideSec: Long,
-                               watermarkDelay: String): DataFrame =
-    slidingAgg(events.withWatermark(tsCol, watermarkDelay),
-      key, tsCol, valCol, sizeSec, slideSec)
 
   /** Gap-based session windows per key (generalizes the reference's
     * 5 s event-time timer buffer, FraudDetector.java:94-119).

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * on timer): `dropDuplicatesWithinWatermark` keeps ONE state row per
   * key and evicts it once the event-time watermark passes the key's
   * last-seen time plus the delay, so the store (RocksDB-backed via
-  * `GraftStreams.session`) holds only the horizon's keys — bounded
-  * regardless of stream lifetime.
+  * `GraftStreams.withRocksDBState`) holds only the horizon's keys —
+  * bounded regardless of stream lifetime.
   *
   * The dedup key is `(xxhash64(text), length)` — the same 16-byte key
   * as the batch operators, so state rows cost 16 bytes + overhead

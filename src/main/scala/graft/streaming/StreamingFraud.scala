@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   *  - custom tumbling/sliding window assigner + event-time trigger →
   *    `groupBy(window(...))` in append mode (emits when the watermark
   *    passes window end — the FIRE_AND_PURGE of
-  *    CustomTumblingTrigger.java:33-89).
+  *    CustomTumblingTrigger.java:33-89). Sliding means are
+  *    `Windows.slidingAgg` / `Windows.paneSlidingAgg` on the
+  *    watermarked stream.
   *  - ValueState/ListState + event-time timers (FraudDetector.java) →
   *    `flatMapGroupsWithState` with `EventTimeTimeout` GroupState.
   *  - RocksDB state backend → RocksDBStateStoreProvider (see
@@ -39,19 +41,6 @@ object StreamingFraud {
       .select(col("accountId"),
         unix_millis(col("w.start")).as("windowStartMs"),
         col("total"), col("cnt"))
-
-  /** Sliding per-account mean (CustomSlidingWindow semantics): Spark's
-    * sliding `window` already evaluates via per-slide panes in the
-    * state store, the slicing the reference implements by hand.
-    */
-  def slidingMeans(tx: DataFrame, sizeSec: Long, slideSec: Long,
-                   watermarkDelay: String = "5 seconds"): DataFrame =
-    tx.withWatermark("ts", watermarkDelay)
-      .groupBy(col("accountId"),
-        window(col("ts"), s"$sizeSec seconds", s"$slideSec seconds").as("w"))
-      .agg(avg(col("amount")).as("mean_amount"), count(lit(1)).as("cnt"))
-      .select(col("accountId"), unix_millis(col("w.start")).as("windowStartMs"),
-        col("mean_amount"), col("cnt"))
 
   /** Per-element timer emulation state: every element's pending fire
     * time plus the record buffer as parallel (tsMs, amount) arrays in

@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -56,6 +56,39 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     alerts.select("accountId", "windowStartMs", "total", "cnt").collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100),
         r.getLong(3))).toSeq.sorted
+
+  /** Restart equivalence on RocksDB with changelog checkpointing:
+    * feeds `feed` through `query` into the parquet alert sink once
+    * uninterrupted, then once per k stopped after batch k and restarted
+    * from the same checkpoint, and asserts every run's `rows` equal the
+    * uninterrupted run's (returned). The sink overwrites a replayed
+    * batch, so equality means exactly-once state and offsets.
+    */
+  private def assertRestartEquivalent[T: Encoder, R](feed: Seq[Seq[T]])(
+      query: Dataset[T] => DataFrame)(rows: DataFrame => R): R =
+    withConf(RocksDBProvider ++ Seq(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+        "spark.sql.shuffle.partitions" -> "2")) {
+      implicit val sqlCtx = spark.sqlContext
+      def run(stopAfter: Int): R = {
+        val dir = java.nio.file.Files.createTempDirectory("graft_restart").toString
+        val input = MemoryStream[T]
+        val out = query(input.toDS())
+        def runPart(batches: Seq[Seq[T]]): Unit = {
+          val q = GraftStreams.parquetAlertSink(out, s"$dir/out", s"$dir/ckpt")
+          try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+          finally q.stop()
+        }
+        Seq(feed.take(stopAfter), feed.drop(stopAfter)).filter(_.nonEmpty)
+          .foreach(runPart)
+        rows(spark.read.parquet(s"$dir/out"))
+      }
+      val uninterrupted = run(feed.length)
+      (1 until feed.length).foreach { k =>
+        assert(run(k) === uninterrupted, s"restart after batch $k")
+      }
+      uninterrupted
+    }
 
   private def runToSink(df: DataFrame, name: String, mode: String)(
       feed: (Int => Unit) => Unit): DataFrame = {
@@ -350,8 +383,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("sliding window means emit per-slide panes (reference pane slicing)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val means = StreamingFraud.slidingMeans(input.toDF(), sizeSec = 10,
-      slideSec = 5, watermarkDelay = "5 seconds")
+    val means = graft.operators.Windows.slidingAgg(
+      input.toDF().withWatermark("ts", "5 seconds"), "accountId", "ts",
+      "amount", sizeSec = 10, slideSec = 5)
     val sink = runToSink(means, "t_slide", "append") { step =>
       input.addData(tx(1, 10, 6), tx(1, 30, 8)) // windows [0,10) [5,15)
       step(0)
@@ -360,11 +394,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       input.addData(tx(9, 1, 61))
       step(0)
     }
-    val acct1 = sink.filter(col("accountId") === 1).collect()
-      .map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    assert(acct1.keySet === Set(Base, Base + 5000))
-    assert(math.abs(acct1(Base) - 20.0) < 1e-9) // (10+30)/2
-    assert(math.abs(acct1(Base + 5000) - 20.0) < 1e-9)
+    val acct1 = sink.filter(col("accountId") === 1)
+      .select("ws", "cnt", "sum_val", "mean_cents").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+    // both windows hold both rows: mean (10+30)/2 = 20.00
+    assert(acct1 === Set(Base / 1000, Base / 1000 + 5).map((_, 2L, 40.0, 2000L)))
   }
 
   test("stream-static enrichment join attaches dimension attributes") {
@@ -748,33 +782,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("timer detector restarted from its checkpoint after any batch " +
       "emits the uninterrupted run's alerts (RocksDB, changelog)") {
-    // exactly-once across a stop/restart at every batch boundary: the
-    // pending timers and buffers live in RocksDB state, the offsets in
-    // the checkpoint, and the parquet sink overwrites a replayed batch
-    withConf(RocksDBProvider ++ Seq(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
-        "spark.sql.shuffle.partitions" -> "2")) {
-      implicit val sqlCtx = spark.sqlContext
-      def run(stopAfter: Int): Seq[FraudDetectorModel.Alert] = {
-        val dir = java.nio.file.Files.createTempDirectory("graft_restart").toString
-        val input = MemoryStream[Transaction]
-        val alerts = StreamingFraud.perElementTimerDetector(input.toDS(),
-          windowSec = 5, threshold = 150.0, watermarkDelay = "2 seconds").toDF()
-        def feed(batches: Seq[Seq[Transaction]]): Unit = {
-          val q = GraftStreams.parquetAlertSink(alerts, s"$dir/out", s"$dir/ckpt")
-          try batches.foreach { rows => input.addData(rows: _*); q.processAllAvailable() }
-          finally q.stop()
-        }
-        Seq(randomFeed.take(stopAfter), randomFeed.drop(stopAfter))
-          .filter(_.nonEmpty).foreach(feed)
-        alertKeys(spark.read.parquet(s"$dir/out"))
-      }
-      val uninterrupted = run(randomFeed.length)
-      assert(uninterrupted.nonEmpty, "feed should produce alerts")
-      (1 until randomFeed.length).foreach { k =>
-        assert(run(k) === uninterrupted, s"restart after batch $k")
-      }
-    }
+    // the pending timers and buffers live in RocksDB state
+    val uninterrupted = assertRestartEquivalent(randomFeed)(ds =>
+      StreamingFraud.perElementTimerDetector(ds, windowSec = 5,
+        threshold = 150.0, watermarkDelay = "2 seconds").toDF())(alertKeys)
+    assert(uninterrupted.nonEmpty, "feed should produce alerts")
   }
 
   test("streaming pane-sliced sliding agg matches batch sliding agg (2 state stores)") {
@@ -784,9 +796,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
     val data = Seq(tx(1, 10, 6), tx(1, 30, 8), tx(1, 5, 12), tx(2, 7, 3))
-    val paned = graft.operators.Windows.streamingPaneSlidingAgg(
-      input.toDF(), "accountId", "ts", "amount",
-      sizeSec = 10, slideSec = 5, watermarkDelay = "5 seconds")
+    val paned = graft.operators.Windows.paneSlidingAgg(
+      input.toDF().withWatermark("ts", "5 seconds"), "accountId", "ts",
+      "amount", sizeSec = 10, slideSec = 5)
     var planStr = ""
     val q = paned.writeStream.format("memory").queryName("t_panes")
       .outputMode("append").start()
@@ -818,6 +830,29 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         r.getLong(4))).toSet
     assert(got === expected)
     assert(got.nonEmpty)
+  }
+
+  test("pane-sliced sliding agg restarted from its checkpoint after any " +
+      "batch emits the uninterrupted run's windows (RocksDB, changelog)") {
+    // pane partials (store 1), sliding windows (store 2) and the
+    // watermark both operators evict by all come back from the
+    // checkpoint; four data batches keep the per-k reruns short, and
+    // 10 s windows still span batches (7 s apart)
+    val feed = randomFeed.take(4) :+ randomFeed.last
+    def windows(df: DataFrame): Seq[(Long, Long, Long, Long, Long)] =
+      df.select("accountId", "ws", "sum_val", "cnt", "mean_cents").collect()
+        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100),
+          r.getLong(3), r.getLong(4))).toSeq.sorted
+    val uninterrupted = assertRestartEquivalent(feed)(ds =>
+      graft.operators.Windows.paneSlidingAgg(
+        ds.toDF().withWatermark("ts", "2 seconds"), "accountId", "ts",
+        "amount", sizeSec = 10, slideSec = 4))(windows)
+    // the closing row's watermark has emitted every other window whole
+    val batch = windows(graft.operators.Windows.slidingAgg(
+      feed.flatten.toDF(), "accountId", "ts", "amount",
+      sizeSec = 10, slideSec = 4)).filter(_._1 != 99L)
+    assert(batch.nonEmpty)
+    assert(uninterrupted.filter(_._1 != 99L) === batch)
   }
 
   test("key receiving data every batch still flushes its expired window") {

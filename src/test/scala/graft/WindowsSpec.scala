@@ -16,24 +16,23 @@ class WindowsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pane-sliced sliding agg equals direct for non-divisible shapes") {
+    import spark.implicits._
+    // edge rows: a null ts, timestamps before 1970 (negative epoch
+    // seconds, off any window boundary) and keys with one row
+    def at(sec: Long) = new java.sql.Timestamp(sec * 1000)
+    val edges = Seq[(String, java.sql.Timestamp, Double)](
+      ("a", null, 5.0), ("a", at(-50), 1.5), ("a", at(-7200), 2.25),
+      ("a", at(600), 3.0), ("b", at(-302181904L), 7.0),
+      ("c", at(1704067201L), 4.0)).toDF("event_type", "ts", "value")
     // gcd-pane generality: slide does not divide size (pane < slide)
-    for ((size, slide) <- Seq((3600L, 1000L), (3000L, 900L), (5400L, 2400L))) {
-      val direct = Windows.slidingAgg(events, "event_type", "ts", "value", size, slide)
-      val pane = Windows.paneSlidingAgg(events, "event_type", "ts", "value", size, slide)
+    for ((input, name) <- Seq(events -> "events", edges -> "edges");
+         (size, slide) <- Seq((3600L, 1000L), (3000L, 900L), (5400L, 2400L))) {
+      val direct = Windows.slidingAgg(input, "event_type", "ts", "value", size, slide)
+      val pane = Windows.paneSlidingAgg(input, "event_type", "ts", "value", size, slide)
+      assert(direct.count() > 0, s"no windows on $name")
       assert(direct.exceptAll(pane).isEmpty && pane.exceptAll(direct).isEmpty,
-        s"mismatch for size=$size slide=$slide")
+        s"mismatch on $name for size=$size slide=$slide")
     }
-  }
-
-  test("streaming naive sliding agg equals the pane variant (batch run)") {
-    // the StreamBench "sliding" baseline must be result-identical to
-    // "panes" — the benchmark's delta is then state layout alone
-    val naive = Windows.streamingNaiveSlidingAgg(
-      events, "event_type", "ts", "value", 3600, 900, "0 seconds")
-    val pane = Windows.streamingPaneSlidingAgg(
-      events, "event_type", "ts", "value", 3600, 900, "0 seconds")
-    assert(naive.count() > 0)
-    assert(naive.exceptAll(pane).isEmpty && pane.exceptAll(naive).isEmpty)
   }
 
   test("tumbling agg partitions every row into exactly one window") {
