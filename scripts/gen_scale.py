@@ -47,7 +47,7 @@ import sys
 import duckdb
 import pyarrow.parquet as pq
 
-# Must match graft.SparkEntry.KeyShift: the engine's
+# Must match graft.queries.DedupQueries.KeyShift: the engine's
 # dedup_minhash_inc/ext corpus/batch classification (and its oracles)
 # tests pmod(doc_id, SHIFT) to stay shift-invariant.
 SHIFT = 10 ** 9

@@ -2,17 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Recommended session configuration for graft workloads.
+/** Recommended session configuration for graft workloads, and the
+  * one session builder of graft's tools (`Verify`, `PlanAudit`,
+  * `PlanBaseline`) and of the benchmark.
   *
-  * local[32] testing mirrors the multi-executor layout: shuffle
-  * partitions sized to cores (not the 200 default), AQE on for
-  * runtime coalescing/skew splitting, 128 MB scan partitions so a
-  * 100 TB input splits into ~800k well-sized tasks on a 1000-executor
-  * cluster rather than millions of tiny ones.
+  * A local session on `cores` threads mirrors the multi-executor
+  * layout: shuffle partitions sized to cores (not the 200 default),
+  * AQE on for runtime coalescing/skew splitting, 128 MB scan
+  * partitions so a 100 TB input splits into ~800k well-sized tasks on
+  * a 1000-executor cluster rather than millions of tiny ones.
   */
 object GraftSession {
 
-  def builder(cores: Int = 32, appName: String = "graft"): SparkSession.Builder =
+  def builder(cores: Int = Runtime.getRuntime.availableProcessors,
+              appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
@@ -16,7 +17,8 @@ import org.apache.spark.sql.types._
   * UDF (no encoder round-trip, no closure serialization).
   *
   * Registered once per session under stable SQL names so both the
-  * Column DSL and `spark.sql` can use them.
+  * Column DSL and `spark.sql` can use them: by [[register]], or at
+  * session build by [[graft.GraftExtensions]].
   */
 object GraftFunctions {
 
@@ -28,32 +30,37 @@ object GraftFunctions {
   val NfcName = "graft_nfc"
   val NfkcName = "graft_nfkc"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(SimHashName, exprs =>
+  /** Each SQL name with the builder of its expression. */
+  private[graft] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    SimHashName -> (exprs =>
       StaticInvoke(Kernels.getClass, LongType, "simhash64",
-        exprs, Seq(ArrayType(StringType)), returnNullable = false),
-      "built-in")
-    registry.createOrReplaceTempFunction(FingerprintName, exprs =>
+        exprs, Seq(ArrayType(StringType)), returnNullable = false)),
+    FingerprintName -> (exprs =>
       StaticInvoke(Kernels.getClass, LongType, "fingerprint64",
-        exprs, Seq(ArrayType(StringType)), returnNullable = false),
-      "built-in")
-    registry.createOrReplaceTempFunction(DotName, exprs =>
-      DotProduct(exprs(0), exprs(1)), "built-in")
+        exprs, Seq(ArrayType(StringType)), returnNullable = false)),
+    DotName -> (exprs => DotProduct(exprs(0), exprs(1))),
     // Spark's OWN bloom-filter expressions (what InjectRuntimeFilter
     // plans internally), surfaced as callable functions: the agg
     // builds a binary sketch over long hashes, might-contain tests it
     // with codegen — no UDF, no sketch-library round-trip
-    registry.createOrReplaceTempFunction(BloomAggName, exprs =>
-      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)), "built-in")
-    registry.createOrReplaceTempFunction(BloomContainsName, exprs =>
-      BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-    registry.createOrReplaceTempFunction(NfcName, exprs =>
+    BloomAggName -> (exprs =>
+      new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))),
+    BloomContainsName -> (exprs => BloomFilterMightContain(exprs(0), exprs(1))),
+    NfcName -> (exprs =>
       StaticInvoke(Kernels.getClass, StringType, "nfc",
-        exprs, Seq(StringType), returnNullable = false), "built-in")
-    registry.createOrReplaceTempFunction(NfkcName, exprs =>
+        exprs, Seq(StringType), returnNullable = false)),
+    NfkcName -> (exprs =>
       StaticInvoke(Kernels.getClass, StringType, "nfkc",
-        exprs, Seq(StringType), returnNullable = false), "built-in")
+        exprs, Seq(StringType), returnNullable = false)))
+
+  /** Registers every function the session does not have yet, so only
+    * a session's first call does any work.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    for ((name, build) <- builders
+         if !registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, build, "built-in")
   }
 
   /** Codegen'd dot product of two array<double> columns. */

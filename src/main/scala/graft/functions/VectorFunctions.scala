@@ -16,11 +16,12 @@ object VectorFunctions {
 
   def toDouble(v: Column): Column = transform(v, x => x.cast(DoubleType))
 
-  /** Dot product — delegates to the codegen'd [[Kernels.dotProduct]]
-    * kernel (a zip_with/aggregate HOF allocates an intermediate array
-    * per evaluation, which dominated the pair-join benchmarks; the
-    * kernel is a tight primitive loop). Callers must have run
-    * [[GraftFunctions.register]] on the session.
+  /** Dot product through the [[DotProduct]] expression (`graft_dot`),
+    * whose generated code is a tight primitive loop (a zip_with /
+    * aggregate HOF allocates an intermediate array per evaluation,
+    * which dominated the pair-join benchmarks). The name resolves in
+    * the session's function registry: run [[GraftFunctions.register]]
+    * on the session first, or build it with [[graft.GraftExtensions]].
     */
   def dot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 

@@ -49,7 +49,9 @@ object TransactionGen {
     * partitioning-independent — the property every other graft source
     * keeps and `Math.random()` cannot. Pure projection: apply to the
     * live stream or to a batch frame (how the spec derives expected
-    * late-drop counts).
+    * late-drop counts). `perturb(stream(...))` followed by
+    * `withWatermark("ts", "5 seconds")` and a window agg is the
+    * reference's out-of-order job.
     */
   def perturb(txns: DataFrame, maxSkewMs: Long = 500000L,
               salt: Long = 0xBADCAFEL): DataFrame =
@@ -57,15 +59,4 @@ object TransactionGen {
       unix_millis(col("ts")) +
         pmod(xxhash64(col("accountId"), col("amount"), col("ts"), lit(salt)),
           lit(2 * maxSkewMs)) - maxSkewMs))
-
-  /** The reference's out-of-order job's source stage: rate-derived
-    * transactions with ±`maxSkewMs` perturbed event time. Downstream
-    * runs `withWatermark("ts", "5 seconds")` + a window agg to
-    * complete the pipeline (late rows beyond the watermark drop, as
-    * the reference's bounded-out-of-orderness strategy does).
-    */
-  def streamOutOfOrder(spark: SparkSession, rowsPerSecond: Int = 100,
-                       accounts: Int = 10,
-                       maxSkewMs: Long = 500000L): DataFrame =
-    perturb(stream(spark, rowsPerSecond, accounts), maxSkewMs)
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -135,11 +135,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (args.nonEmpty && args(0) == "-full") {
@@ -216,11 +212,7 @@ object PlanBaseline {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val lines = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>

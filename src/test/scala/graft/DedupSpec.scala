@@ -485,7 +485,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // dataset dir; admission loads it back from parquet.
     val out = SparkEntry.queries("dedup_minhash_inc")(spark, sf)
     assert(out.count() > 0)
-    val idxDir = SparkEntry.minhashIndexDir.get(sf)
+    val idxDir = queries.DedupQueries.minhashIndexDir.get(sf)
     assert(idxDir.isDefined, "gate did not save a band index")
     for (t <- Seq("bands", "shingles", "sizes", "params"))
       assert(new java.io.File(s"${idxDir.get}/$t").isDirectory,

@@ -80,6 +80,15 @@ class EntrySpec extends AnyFunSuite with SparkSpec {
     assert(unknown.isEmpty, s"oracle for unknown queries: $unknown")
   }
 
+  test("the query index rejects a name declared twice, naming it") {
+    val body = (s: org.apache.spark.sql.SparkSession, _: String) => s.range(1).toDF()
+    val err = intercept[IllegalArgumentException](Query.index(Seq(
+      Query("q_twice", "SELECT 1")(body), Query("q_once", "SELECT 2")(body),
+      Query("q_twice", "SELECT 3")(body))))
+    assert(err.getMessage.contains("q_twice"))
+    assert(!err.getMessage.contains("q_once"))
+  }
+
   test("no query plans a cartesian product; broadcast nested loops " +
       "only where documented") {
     // BNLJ is legitimate exactly where a small side is broadcast

@@ -24,6 +24,16 @@ class ExtensionsSpec extends AnyFunSuite with SparkSpec {
         .sql("SELECT graft_fingerprint64(array('a','b','c')) AS f").head.getLong(0)
       assert(sh !== 0L)
       assert(fp !== 0L)
+      val norm = extended
+        .sql("SELECT graft_nfc('A\u030A') AS c, graft_nfkc('\uFB01') AS k").head
+      assert(norm.getString(0) == "\u00C5") // A + combining ring → Å
+      assert(norm.getString(1) == "fi") // the ﬁ ligature folds
+      // a Bloom filter never drops a member it was built from
+      val members = extended.sql(
+        """SELECT count_if(graft_bloom_contains(
+          |  (SELECT graft_bloom_agg(id, 100L, 4096L) FROM range(100)), id))
+          |FROM range(100)""".stripMargin).head.getLong(0)
+      assert(members == 100L)
     } finally {
       SparkSession.setDefaultSession(SparkSpec.session)
       SparkSession.setActiveSession(SparkSpec.session)
