@@ -1,45 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // normalized boolean: "1"/"TRUE "/"yes" would otherwise reach the
-    // session builder verbatim and throw an opaque conf-parse error;
-    // junk ("banana") fails HERE with the variable named, instead of
-    // silently meaning false
-    val aqe = sys.env.get("SPARK_GRAFT_AQE").map(_.trim.toLowerCase) match {
-      case None | Some("") => "false"
-      case Some("true") | Some("1") | Some("yes") | Some("on") => "true"
-      case Some("false") | Some("0") | Some("no") | Some("off") => "false"
-      case Some(other) => sys.error(
-        s"SPARK_GRAFT_AQE='$other' is not a boolean — use true/1/yes/on " +
-          "or false/0/no/off (unset = false)")
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // serialized shuffle writer, as in GraftSession: the bypass
-      // writer's per-(map, reducer) temp-file churn dominates small
-      // queries' fixed CPU at 32 partitions and is not the writer a
-      // real >200-partition cluster shuffle uses
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // AQE A/B knob (r12). Full-surface measurement: AQE on = 103.7 s
-      // / 117.0 CPU-s vs 107.7 / 128.1 off — small scan+agg queries
-      // win CPU 2-5x from runtime-coalesced reducers, but the
-      // per-QueryStage materialization waves cost every iterative /
-      // checkpoint-pinned shape real wall (q_hits +1.21 s,
-      // dedup_minhash_inc 2.05x CPU, q_ks_test steady 5.6 -> 14.7
-      // CPU-s). Default stays OFF here so the artifact keeps measuring
-      // plan cost on stable round-over-round footing; GraftSession
-      // (the user-facing recommended config) keeps AQE ON because at
-      // cluster data volumes the per-stage overhead amortizes and
-      // skew-join/runtime-coalescing are worth far more than they
-      // cost at this bench's tiny SFs.
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the served session config (GraftSession: AQE on, shuffle
+    // partitions = cores, serialized shuffle writer)
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // steady-state: touch every input once (page cache + JIT + parquet
     // footers) so per-query timings measure the query, not first-IO

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Recommended session configuration for graft workloads, and the
-  * one session builder of graft's tools (`Verify`, `PlanAudit`,
-  * `PlanBaseline`) and of the benchmark.
+  * one session builder of graft's tools (`Verify`, `Bench`,
+  * `PlanAudit`, `PlanBaseline`), the test suite and the benchmark.
   *
   * A local session on `cores` threads mirrors the multi-executor
   * layout: shuffle partitions sized to cores (not the 200 default),

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * counting counts every adjacent position (overlaps included), the
   * standard get_stats contract.
   *
-  * Scale shape: the corpus is read once into a word-frequency table
-  * (one vocabulary shuffle); every round after that touches only that
+  * Scale shape: the token stream is read once into a word-frequency
+  * table (one vocabulary shuffle); every round after that touches only that
   * table — a map-side pair explode, a (lhs,rhs)-keyed count shuffle,
   * and a TakeOrdered(1) argmax whose single row is pulled to the
   * driver (the bounded-model pattern: IVF centroids, the q_search
@@ -53,74 +53,39 @@ object Bpe {
   final case class Merge(merge_round: Int, lhs: String, rhs: String,
                          merged: String, pair_count: Long)
 
-  /** Induce `merges` BPE merges from `docs(textCol)`. Returns one row
-    * per round: (merge_round, lhs, rhs, merged, pair_count).
-    */
-  def vocab(docs: DataFrame, textCol: String, merges: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    induceMerges(docs, textCol, merges).toDF()
-  }
-
-  /** Tokenize the corpus under its own induced vocabulary: run
-    * `merges` rounds of induction, then apply the learned merge table
-    * to every word and account tokens per `srcCol` group — the
-    * "how many training tokens does each source contribute" pass.
+  /** Tokenize a RAW whitespace token stream (`(source, word)`, one
+    * row per token occurrence — e.g. the stored positional postings)
+    * under an already-induced merge table `ms`: lowercase each token,
+    * keep `^[a-z]+$` words, apply the merges to every word and account
+    * tokens per `source` group — the "how many training tokens does
+    * each source contribute" pass. Induce once (training), apply to
+    * any corpus batch (one map-only pass each).
     *
     * Output per source: word instances, distinct word forms, base
     * (character) symbol count, post-merge BPE token count, and the
     * integer-permille compression ratio. All counters are exact
     * BIGINTs.
     *
-    * Scale shape: induction as in [[vocab]]; application is ONE
-    * map-only projection — the driver-held merge list unrolls into a
-    * chain of `merges` literal `replace` calls, fully inside
-    * whole-stage codegen — over a (source, word)-keyed frequency
-    * table, so apply cost is O(vocab), never O(corpus).
-    */
-  def tokenize(docs: DataFrame, textCol: String, srcCol: String,
-               merges: Int): DataFrame =
-    tokenizeWith(docs, textCol, srcCol, induceMerges(docs, textCol, merges))
-
-  /** [[tokenize]] against an ALREADY-induced merge table — the
-    * serving shape: induce once (training), apply to any corpus
-    * batch (one map-only pass each).
-    */
-  def tokenizeWith(docs: DataFrame, textCol: String, srcCol: String,
-                   ms: Seq[Merge]): DataFrame =
-    tokenizeFreqs(docs
-      .select(col(srcCol).as("source"),
-        explode(split(lower(col(textCol)), " ")).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy(col("source"), col("word"))
-      .agg(count(lit(1)).as("freq")), ms)
-
-  /** [[tokenizeWith]] from a RAW whitespace token stream
-    * (`(source, word)`, one row per token occurrence — e.g. the
-    * stored positional postings) instead of re-splitting corpus text
-    * (r17, guide §2.4 remove work): `split(lower(text), " ")` equals
-    * `lower` applied per token of `split(text, " ")` — lowercasing
-    * never creates or removes the `" "` delimiter, and the only
-    * position-dependent lowering (Greek final sigma) produces
-    * non-`[a-z]` characters both ways, so the `^[a-z]+$`-filtered
-    * word-frequency table is IDENTICAL (BpeSpec gates it on the real
-    * corpus).
+    * Lowering per token equals lowering the text before the `" "`
+    * split: lowercasing never creates or removes the delimiter, and
+    * the only position-dependent lowering (Greek final sigma) produces
+    * non-`[a-z]` characters both ways.
+    *
+    * Scale shape: application is ONE map-only projection — the
+    * driver-held merge list unrolls into a chain of `merges` literal
+    * `replace` calls, fully inside whole-stage codegen — over a
+    * (source, word)-keyed frequency table, so apply cost is O(vocab),
+    * never O(corpus).
     */
   private[graft] def tokenizeTermsWith(terms: DataFrame,
-                                       ms: Seq[Merge]): DataFrame =
-    tokenizeFreqs(terms
+                                       ms: Seq[Merge]): DataFrame = {
+    val enc0 = regexp_replace(col("word"), "(.)", "•$1•")
+    val encN = ms.foldLeft(enc0)((acc, m) => applyMerge(acc, m.lhs, m.rhs))
+    terms
       .select(col("source"), lower(col("word")).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
       .groupBy(col("source"), col("word"))
-      .agg(count(lit(1)).as("freq")), ms)
-
-  /** The ONE scoring tail behind [[tokenizeWith]] and
-    * [[tokenizeTermsWith]] — `words`: (source, word, freq).
-    */
-  private def tokenizeFreqs(words: DataFrame, ms: Seq[Merge]): DataFrame = {
-    val enc0 = regexp_replace(col("word"), "(.)", "•$1•")
-    val encN = ms.foldLeft(enc0)((acc, m) => applyMerge(acc, m.lhs, m.rhs))
-    words
+      .agg(count(lit(1)).as("freq"))
       .select(col("source"), col("freq"),
         length(col("word")).cast("long").as("n_chars"),
         size(split(trim(encN, "•"), "••")).cast("long").as("n_tok"))
@@ -140,35 +105,20 @@ object Bpe {
   private def applyMerge(w: Column, lhs: String, rhs: String): Column =
     replace(w, lit(s"•$lhs••$rhs•"), lit(s"•$lhs$rhs•"))
 
-  /** The induction loop; merge rules come back as a driver-side list
-    * (bounded: `merges` rows) so both [[vocab]] and [[tokenize]]
-    * consume them without re-running.
-    */
-  private[graft] def induceMerges(docs: DataFrame, textCol: String,
-                                  merges: Int): Seq[Merge] =
-    induceFromWords(docs
-      .select(explode(split(lower(col(textCol)), " ")).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("freq")), merges)
-
-  /** [[induceMerges]] from a RAW whitespace token stream (one `word`
-    * column, one row per occurrence — e.g. the stored positional
-    * postings): identical word-frequency table by the
-    * [[tokenizeTermsWith]] argument, so identical merges; the corpus
-    * text is never re-split.
+  /** Induce `merges` BPE merges from a RAW whitespace token stream
+    * (one `word` column, one row per occurrence — e.g. the stored
+    * positional postings), lowercased and `^[a-z]+$`-filtered as in
+    * [[tokenizeTermsWith]]. The merge rules come back as a driver-side
+    * list (bounded: `merges` rows), one [[Merge]] per round.
     */
   private[graft] def induceMergesFromTerms(terms: DataFrame,
-                                           merges: Int): Seq[Merge] =
-    induceFromWords(terms
+                                           merges: Int): Seq[Merge] = {
+    require(merges >= 1, "need at least one merge round")
+    val wordFreqs = terms
       .select(lower(col("word")).as("word"))
       .filter(col("word").rlike("^[a-z]+$"))
       .groupBy(col("word"))
-      .agg(count(lit(1)).as("freq")), merges)
-
-  private def induceFromWords(wordFreqs: DataFrame,
-                              merges: Int): Seq[Merge] = {
-    require(merges >= 1, "need at least one merge round")
+      .agg(count(lit(1)).as("freq"))
     // loop-scoped, restored on exit: lets AQE right-size the stages
     // that read each round's pinned word table — the Graph.pageRank
     // finding; without it the per-round materializations re-run wide

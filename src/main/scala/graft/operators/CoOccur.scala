@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Co-engagement / co-occurrence pair mining — the "frequently bought
   * together" primitive behind recommendation candidate generation and
@@ -32,99 +33,115 @@ import org.apache.spark.sql.functions._
   */
 object CoOccur {
 
-  /** Item pairs co-occurring within the same group: `(item_a, item_b,
-    * n_co)` with `item_a < item_b`, counting GROUPS (not rows), over
-    * groups of ≤ `maxBasket` distinct items.
+  /** Build-once MATERIALIZATION of the capped association-rule table
+    * (the B45 sketch-table discipline applied to co-occurrence):
+    * writes one row per unordered item pair `(item_a, item_b)`,
+    * `item_a < item_b`, co-occurring in at least `minCo` groups of
+    * ≤ `maxBasket` distinct items, to `path` as parquet. Serving
+    * consumers (co-purchase top-k, lift ranking, item-item
+    * similar-items) read the stored table instead of each re-paying
+    * the Σ|basket|² projection — at scale the projection is a
+    * scheduled build job, not a per-query cost. The support floor is
+    * part of the STORED table's contract: readers cannot see below
+    * `minCo`, so every consumer must want the same (or a higher)
+    * floor.
     *
-    * `finish` runs before the result pins (pass the caller's
-    * filter/top-k so only the bounded answer materializes); the
-    * result is an EAGER localCheckpoint at call time — with the
-    * default `finish = identity` the FULL pair table materializes
-    * here, so at scale always pass a bounding `finish` (or use
-    * [[buildRulesTable]] and read the stored table).
-    */
-  def pairCounts(df: DataFrame, groupCol: String, itemCol: String,
-                 maxBasket: Int,
-                 finish: DataFrame => DataFrame = identity): DataFrame =
-    // single-consumer pipeline (baskets feed exactly one agg): no
-    // basket pin to hold or release, unlike the rules variants below
-    finish(pairCountsOf(baskets(df, groupCol, itemCol, maxBasket)))
-      .localCheckpoint(true)
-
-  /** Association RULES from the same capped projection: each
-    * unordered pair annotated with the exact integer rule metrics —
-    * support (µ of baskets containing both), directional confidence
-    * (‰ of a's baskets that also hold b, and the reverse), and lift
-    * (µ, observed/independence co-rate). All counts come from the SAME
-    * capped basket set, so the skew guard governs every metric
-    * consistently; numerators ride DECIMAL(38,0) (n_co·N crosses 2^63
-    * past ~9e12 pair-basket products).
-    */
-  def associationRules(df: DataFrame, groupCol: String, itemCol: String,
-                       maxBasket: Int,
-                       finish: DataFrame => DataFrame = identity): DataFrame = {
-    // three consumers (pairs, item counts, group count) read the
-    // capped baskets: pin, finish inside the pin scope, checkpoint
-    // the bounded answer, release (the Graph.pageRank discipline)
-    val b = baskets(df, groupCol, itemCol, maxBasket).persist()
-    val out = finish(rulesOf(b, packedPairKeys(b))).localCheckpoint(true)
-    b.unpersist(blocking = false)
-    out
-  }
-
-  /** Build-once MATERIALIZATION of the capped rule table (the B45
-    * sketch-table discipline applied to co-occurrence): derives
-    * [[associationRules]] restricted to `n_co >= minCo` and writes it
-    * to `path` as parquet. Serving consumers (co-purchase top-k, lift
-    * ranking, item-item similar-items) read the stored table instead
-    * of each re-paying the Σ|basket|² projection — at scale the
-    * projection is a scheduled build job, not a per-query cost. The
-    * support floor is part of the STORED table's contract: readers
-    * cannot see below `minCo`, so every consumer must want the same
-    * (or a higher) floor.
+    * Each pair carries the exact integer rule metrics, all counted
+    * over the SAME capped basket set, so the skew guard governs every
+    * metric consistently (N = capped groups, n_a/n_b = capped groups
+    * holding the item):
+    *  - `n_co`: groups holding both items (groups, not rows);
+    *  - `support_micro` = (10⁶·n_co) div N;
+    *  - `conf_ab_permille` = (10³·n_co) div n_a — ‰ of a's baskets
+    *    that also hold b — and `conf_ba_permille` the reverse;
+    *  - `lift_micro` = (10⁶·n_co·N) div (n_a·n_b) — the observed over
+    *    the independence co-rate.
+    * Numerators ride DECIMAL(38,0) (n_co·N crosses 2^63 past ~9e12
+    * pair-basket products).
     */
   def buildRulesTable(df: DataFrame, groupCol: String, itemCol: String,
                       maxBasket: Int, minCo: Long, path: String): Unit = {
-    val b = baskets(df, groupCol, itemCol, maxBasket).persist()
-    rulesOf(b, packedPairKeys(b)).filter(col("n_co") >= minCo)
-      .write.mode("overwrite").parquet(path)
-    b.unpersist(blocking = false)
-  }
-
-  /** Whether the capped baskets' item ids provably fit an unsigned
-    * 32-bit word, so the pair-count aggregation can run on ONE packed
-    * long key instead of two item columns (guide §2.3 — narrower
-    * aggregation/shuffle keys; the pair-count exchange is the
-    * operator's dominant cost, Σ|basket|²·cap²/2 rows wide). The
-    * check is one map-only job over the PINNED basket arrays (sorted,
-    * so min/max are the end elements — never a fact-table scan), run
-    * only by the rules variants whose pin already exists. Ids outside
-    * [0, 2^32) — e.g. hashed or namespaced 64-bit ids — fall back to
-    * the two-column aggregation; both paths share the same unpacked
-    * output schema and are spec-gated equal.
-    */
-  private def packedPairKeys(baskets: DataFrame): Boolean = {
-    import org.apache.spark.sql.types._
-    val integral = baskets.schema("items").dataType match {
-      case ArrayType(LongType | IntegerType | ShortType | ByteType, _) => true
+    // capped baskets as SORTED DISTINCT item arrays, one row per
+    // surviving group: a single exchange on the group key (collect_set
+    // dedups in the map-side partials), groups above `maxBasket`
+    // filtered out by array size. The sort makes in-array pair
+    // expansion emit `item_a < item_b` directly. Three consumers
+    // (pairs, item counts, group count) read them: pin, write,
+    // release (the Graph.pageRank discipline).
+    val b = df.select(col(groupCol).as("g"), col(itemCol).as("it"))
+      .groupBy(col("g"))
+      .agg(sort_array(collect_set(col("it"))).as("items"))
+      .filter(size(col("items")) <= maxBasket)
+      .persist()
+    // pair ids pack into ONE long key when the capped baskets' item
+    // ids provably fit an unsigned 32-bit word (guide §2.3 — narrower
+    // aggregation/shuffle keys; the pair-count exchange is the
+    // operator's dominant cost, Σ|basket|²·cap²/2 rows wide). The
+    // check is one map-only job over the PINNED basket arrays (sorted,
+    // so min/max are the end elements — never a fact-table scan). Ids
+    // outside [0, 2^32) — e.g. hashed or namespaced 64-bit ids — fall
+    // back to the two-column aggregation; both paths share the same
+    // unpacked output schema and are spec-gated equal.
+    val packed = b.schema("items").dataType match {
+      case ArrayType(LongType | IntegerType | ShortType | ByteType, _) =>
+        val r = b.agg(
+          min(element_at(col("items"), 1)).cast(LongType),
+          max(element_at(col("items"), -1)).cast(LongType)).head
+        !r.isNullAt(0) && r.getLong(0) >= 0L && r.getLong(1) < (1L << 32)
       case _ => false
     }
-    integral && {
-      val r = baskets.agg(
-        min(element_at(col("items"), 1)).cast(LongType),
-        max(element_at(col("items"), -1)).cast(LongType)).head
-      !r.isNullAt(0) && r.getLong(0) >= 0L && r.getLong(1) < (1L << 32)
-    }
-  }
-
-  private def rulesOf(baskets: DataFrame, packed: Boolean): DataFrame = {
+    // every (i, j>i) index pair of each sorted basket array, expanded
+    // in-task (≤ maxBasket²/2 pairs per row) and counted — no basket
+    // self-join, no second exchange of basket rows. Two chained
+    // GENERATORS (posexplode the anchor, explode the tail slice)
+    // rather than one flatten/transform HOF building an array of
+    // structs: generators stream through whole-stage codegen while the
+    // HOF allocates every pair as an InternalRow outside it (measured
+    // warm at sf0.1: 0.5 s vs 1.0 s HOF vs 1.7 s self-join for the
+    // same 34k surviving pairs). The explicit repartition ahead of the
+    // generators: basket arrays are COMPACT (≤ cap items per row), so
+    // AQE's size heuristic would coalesce the exchange to ~1 partition
+    // and run the up-to-cap²/2 pair amplification serially in that
+    // task (the shingleIntersectionsPinned finding — never let a
+    // size-based optimizer decision gate a compute-amplifying
+    // operator). User-specified partition counts are exempt from AQE
+    // coalescing.
+    val pairs = b
+      .repartition(b.sparkSession.sessionState.conf.numShufflePartitions,
+        col("g"))
+      .select(col("items"), posexplode(col("items")).as(Seq("i", "item_a")))
+      .select(col("item_a"),
+        explode(slice(col("items"), col("i") + lit(2), size(col("items"))))
+          .as("item_b"))
+    val pairCounts =
+      if (!packed)
+        pairs.groupBy(col("item_a"), col("item_b"))
+          .agg(count(lit(1)).as("n_co"))
+      else {
+        // packed: the aggregation hashes/compares ONE long — pk =
+        // a·2^32 + b — instead of a two-long struct key, and the
+        // exchange row narrows by 8 bytes. The pack is a map-side
+        // projection fused into the generator stage; the unpack after
+        // the aggregation restores the exact (item_a, item_b) columns
+        // and dtype, so downstream is byte-identical to the two-column
+        // path (spec: packed ≡ fallback under a 2^33 id shift).
+        val elemType = b.schema("items").dataType
+          .asInstanceOf[ArrayType].elementType
+        pairs
+          .select((shiftleft(col("item_a").cast(LongType), 32) +
+            col("item_b").cast(LongType)).as("pk"))
+          .groupBy(col("pk")).agg(count(lit(1)).as("n_co"))
+          .select(shiftrightunsigned(col("pk"), 32).cast(elemType).as("item_a"),
+            col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast(elemType).as("item_b"),
+            col("n_co"))
+      }
     // n_i = baskets containing item i: one in-task explode of the
     // capped arrays, map-side combinable
-    val itemCnt = baskets.select(explode(col("items")).as("it"))
+    val itemCnt = b.select(explode(col("items")).as("it"))
       .groupBy(col("it")).agg(count(lit(1)).as("n_i"))
     // one array row per capped group, so N is a plain row count
-    val nGroups = baskets.agg(count(lit(1)).as("n_groups"))
-    pairCountsOf(baskets, packed)
+    val nGroups = b.agg(count(lit(1)).as("n_groups"))
+    pairCounts
       .join(itemCnt.select(col("it").as("item_a"), col("n_i").as("n_a")),
         "item_a")
       .join(itemCnt.select(col("it").as("item_b"), col("n_i").as("n_b")),
@@ -138,70 +155,8 @@ object CoOccur {
         expr("CAST((CAST(1000000 AS DECIMAL(38,0)) * n_co * n_groups)" +
           " div (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)")
           .as("lift_micro"))
-  }
-
-  /** Capped baskets as SORTED DISTINCT item arrays, one row per
-    * surviving group: a single exchange on the group key (collect_set
-    * dedups in the map-side partials), groups above `maxBasket`
-    * filtered out by array size. The sort makes in-array pair
-    * expansion emit `item_a < item_b` directly.
-    */
-  private def baskets(df: DataFrame, groupCol: String,
-                      itemCol: String, maxBasket: Int): DataFrame =
-    df.select(col(groupCol).as("g"), col(itemCol).as("it"))
-      .groupBy(col("g"))
-      .agg(sort_array(collect_set(col("it"))).as("items"))
-      .filter(size(col("items")) <= maxBasket)
-
-  /** Every (i, j>i) index pair of each sorted basket array, expanded
-    * in-task (≤ maxBasket²/2 pairs per row) and counted — no basket
-    * self-join, no second exchange of basket rows. Two chained
-    * GENERATORS (posexplode the anchor, explode the tail slice)
-    * rather than one flatten/transform HOF building an array of
-    * structs: generators stream through whole-stage codegen while the
-    * HOF allocates every pair as an InternalRow outside it (measured
-    * warm at sf0.1: 0.5 s vs 1.0 s HOF vs 1.7 s self-join for the
-    * same 34k surviving pairs).
-    */
-  private def pairCountsOf(baskets: DataFrame,
-                           packed: Boolean = false): DataFrame = {
-    // explicit repartition ahead of the generators: basket arrays are
-    // COMPACT (≤ cap items per row), so AQE's size heuristic would
-    // coalesce the exchange to ~1 partition and run the up-to-cap²/2
-    // pair amplification serially in that task (the
-    // shingleIntersections finding — never let a size-based optimizer
-    // decision gate a compute-amplifying operator). User-specified
-    // partition counts are exempt from AQE coalescing.
-    val nParts =
-      baskets.sparkSession.sessionState.conf.numShufflePartitions
-    val pairs = baskets
-      .repartition(nParts, col("g"))
-      .select(col("items"), posexplode(col("items")).as(Seq("i", "item_a")))
-      .select(col("item_a"),
-        explode(slice(col("items"), col("i") + lit(2), size(col("items"))))
-          .as("item_b"))
-    if (!packed)
-      pairs.groupBy(col("item_a"), col("item_b"))
-        .agg(count(lit(1)).as("n_co"))
-    else {
-      // packed fast path ([[packedPairKeys]] guard: ids in [0, 2^32)):
-      // the aggregation hashes/compares ONE long — pk = a·2^32 + b —
-      // instead of a two-long struct key, and the exchange row narrows
-      // by 8 bytes. The pack is a map-side projection fused into the
-      // generator stage; the unpack after the aggregation restores the
-      // exact (item_a, item_b) columns and dtype, so downstream is
-      // byte-identical to the two-column path (spec: packed ≡
-      // fallback under a 2^33 id shift).
-      import org.apache.spark.sql.types.{ArrayType, LongType}
-      val elemType = baskets.schema("items").dataType
-        .asInstanceOf[ArrayType].elementType
-      pairs
-        .select((shiftleft(col("item_a").cast(LongType), 32) +
-          col("item_b").cast(LongType)).as("pk"))
-        .groupBy(col("pk")).agg(count(lit(1)).as("n_co"))
-        .select(shiftrightunsigned(col("pk"), 32).cast(elemType).as("item_a"),
-          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast(elemType).as("item_b"),
-          col("n_co"))
-    }
+      .filter(col("n_co") >= minCo)
+      .write.mode("overwrite").parquet(path)
+    b.unpersist(blocking = false)
   }
 }

@@ -122,27 +122,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** MinHash-LSH candidates, exactly verified: band-bucket candidate
-    * generation (as [[minhashLsh]]) followed by a true word-n-gram
-    * Jaccard computation restricted to the candidates, emitting only
-    * pairs with exact jaccard >= `minJaccard`.
-    *
-    * This is the production dedup shape at corpus scale — LSH prunes
-    * the pair space from O(n²) to near-linear, then the exact verify
-    * (a join bounded by candidates × shingles-per-doc, NOT by the
-    * corpus) removes LSH's false positives. The output is therefore a
-    * deterministic, engine-independent pair set: identical to
-    * [[ngramJaccard]] at the same threshold whenever LSH recall at
-    * `minJaccard` is ~1, which the default parameters guarantee — with
-    * k=64, bands=32 (2 rows/band) a pair at jaccard j shares ≥1 band
-    * w.p. 1-(1-j²)^32: miss probability 1e-4 at j=0.5, 4e-10 at
-    * j=0.7. That determinism is what lets the driver gate this query
-    * against the exact-pair SQL oracle.
-    *
-    * One shingle table feeds signatures, sizes and the verify join
-    * (persisted; rows are two longs — cache lifetime note as in
-    * [[ngramJaccard]]).
-    */
   /** (doc_id, sh): hashed 8-byte word-n-gram shingles. */
   private def hashedShingles(docs: DataFrame, idCol: String,
                              textCol: String, shingleN: Int): DataFrame =
@@ -152,9 +131,6 @@ object Dedup {
         explode(TextFunctions.shinglesOfWords(col("w"), shingleN)).as("shRaw"))
       .select(col("doc_id"), xxhash64(col("shRaw")).as("sh"))
 
-  /** (doc_id, band, bucket): the LSH band-bucket index rows of a
-    * hashed-shingle table — the thing an incremental pipeline stores.
-    */
   /** One exploded column of (band, bucket) structs over k minhash
     * values; `minVal(i)` supplies the i-th (0-based) value. The ONE
     * banding arithmetic — shared by the signature-array path
@@ -174,6 +150,9 @@ object Dedup {
     }: _*))
   }
 
+  /** (doc_id, band, bucket): the LSH band-bucket index rows of a
+    * hashed-shingle table — the thing an incremental pipeline stores.
+    */
   private def bandTable(shingled: DataFrame, k: Int, bands: Int): DataFrame = {
     val mins = (0 until k).map(i => min(xxhash64(lit(i), col("sh"))).as(s"m$i"))
     shingled.groupBy(col("doc_id"))
@@ -183,83 +162,29 @@ object Dedup {
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
   }
 
-  /** Band-bucket self-join candidates over any band table (inline or
-    * stored). A pair sharing several bands would double-count in the
-    * verify aggregation: dedup candidates first (cheap — candidate
-    * volume, not corpus volume).
-    */
-  private def bandCandidates(banded: DataFrame): DataFrame =
-    banded.alias("a").join(banded.alias("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-  /** The ONE exact-verify scoring tail — shingle-intersection count →
-    * jaccard → threshold — shared by the inline path
-    * ([[minhashLshVerified]]) and the stored-index path
-    * ([[minhashPairsFromStored]]), so the two are identical by
-    * construction (the jaccardFromStored discipline).
-    */
-  private def verifyCandidates(cand: DataFrame, shingled: DataFrame,
-                               sizes: DataFrame,
-                               minJaccard: Double): DataFrame = {
-    val inter = cand
-      .join(shingled.select(col("doc_id").as("id_a"), col("sh")), "id_a")
-      .join(shingled.select(col("doc_id").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard",
-        round(col("inter").cast(DoubleType) /
-          (col("sz_a") + col("sz_b") - col("inter")), 3))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
-  def minhashLshVerified(docs: DataFrame, idCol: String, textCol: String,
-                         shingleN: Int = 3, k: Int = 64, bands: Int = 32,
-                         minJaccard: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val shingled = hashedShingles(docs, idCol, textCol, shingleN).persist()
-    // eager fill — see ngramJaccard: concurrent consumer jobs would
-    // otherwise serialize on per-block cache-fill locks
-    shingled.count()
-    val sizes = shingled.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-
-    val banded = bandTable(shingled, k, bands)
-
-    val pairs = verifyCandidates(bandCandidates(banded), shingled, sizes,
-      minJaccard)
-      // EAGER (localCheckpoint) so the corpus-scale shingle pin can be
-      // released before returning, instead of living until session
-      // eviction like the lazy ngramJaccard shape: at 10x the bench SF
-      // the retained shingle blocks alone drove rep-2 GC pressure
-      // inside a fixed 32g heap (r11 scale sweep, "Third point") while
-      // the pair output stays bounded by TRUE near-dup structure —
-      // materializing it costs one small write, freeing the pin wins
-      // the whole shingle footprint back.
-      .localCheckpoint(true)
-    shingled.unpersist(blocking = false)
-    pairs
-  }
-
-  /** Corpus SELF-dedup served entirely from a stored [[MinhashIndex]]
-    * — the [[minhashLshVerified]] pair set without re-running the
-    * corpus front end: candidate generation is a band-bucket
-    * self-join over the STORED band table (nBands 20-byte rows per
-    * doc, read columnar) and the exact verify reads the STORED
-    * hashed-shingle/size tables, so the per-run cost drops the
-    * shingle explode + k-hash signature aggregation — the dominant
-    * term — and tracks candidate volume plus a corpus-columnar scan.
-    * Output is identical to the inline path by construction: the
-    * band table was built by the same [[bandTable]] arithmetic at
-    * index build, and [[bandCandidates]]/[[verifyCandidates]] are the
-    * very operators the inline path runs (spec: stored ≡ inline).
-    * At 100 TB this is the snapshot-serving shape: the index is built
-    * (or [[extendIndex]]-maintained) once per corpus snapshot and
-    * every self-dedup pass is a read.
+  /** Corpus SELF-dedup served entirely from a stored [[MinhashIndex]]:
+    * exact-verified near-duplicate pairs `(id_a, id_b, jaccard)`,
+    * `id_a < id_b`, with word-n-gram Jaccard ≥ `minJaccard`. Candidate
+    * generation is a band-bucket self-join over the STORED band table
+    * (nBands 20-byte rows per doc, read columnar); the exact verify
+    * reads the STORED hashed-shingle/size tables. The per-run cost
+    * therefore skips the shingle explode + k-hash signature
+    * aggregation — the dominant term, paid once at index build — and
+    * tracks candidate volume plus a corpus-columnar scan. At 100 TB
+    * this is the snapshot-serving shape: the index is built (or
+    * [[extendIndex]]-maintained) once per corpus snapshot and every
+    * self-dedup pass is a read.
+    *
+    * Why the output is deterministic: LSH prunes the pair space from
+    * O(n²) to near-linear and the exact verify (a join bounded by
+    * candidates × shingles-per-doc, NOT by the corpus) removes its
+    * false positives, so the result equals [[ngramJaccard]] at the
+    * same threshold whenever LSH recall at `minJaccard` is ~1 — which
+    * the index defaults guarantee: with k=64, bands=32 (2 rows/band) a
+    * pair at jaccard j shares ≥1 band w.p. 1-(1-j²)^32, a miss
+    * probability of 1e-4 at j=0.5 and 4e-10 at j=0.7. That
+    * determinism is what lets the exact-pair DuckDB SQL oracle gate
+    * this query.
     *
     * The exact-verify inputs are PRUNED to candidate documents with a
     * semi-join before the shingle join (the [[admitBatch]]
@@ -278,14 +203,21 @@ object Dedup {
     * plausible `spark.driver.memory` and still broadcasts every
     * realistic candidate set. The candidate pair set is persisted for
     * its two consumers and the result is materialized
-    * (localCheckpoint) so the pin frees at return, as the inline path
-    * does.
+    * (localCheckpoint) so the pin frees at return.
     */
   def minhashPairsFromStored(index: MinhashIndex,
                              minJaccard: Double = 0.5,
                              maxBroadcastIdBytes: Long =
                                64L * 1024 * 1024): DataFrame = {
-    val cand = bandCandidates(index.bands).persist()
+    // a pair sharing several bands would double-count in the verify
+    // aggregation: dedup candidates first (candidate volume, not
+    // corpus volume)
+    val cand = index.bands.alias("a").join(index.bands.alias("b"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+      .persist()
     val candRows = cand.count() // eager fill — and the broadcast guard
     val ids0 = cand.select(col("id_a").as("doc_id"))
       .union(cand.select(col("id_b").as("doc_id"))).distinct()
@@ -298,8 +230,11 @@ object Dedup {
       else ids0
     val sh = index.shingles.join(ids, Seq("doc_id"), "left_semi")
     val sz = index.sizes.join(ids, Seq("doc_id"), "left_semi")
-    val out = verifyCandidates(cand, sh, sz, minJaccard)
-      .localCheckpoint(true)
+    val inter = cand
+      .join(sh.select(col("doc_id").as("id_a"), col("sh")), "id_a")
+      .join(sh.select(col("doc_id").as("id_b"), col("sh")), Seq("id_b", "sh"))
+      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
+    val out = jaccardScore(inter, sz, minJaccard).localCheckpoint(true)
     cand.unpersist(blocking = false)
     out
   }
@@ -403,7 +338,7 @@ object Dedup {
     * 20 bytes × nBands per batch doc); a batch too large to broadcast
     * should be split, or rebuilt into the index wholesale.
     * Verification and the
-    * recall argument are [[minhashLshVerified]]'s: at the default
+    * recall argument are [[minhashPairsFromStored]]'s: at the default
     * k=64/bands=32 the output equals the exact jaccard pair set
     * restricted to pairs touching the batch.
     */
@@ -555,27 +490,6 @@ object Dedup {
       index.shingleN, index.k, index.nBands)
   }
 
-  /** One-shot convenience wrapper: [[buildBandIndex]] on `corpus`
-    * (in-memory, not written to storage) + [[admitBatch]]. A real
-    * pipeline builds the index once with [[buildBandIndex]] /
-    * [[saveBandIndex]] and calls [[admitBatch]] per batch against the
-    * [[loadBandIndex]]-ed tables — admission cost then tracks the
-    * BATCH size (spec-proven: admission succeeds with the corpus
-    * files deleted).
-    */
-  def minhashIncrementalVerified(corpus: DataFrame, newBatch: DataFrame,
-                                 idCol: String, textCol: String,
-                                 shingleN: Int = 3, k: Int = 64,
-                                 bands: Int = 32,
-                                 minJaccard: Double = 0.5): DataFrame = {
-    val index = buildBandIndex(corpus, idCol, textCol, shingleN, k, bands)
-    // admitBatch materializes its result, so the one-shot index's
-    // corpus-shingle pin can be freed here rather than leak
-    val out = admitBatch(index, newBatch, idCol, textCol, minJaccard)
-    index.shingles.unpersist(blocking = false)
-    out
-  }
-
   /** SimHash near-duplicate pairs: 64-bit signature per document
     * (custom codegen'd kernel), candidate generation by pigeonhole on
     * `chunks` signature chunks (pairs within Hamming distance
@@ -645,8 +559,8 @@ object Dedup {
     *
     * Output: `(doc_id, cluster_id)` with `cluster_id` = the minimum
     * doc id in the component, for every doc that appears in a pair.
-    */
-  /** @param driverEdgeThreshold edge lists at or below this size take
+    *
+    * @param driverEdgeThreshold edge lists at or below this size take
     * a driver union-find instead of distributed rounds: one collect of
     * two-long rows (≤1 MB at the default) replaces O(log diameter)
     * join+checkpoint jobs — the same bounded-model tradeoff as the IVF
@@ -756,27 +670,6 @@ object Dedup {
   private def sumLabels(labels: DataFrame): Long =
     labels.agg(sum(col("label"))).head.getLong(0)
 
-  /** Span-level duplication signals — the position-aware counterpart
-    * of document-level dedup (the "dedup the substring, not the doc"
-    * idea from suffix-array training-data dedup): for every document,
-    * how many of its word `spanN`-gram positions also occur in some
-    * OTHER document, and the longest consecutive run of such
-    * positions. A long max run means a big verbatim block is shared
-    * even when the documents as wholes are distinct — the signal a
-    * pipeline uses to cut spans rather than drop docs.
-    *
-    * Shape at scale: positional span hashes (8-byte `xxhash64`, never
-    * the span text) → the shared-span set via one aggregation (`min ≠
-    * max` doc id — no distinct count needed) → semi-join back →
-    * gaps-and-islands (`pos - row_number`) for runs. Everything
-    * shuffles hashes and positions; the corpus text stays in the scan
-    * stage. The span table feeds two consumers (shared-set build and
-    * the semi-join), hence the persist (cache-lifetime note as in
-    * [[ngramJaccard]]).
-    *
-    * Output per doc: `(doc_id, n_spans, n_dup_spans, max_dup_run)`,
-    * zeros for docs shorter than `spanN` words.
-    */
   /** (doc_id, pos, sh): positional spanN-gram hash rows — THE span
     * definition, shared by [[duplicateSpans]] (detection) and
     * [[exciseSubstrings]] (rewrite). The rewrite is documented as "on
@@ -803,6 +696,27 @@ object Dedup {
       .persist()
   }
 
+  /** Span-level duplication signals — the position-aware counterpart
+    * of document-level dedup (the "dedup the substring, not the doc"
+    * idea from suffix-array training-data dedup): for every document,
+    * how many of its word `spanN`-gram positions also occur in some
+    * OTHER document, and the longest consecutive run of such
+    * positions. A long max run means a big verbatim block is shared
+    * even when the documents as wholes are distinct — the signal a
+    * pipeline uses to cut spans rather than drop docs.
+    *
+    * Shape at scale: positional span hashes (8-byte `xxhash64`, never
+    * the span text) → the shared-span set via one aggregation (`min ≠
+    * max` doc id — no distinct count needed) → semi-join back →
+    * gaps-and-islands (`pos - row_number`) for runs. Everything
+    * shuffles hashes and positions; the corpus text stays in the scan
+    * stage. The span table feeds two consumers (shared-set build and
+    * the semi-join), hence the persist (cache-lifetime note as in
+    * [[ngramJaccard]]).
+    *
+    * Output per doc: `(doc_id, n_spans, n_dup_spans, max_dup_run)`,
+    * zeros for docs shorter than `spanN` words.
+    */
   def duplicateSpans(docs: DataFrame, idCol: String, textCol: String,
                      spanN: Int = 5): DataFrame = {
     val w = split(col(textCol), " ")
@@ -1040,14 +954,15 @@ object Dedup {
   def ngramJaccard(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, minJaccard: Double = 0.5,
                    maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    val (inter, sizes) =
-      shingleIntersections(docs, idCol, textCol, shingleN, maxShingleDf)
+    val (inter, sizes, _) =
+      shingleIntersectionsPinned(docs, idCol, textCol, shingleN, maxShingleDf)
     jaccardScore(inter, sizes, minJaccard)
   }
 
-  /** The Jaccard scoring tail shared by the inline and STORED paths —
-    * one definition, so the stored-table variant is result-identical
-    * by construction.
+  /** The Jaccard scoring tail — per-pair intersection counts `inter`
+    * (id_a, id_b, inter) over per-doc set sizes `sizes` (doc_id, sz) —
+    * shared by [[ngramJaccard]], [[jaccardFromStored]] and
+    * [[minhashPairsFromStored]]'s exact verify.
     */
   private def jaccardScore(inter: DataFrame, sizes: DataFrame,
                            minJaccard: Double): DataFrame =
@@ -1060,7 +975,7 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
-  /** Build-once STORE of [[shingleIntersections]]' two outputs — the
+  /** Build-once STORE of [[shingleIntersectionsPinned]]' two outputs — the
     * df-capped candidate-pair intersection counts and the per-doc
     * shingle-set sizes — for a fixed (shingleN, maxShingleDf). Both
     * are corpus-constant per snapshot and bounded by true near-dup
@@ -1072,7 +987,7 @@ object Dedup {
     * shingle explosion is the dominant dedup cost and it is paid
     * exactly once per snapshot here. The corpus-scale shingle pin is
     * released before returning (everything is materialized to
-    * parquet, unlike the lazy inline path which must keep it).
+    * parquet, unlike [[ngramJaccard]]'s lazy plan, which must keep it).
     */
   def buildShinglePairs(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, maxShingleDf: Int,
@@ -1097,39 +1012,25 @@ object Dedup {
     jaccardScore(ParquetIO.read(spark, s"$path/inter"),
       ParquetIO.read(spark, s"$path/sizes"), minJaccard)
 
-  /** Containment pairs served from a [[buildShinglePairs]] dir. */
-  def containmentFromStored(spark: org.apache.spark.sql.SparkSession,
-                            path: String, minPermille: Long): DataFrame =
-    containmentScore(ParquetIO.read(spark, s"$path/inter"),
-      ParquetIO.read(spark, s"$path/sizes"), minPermille)
-
-  /** Directional shingle CONTAINMENT pairs: C(sub ⊆ sup) =
-    * |S(sub) ∩ S(sup)| / |S(sub)| in exact permille, emitted for the
-    * smaller-shingle-set document of each candidate pair. Jaccard
+  /** Directional shingle CONTAINMENT pairs served from a
+    * [[buildShinglePairs]] dir: `(sub_id, sup_id, cont_permille)` with
+    * C(sub ⊆ sup) = |S(sub) ∩ S(sup)| / |S(sub)| in exact permille,
+    * emitted for the smaller-shingle-set document of each candidate
+    * pair. Jaccard
     * misses subset duplication by construction — an excerpt fully
     * contained in a 10×-longer document scores J = |A|/|B| ≈ 0.1 but
     * C = 1000‰ — and excerpt/syndication containment is what a
     * crawl-scale LLM corpus actually contains (Lee et al. 2022 §5
     * discusses exactly this asymmetry). Same inverted-index candidate
-    * generation as [[ngramJaccard]] (df-capped posting lists, never an
+    * pairs as [[jaccardFromStored]] (df-capped posting lists, never an
     * all-pairs join); the only new arithmetic is the integer permille
     * ratio against the SMALLER set size, which keeps the gate
     * hash-exact.
     */
-  def containment(docs: DataFrame, idCol: String, textCol: String,
-                  shingleN: Int = 3, minPermille: Long = 800,
-                  maxShingleDf: Int = Int.MaxValue): DataFrame = {
-    val (inter, sizes) =
-      shingleIntersections(docs, idCol, textCol, shingleN, maxShingleDf)
-    containmentScore(inter, sizes, minPermille)
-  }
-
-  /** The containment scoring tail shared by the inline and STORED
-    * paths — one definition, as [[jaccardScore]].
-    */
-  private def containmentScore(inter: DataFrame, sizes: DataFrame,
-                               minPermille: Long): DataFrame =
-    inter
+  def containmentFromStored(spark: org.apache.spark.sql.SparkSession,
+                            path: String, minPermille: Long): DataFrame = {
+    val sizes = ParquetIO.read(spark, s"$path/sizes")
+    ParquetIO.read(spark, s"$path/inter")
       .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
       // sub = the smaller shingle set (ties break to id_a, which is
@@ -1141,24 +1042,14 @@ object Dedup {
           .as("sup_id"),
         expr("(1000 * inter) div least(sz_a, sz_b)").as("cont_permille"))
       .filter(col("cont_permille") >= minPermille)
-
-  /** Shared candidate machinery for [[ngramJaccard]] and
-    * [[containment]]: returns (per-pair shingle intersection counts,
-    * per-doc shingle-set sizes).
-    */
-  private def shingleIntersections(
-      docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, maxShingleDf: Int): (DataFrame, DataFrame) = {
-    val (inter, sizes, _) =
-      shingleIntersectionsPinned(docs, idCol, textCol, shingleN, maxShingleDf)
-    (inter, sizes)
   }
 
-  /** [[shingleIntersections]] plus the PINNED shingle table, for
-    * callers that materialize both outputs and can release the
-    * corpus-scale pin themselves ([[buildShinglePairs]]); the
-    * two-tuple variant keeps the lazy inline contract (the pin lives
-    * until session eviction because the result is lazy).
+  /** Candidate machinery of [[ngramJaccard]] and
+    * [[buildShinglePairs]]: (per-pair shingle intersection counts,
+    * per-doc shingle-set sizes, the PINNED shingle table). The build
+    * materializes both outputs and releases the corpus-scale pin
+    * itself; [[ngramJaccard]] returns a lazy plan, so its pin lives
+    * until session eviction.
     */
   private def shingleIntersectionsPinned(
       docs: DataFrame, idCol: String, textCol: String,

@@ -46,25 +46,6 @@ import org.apache.spark.sql.functions._
   */
 object Postings {
 
-  /** Tokenize once and write the stream + dictionary tables under
-    * `path`.
-    * The per-doc-DISTINCT streams are computed IN-ARRAY here — while
-    * the token array is still in hand, `array_distinct` is a map-side
-    * pass — so distinct-posting consumers (boolean search, BM25 term
-    * picking) never pay a corpus-wide dedup exchange at query time:
-    * their aggregations stay vocabulary-sized, exactly as when they
-    * tokenized inline.
-    *
-    * PRECONDITION: `docs` must carry one row per `idCol` value. The
-    * per-doc distincts are in-array (per ROW), so a duplicated doc_id
-    * would contribute its bigrams once PER ROW to `bigram_df` —
-    * where the inline pipelines this build replaced ran a global
-    * (doc, bigram) distinct and counted such a doc once. The corpus
-    * tables feeding this build are keyed by doc_id, so the global
-    * distinct would be a corpus-wide exchange paid only to defend an
-    * input shape that never occurs; callers with multi-row docs must
-    * dedup upstream.
-    */
   /** `(doc_id, source, w)` tokenized rows — the one tokenize pass all
     * seven stream writers share (build AND batch admission, so the two
     * paths cannot drift).
@@ -118,9 +99,10 @@ object Postings {
       .select(col("doc_id"), col("source"),
         col("p.bh").as("bh"), col("p.bl").as("bl"))
 
-  // the BM25 tokenization contract (Relevance.bm25RankTok): lowercase
-  // then keep [a-z]+ only. Lowercasing never produces or consumes a
-  // space, so lower-then-split ≡ split-then-lower.
+  // the BM25 tokenization contract, owned here and read by
+  // Relevance.bm25RankStored: lowercase then keep [a-z]+ only.
+  // Lowercasing never produces or consumes a space, so
+  // lower-then-split ≡ split-then-lower.
   private def bm25Toks = expr(
     "filter(transform(w, x -> lower(x)), x -> x rlike '^[a-z]+$')")
 
@@ -138,7 +120,7 @@ object Postings {
   /** `(doc_id, dl)` — BM25 document lengths (count of lowered
     * `[a-z]+` tokens), map-only in-array; rows only for docs with
     * ≥ 1 matching token, exactly the row set Σtf over [[tfLowerRows]]
-    * yields (the inline path derives dl from tf).
+    * yields.
     */
   private def dlLowerRows(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"),
@@ -147,17 +129,17 @@ object Postings {
 
   /** `(doc_id, th, tl, tf)` — term frequencies over the RAW
     * whitespace tokens, keyed by the 16-byte (xxhash64, length) term
-    * keys the TF-IDF scoring tail aggregates and joins on (r16
+    * keys the TF-IDF scoring aggregates and joins on (r16
     * verdict task 3). Storing the HASH-KEYED aggregation — not a
     * (doc, term, tf) string table — matters twice: q_tfidf's per-run
     * plan needs NO re-aggregation at all (a re-agg over the stored
-    * table measured 2× the inline CPU at bench conf, because the
+    * table measured 2× the token-stream CPU at bench conf, because the
     * small hash-scattered table reads as one scan task and its
     * single-task hash agg thrashes), and the stored rows are
     * fixed-width. Per-document row sets, so batch admission is a
     * plain append (the hashes are deterministic). Term strings
     * re-attach per run through the vocabulary-sized `df_raw`
-    * dictionary, exactly as the inline path's dictionary join does.
+    * dictionary.
     */
   private def tfHashedRows(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"), explode(col("w")).as("term"))
@@ -173,7 +155,7 @@ object Postings {
     * tf_raw table inflated the doc-level partials 32× because tf_raw
     * files are hash-scattered by (doc, term), not doc-clustered).
     * Row set = docs with a non-null token array, exactly the docs the
-    * token stream (and so the inline dl aggregation) covers.
+    * token stream covers.
     */
   private def dlRawRows(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"),
@@ -203,9 +185,27 @@ object Postings {
     } finally toks.unpersist(blocking = false)
   }
 
-  /** Tokenize once and write the stream + dictionary tables, with the
-    * independent stream writers submitted from a small thread pool
-    * (guide §2.6: concurrent jobs back-fill each other's task tails —
+  /** Tokenize once and write the stream + dictionary tables under
+    * `path`.
+    * The per-doc-DISTINCT streams are computed IN-ARRAY here — while
+    * the token array is still in hand, `array_distinct` is a map-side
+    * pass — so distinct-posting consumers (boolean search, BM25 term
+    * picking) never pay a corpus-wide dedup exchange at query time:
+    * their aggregations stay vocabulary-sized, exactly as when they
+    * tokenized inline.
+    *
+    * PRECONDITION: `docs` must carry one row per `idCol` value. The
+    * per-doc distincts are in-array (per ROW), so a duplicated doc_id
+    * would contribute its bigrams once PER ROW to `bigram_df` —
+    * where the inline pipelines this build replaced ran a global
+    * (doc, bigram) distinct and counted such a doc once. The corpus
+    * tables feeding this build are keyed by doc_id, so the global
+    * distinct would be a corpus-wide exchange paid only to defend an
+    * input shape that never occurs; callers with multi-row docs must
+    * dedup upstream.
+    *
+    * The independent stream writers are submitted from a small thread
+    * pool (guide §2.6: concurrent jobs back-fill each other's task tails —
     * the seven writers are independent jobs over the one PRE-FILLED
     * tokenize cache, so run sequentially each writer's straggler tail
     * leaves cores idle; measured r16 at `local[32]`: sequential

@@ -15,12 +15,12 @@ import org.apache.spark.sql.functions._
   * implementations. Rankings agree with log-idf whenever df ordering
   * agrees, which is what the top-k is for.
   *
-  * Scale shape: the explode is the unavoidable token pass; `tf` and
-  * `dl` are map-side-combinable hash aggregations; `df` aggregates the
-  * already-distinct (term, doc) pairs of `tf`, so it never re-reads
-  * text; the vocabulary-sized `df` table enters the scoring join
-  * broadcast. The final per-document top-k partitions by doc — each
-  * partition is one document's vocabulary, never the corpus.
+  * Scale shape: the token pass and the `tf`/`dl` aggregations run
+  * once per corpus snapshot, in [[Postings.build]]. Per run, `df`
+  * aggregates the stored (doc, term)-distinct `tf` rows, so it never
+  * re-reads text; the vocabulary-sized `df` table enters the scoring
+  * join broadcast. The final per-document top-k partitions by doc —
+  * each partition is one document's vocabulary, never the corpus.
   *
   * BIGINT envelope: `1e6·tf·N` must stay under 2^63, i.e. tf·N ≤
   * 9.2·10^12 (at a billion docs, per-doc term frequency ≤ 9200). Past
@@ -28,57 +28,20 @@ import org.apache.spark.sql.functions._
   */
 object Relevance {
 
-  /** Top-`k` salient terms per document: `(doc_id, term, rank,
-    * score_micro)`, rank dense 1..k by (score desc, term asc).
-    */
-  def salientTerms(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int): DataFrame =
-    salientTermsTok(docs.select(col(idCol).as("doc_id"),
-      explode(split(col(textCol), " ")).as("term")),
-      docs.agg(count(lit(1)).as("n_docs")), k)
-
-  /** Token-stream variant: `tok0` is the raw `(doc_id, term)`
-    * whitespace-token stream (e.g. [[Postings.tokens]]) and `nDocs`
-    * a 1-row `n_docs` count of ALL documents (tokenless docs
-    * included — they still belong in the idf denominator). Same
-    * output as [[salientTerms]]; the stored-postings serving path
-    * skips the per-query split + explode of the corpus text.
-    */
-  def salientTermsTok(tok0: DataFrame, nDocs: DataFrame,
-                      k: Int): DataFrame = {
-    // Aggregations and joins run on 16-byte (xxhash64, len) term keys
-    // — the exact-dedup key discipline — so the corpus-sized tf
-    // exchange moves fixed-width keys, never term strings; strings
-    // re-attach through a vocabulary-sized dictionary at the end.
-    // Measured at sf0.5 (warm, cache cleared per run): string-keyed
-    // 2.50 s / 21.2 MB shuffled vs hash-keyed 1.92 s / 16.3 MB,
-    // identical output. (The r10-measured rejections still hold:
-    // deriving dl from tf and eager-persisting tf both lose to
-    // independent aggregations pipelining from the scan.)
-    val tok = tok0
-      .select(col("doc_id"), xxhash64(col("term")).as("th"),
-        length(col("term")).as("tl"), col("term"))
-    val tf = tok.groupBy("doc_id", "th", "tl")
-      .agg(count(lit(1)).as("tf"))
-    val df = tf.groupBy("th", "tl").agg(count(lit(1)).as("df"))
-    val dl = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val dict = tok.select(col("th"), col("tl"), col("term")).distinct()
-    salientTail(tf, df, dl, dict, nDocs, k)
-  }
-
-  /** [[salientTermsTok]] served from a STORED postings snapshot
-    * ([[Postings.build]]'s `tf_raw`/`df_raw` tables — the
-    * bm25RankStored discipline applied to TF-IDF): the per-run plan
-    * starts from the (doc, term)-distinct stored tf table instead of
-    * aggregating the corpus token stream, dl is Σtf per doc (≡ the
-    * doc's token count), and the dictionary is a map-only projection
-    * of the vocabulary-sized df_raw table instead of a corpus-wide
-    * distinct. The (doc, th, tl) re-aggregation (sum of per-term
-    * counts) reproduces the inline path's hash-key grouping exactly —
-    * including the collapse of a hypothetical (hash, len) collision —
-    * so stored ≡ inline by construction; the scoring tail below is
-    * the SAME definition (spec: stored ≡ inline over the real
-    * corpus).
+  /** Top-`k` salient terms per document, served from a STORED
+    * postings snapshot ([[Postings.build]]'s `tf_hashed`, `dl_raw` and
+    * `df_raw` tables): `(doc_id, term, rank, score_micro)`, rank dense
+    * 1..k by (score desc, term asc). Terms are the raw whitespace
+    * tokens; `nDocs` is a 1-row `n_docs` count of ALL documents
+    * (tokenless docs included — they still belong in the idf
+    * denominator).
+    *
+    * Aggregations and joins run on 16-byte (xxhash64, len) term keys
+    * — the exact-dedup key discipline — so no exchange moves term
+    * strings; strings re-attach through the vocabulary-sized df_raw
+    * dictionary at the end. Measured at sf0.5 (warm, cache cleared per
+    * run): string-keyed 2.50 s / 21.2 MB shuffled vs hash-keyed
+    * 1.92 s / 16.3 MB, identical output.
     */
   def salientTermsStored(spark: org.apache.spark.sql.SparkSession,
                          path: String, nDocs: DataFrame,
@@ -87,40 +50,26 @@ object Relevance {
     // anywhere (a (doc, term, tf) string table + re-agg was tried
     // first and REVERTED on measurement: at bench conf the small
     // hash-scattered table reads as one task and the single-task
-    // re-agg measured 2× the inline CPU; storing the hash-keyed
+    // re-agg measured 2× the token-stream CPU; storing the hash-keyed
     // aggregation itself removes the re-agg instead of parallelizing
     // it). The ONE exchange this path keeps is a doc_id repartition
     // of the scan, placed BEFORE the scoring joins: it moves the
     // fixed-width (doc, th, tl, tf) rows — narrower than the scored
-    // rows the tail's window would otherwise exchange (term strings,
-    // scores attached) — it spreads the scoring pipeline across the
-    // cluster when the scan itself is few-task, and the window's
-    // partitionBy(doc_id) is then already satisfied, so the tail
-    // plans NO further exchange. df reads the UN-repartitioned scan
-    // (its broadcast subtree would otherwise pay the repartition a
-    // second time — measured +0.8 MB). Keyless of a partition count,
-    // so AQE right-sizes the exchange from bytes at scale.
+    // rows the window would otherwise exchange (term strings, scores
+    // attached) — it spreads the scoring pipeline across the cluster
+    // when the scan itself is few-task, and the window's
+    // partitionBy(doc_id) is then already satisfied, so scoring plans
+    // NO further exchange. df reads the UN-repartitioned scan (its
+    // broadcast subtree would otherwise pay the repartition a second
+    // time — measured +0.8 MB). Keyless of a partition count, so AQE
+    // right-sizes the exchange from bytes at scale.
     val tfScan = Postings.tfHashed(spark, path)
     val df = tfScan.groupBy("th", "tl").agg(count(lit(1)).as("df"))
-    val dl = Postings.dlRaw(spark, path)
     val dict = Postings.dfRaw(spark, path)
       .select(xxhash64(col("term")).as("th"),
         length(col("term")).as("tl"), col("term"))
-    salientTail(tfScan.repartition(col("doc_id")), df, dl, dict, nDocs, k)
-  }
-
-  /** The ONE TF-IDF scoring tail — the integer score join and the
-    * per-doc top-k window — shared by the inline
-    * ([[salientTermsTok]]) and stored ([[salientTermsStored]]) paths
-    * so the two are identical by construction. `df` is passed in
-    * (both callers derive it from the same hash-keyed tf rows; the
-    * stored path must read the un-repartitioned scan for it).
-    */
-  private def salientTail(tf: DataFrame, df: DataFrame, dl: DataFrame,
-                          dict: DataFrame, nDocs: DataFrame,
-                          k: Int): DataFrame = {
-    val scored = tf
-      .join(dl, "doc_id")
+    val scored = tfScan.repartition(col("doc_id"))
+      .join(Postings.dlRaw(spark, path), "doc_id")
       .join(broadcast(df), Seq("th", "tl"))
       .crossJoin(broadcast(nDocs))
       .withColumn("score_micro",
@@ -133,11 +82,12 @@ object Relevance {
       .select(col("doc_id"), col("term"), col("rank"), col("score_micro"))
   }
 
-  /** Integer-exact BM25 ranked retrieval: top-`k` documents for a
+  /** Integer-exact BM25 ranked retrieval served from a STORED
+    * postings snapshot ([[Postings.build]]): top-`k` documents for a
     * term-set query, scored with the real BM25 shape — saturating tf
     * with length normalization (k1, b = 3/4) times a rational
     * RSJ-monotone idf — but in pure integer arithmetic so both
-    * engines land on identical scores (salientTerms' argument; a
+    * engines land on identical scores (the object doc's argument; a
     * float log/division would wobble in the last ulp):
     *
     *   idf_micro = (10⁶·(N − df)) div (N + df)
@@ -145,72 +95,23 @@ object Relevance {
     *                 div (4·avgdl·tf + k1·(avgdl + 3·dl))
     *
     * (the b = 3/4 normalizer multiplied through by 4·avgdl, with
-    * avgdl = total_tokens div N floored by convention).
+    * avgdl = total_tokens div N floored by convention). Terms follow
+    * [[Postings]]' BM25 tokenization contract (lowercased `[a-z]+`
+    * tokens); `nDocs` is a 1-row `n_docs` count of all documents.
     *
-    * Scale shape: postings are FILTERED to the query's terms before
-    * any join — the classic inverted-index discipline; dl joins on
-    * doc over the posting-sized side only, df/stats enter broadcast,
-    * and the result is a TakeOrdered(k), never a global sort. Ranks
-    * attach on the driver to the ≤k collected rows (the bounded-model
-    * pattern) — no window at all, so the engine keeps its
-    * no-unpartitioned-window property; the result is a lineage-free
-    * k-row local relation, which downstream fusions join for free.
-    */
-  def bm25Rank(docs: DataFrame, idCol: String, textCol: String,
-               queryTerms: Seq[String], k: Int, k1: Int = 2): DataFrame =
-    bm25RankTok(docs.select(col(idCol).as("doc_id"),
-      explode(split(col(textCol), " ")).as("term")),
-      docs.agg(count(lit(1)).as("n_docs")), queryTerms, k, k1)
-
-  /** Token-stream variant: `tok0` is the raw `(doc_id, term)`
-    * whitespace-token stream (e.g. [[Postings.tokens]]); the
-    * lowercasing + `[a-z]+` filter happen HERE so both overloads
-    * share one tokenization contract (lowercasing never produces or
-    * consumes a space, so lower-then-split ≡ split-then-lower).
-    * `nDocs` is a 1-row `n_docs` count of all documents.
-    */
-  def bm25RankTok(tok0: DataFrame, nDocs: DataFrame,
-                  queryTerms: Seq[String], k: Int,
-                  k1: Int = 2): DataFrame = {
-    val tok = tok0.select(col("doc_id"), lower(col("term")).as("term"))
-      .filter(col("term").rlike("^[a-z]+$"))
-    // ONE token-scale pass: dl, df, and the corpus token total all
-    // derive from the (doc, term) tf table (Σtf per doc ≡ the doc's
-    // filtered token count; the old shape re-tokenized the corpus for
-    // dl and again for n_tokens — three explodes for one). tf pins
-    // across its three consumers and releases before return.
-    val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist()
-    try { // release-on-failure: same rationale as pqTrain
-    tf.count() // eager fill — broadcast-side consumers run as
-               // concurrent futures (see ngramJaccard's lock finding)
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = nDocs
-      .crossJoin(tf.agg(sum(col("tf")).as("n_tokens")))
-      .select(col("n_docs"), expr("n_tokens div n_docs").as("avgdl"))
-    bm25ScoreTail(tf.filter(col("term").isin(queryTerms: _*)), dl,
-      df.filter(col("term").isin(queryTerms: _*)), stats, k, k1)
-    // the k collected rows are the whole result; the finally drops
-    // the tf pin even when a consumer job fails mid-flight
-    } finally tf.unpersist(blocking = false)
-  }
-
-  /** [[bm25RankTok]] served from a STORED postings snapshot
-    * ([[Postings.build]]) — the inverted-index serving shape: the
-    * per-run plan reads the query terms' posting lists out of the
+    * Serving shape: the query terms' posting lists come out of the
     * stored tf table (the term filter reaches the parquet scan as a
     * pushed predicate), the per-term df out of the vocabulary-sized
     * dictionary, and document lengths from the stored dl column;
-    * nothing token-scale is aggregated per query. Identical output by
-    * construction: the stored tables are built by the same
-    * expressions the inline path aggregates ([[Postings]] shares the
-    * tokenization contract) and the scoring tail below is the SAME
-    * definition the inline path calls (the jaccardFromStored
-    * discipline; spec: stored ≡ inline).
-    *
-    * `n_tokens` (for avgdl) sums the stored dl column — a doc-count
-    * scan of one long column, not a token-scale pass.
+    * nothing token-scale is aggregated per query. dl joins on doc
+    * over the posting-sized side only, df/stats enter broadcast, and
+    * the result is a TakeOrdered(k), never a global sort. `n_tokens`
+    * (for avgdl) sums the stored dl column — a doc-count scan of one
+    * long column. Ranks attach on the driver to the ≤k collected rows
+    * (the bounded-model pattern) — no window at all, so the engine
+    * keeps its no-unpartitioned-window property; the result is a
+    * lineage-free k-row local relation, which downstream fusions join
+    * for free.
     */
   def bm25RankStored(spark: org.apache.spark.sql.SparkSession,
                      path: String, nDocs: DataFrame,
@@ -220,27 +121,12 @@ object Relevance {
     val stats = nDocs
       .crossJoin(dl.agg(sum(col("dl")).as("n_tokens")))
       .select(col("n_docs"), expr("n_tokens div n_docs").as("avgdl"))
-    bm25ScoreTail(
-      Postings.tfLower(spark, path)
-        .filter(col("term").isin(queryTerms: _*)),
-      dl,
-      Postings.dfLower(spark, path)
-        .filter(col("term").isin(queryTerms: _*)),
-      stats, k, k1)
-  }
-
-  /** The ONE BM25 scoring tail — posting-filtered tf ⋈ dl ⋈
-    * broadcast df/stats → integer score → TakeOrdered(k) → driver
-    * rank attach — shared by the inline ([[bm25RankTok]]) and stored
-    * ([[bm25RankStored]]) paths so the two are identical by
-    * construction. `tfq`/`dfq` are already filtered to the query's
-    * terms.
-    */
-  private def bm25ScoreTail(tfq: DataFrame, dl: DataFrame, dfq: DataFrame,
-                            stats: DataFrame, k: Int, k1: Int): DataFrame = {
+    val tfq = Postings.tfLower(spark, path)
+      .filter(col("term").isin(queryTerms: _*))
     val topk = tfq
       .join(dl, "doc_id")
-      .join(broadcast(dfq), "term")
+      .join(broadcast(Postings.dfLower(spark, path)
+        .filter(col("term").isin(queryTerms: _*))), "term")
       .crossJoin(broadcast(stats))
       .withColumn("idf_micro",
         expr("(1000000L * (n_docs - df)) div (n_docs + df)"))
@@ -262,8 +148,7 @@ object Relevance {
         "rank", org.apache.spark.sql.types.LongType, nullable = false))
     val ranked = rows.zipWithIndex.map { case (r, i) =>
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1).toLong) }
-    tfq.sparkSession
-      .createDataFrame(java.util.Arrays.asList(ranked: _*), schema)
+    spark.createDataFrame(java.util.Arrays.asList(ranked: _*), schema)
       .select(col("doc_id"), col("rank"), col("score_nano"),
         col("n_hit_terms"))
   }

@@ -182,16 +182,6 @@ object Similarity {
         round(col("sim"), 3).as("cosine"))
   }
 
-  /** Train-then-search convenience ([[ivfTrain]] + [[ivfSearch]]).
-    * One-shot jobs only — anything serving repeated queries should
-    * train once and call [[ivfSearch]] with the saved model.
-    */
-  def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-              queryMaxId: Long, k: Int, nlist: Int = 16, nprobe: Int = 4,
-              iters: Int = 3, trainFraction: Double = 1.0): DataFrame =
-    ivfSearch(ivfTrain(embeddings, idCol, vecCol, nlist, iters, trainFraction),
-      embeddings, idCol, vecCol, queryMaxId, k, nprobe)
-
   /** The STORED half of IVF serving — the minhash band-index
     * discipline ([[graft.operators.Dedup.MinhashIndex]]) applied to
     * ANN. [[ivfSearch]] re-assigns the whole corpus to lists on every
@@ -382,8 +372,8 @@ object Similarity {
     *
     * Ordering inside the approximate phase is (adc distance, id) —
     * fully deterministic for a fixed model.
-    */
-  /** @param rerankFactor ADC keeps a shortlist of `k·rerankFactor`
+    *
+    * @param rerankFactor ADC keeps a shortlist of `k·rerankFactor`
     * candidates per query and the exact re-rank selects the final k
     * from it — the standard shortlist trick: ADC's job is to not
     * MISS a true neighbor, the exact pass fixes its ordering noise.
@@ -665,8 +655,8 @@ object Similarity {
     * volume. Candidates come from equi-joins on (table, bucket), so a
     * probe touches ~tables/2^bits of the corpus instead of scanning
     * it; recall vs [[bruteForceTopK]] is checked in the spec.
-    */
-  /** @param multiProbe when true, each query also probes the `bits`
+    *
+    * @param multiProbe when true, each query also probes the `bits`
     * buckets at Hamming distance 1 from its signature in every table —
     * the classic multi-probe trick: recall of ~(bits+1)x more buckets
     * for the same index size, at query-side cost only.

@@ -411,8 +411,8 @@ object DedupQueries {
     // (shared with dedup_minhash_inc) unioned with the planted-docs
     // index covers the entire input, so the per-run plan reads stored
     // band/shingle/size parquet and never re-runs the shingle +
-    // k-hash signature front end (the inline path stays, spec-proven
-    // identical — Dedup.minhashPairsFromStored).
+    // k-hash signature front end (Dedup.minhashPairsFromStored;
+    // DedupSpec checks it equals the exact ngramJaccard pair set).
     Query("dedup_minhash",
       """WITH docs AS (
         |  SELECT doc_id, text FROM documents

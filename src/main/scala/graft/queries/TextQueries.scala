@@ -17,7 +17,7 @@ object TextQueries {
     * corpus's df-rank-10/20/30 terms (mid-frequency — discriminative
     * but with overlapping posting lists), read from the STORED df
     * dictionary (_build_postings/df_lower). df counts DOCS containing
-    * the term, matching bm25Rank's df table and the oracle's ranked
+    * the term, matching bm25RankStored's df table and the oracle's ranked
     * CTE, and the per-run pull is a 30-row TakeOrdered over an
     * already-aggregated vocabulary-sized table — no per-run
     * aggregation at all.
@@ -28,7 +28,7 @@ object TextQueries {
     Seq(top(9).getString(0), top(19).getString(0), top(29).getString(0))
   }
 
-  /** DuckDB mirror of Relevance.bm25Rank over the documents corpus
+  /** DuckDB mirror of Relevance.bm25RankStored over the documents corpus
     * with the df-rank-10/20/30 query terms: identical integer BM25
     * (k1 = 2, b = 3/4 multiplied through by 4·avgdl, rational idf).
     * Shared by q_search_ranked and q_rrf_fusion.
@@ -60,7 +60,7 @@ object TextQueries {
       |  FROM tf JOIN qterms q USING (term) JOIN dl USING (doc_id), stats
       |  GROUP BY 1)""".stripMargin
 
-  /** Shared unrolled DuckDB mirror of Bpe.induceMerges: `merges`
+  /** Shared unrolled DuckDB mirror of Bpe.induceMergesFromTerms: `merges`
     * rounds of pair-count → deterministic argmax → doubled-delimiter
     * replace, generated mechanically per round the way q_pagerank's
     * oracle unrolls its iterations. Same tie-break (count desc, lhs,
@@ -109,7 +109,7 @@ object TextQueries {
     bpeInductionCtes(merges) + out + "\nORDER BY merge_round"
   }
 
-  /** Mirror of Bpe.tokenize: re-run the unrolled induction, then
+  /** Mirror of Bpe.tokenizeTermsWith: re-run the unrolled induction, then
     * chain the per-round replaces over a (source, word) frequency
     * table and account tokens per source — all integer.
     */
@@ -183,8 +183,8 @@ object TextQueries {
       // positional postings instead of re-splitting corpus text (r17,
       // guide §2.4): tokens IS split(text, " ") row-per-occurrence
       // (Postings.build), and lowering per token ≡ lowering the text
-      // before the split — BpeSpec gates terms-derived ≡ docs-derived
-      // on the real corpus
+      // before the split — BpeSpec checks the merges against a
+      // plain-Scala model over the real corpus
       operators.Bpe.induceMergesFromTerms(
         tokensOf(s, dir).select(col("term").as("word")), 10)
   }
@@ -874,7 +874,7 @@ object TextQueries {
     // RANKED retrieval over the same inverted index: real BM25 shape
     // (saturating tf, b=3/4 length normalization, RSJ-monotone idf)
     // in pure integer arithmetic so both engines score identically —
-    // see Relevance.bm25Rank. Query terms pick themselves at df ranks
+    // see Relevance.bm25RankStored. Query terms pick themselves at df ranks
     // 10/20/30 (mid-frequency — discriminative, overlapping posting
     // lists) via the same bounded top-k pull q_search uses.
     Query("q_search_ranked", (bm25LexCtes +
@@ -893,8 +893,8 @@ object TextQueries {
       // terms' posting lists (term filter pushed to the parquet
       // scan) — nothing token-scale aggregates per run. n_docs still
       // counts the documents table (footer-only) so tokenless docs
-      // stay in the idf. Inline path stays, spec-proven identical
-      // (Relevance.bm25RankStored shares the scoring tail).
+      // stay in the idf. RelevanceSpec checks the scores against a
+      // plain-Scala BM25 model.
       val p = postingsDir(s, dir)
       operators.Relevance.bm25RankStored(s, p,
         Tables.documents(s, dir).agg(count(lit(1)).as("n_docs")),

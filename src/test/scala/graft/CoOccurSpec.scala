@@ -1,11 +1,19 @@
 package graft
 
 import graft.operators.CoOccur
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 class CoOccurSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
+
+  /** The stored rule table of `rows` (every pair: support floor 1). */
+  private def rules(rows: DataFrame, maxBasket: Int): DataFrame = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_rules_spec").toString + "/rules"
+    CoOccur.buildRulesTable(rows, "g", "it", maxBasket, minCo = 1L, dir)
+    spark.read.parquet(dir)
+  }
 
   test("pairCounts: hand-counted supports, duplicate rows count once, " +
       "over-cap baskets are dropped entirely") {
@@ -15,9 +23,8 @@ class CoOccurSpec extends AnyFunSuite with SparkSpec {
       (3L, 10L), (3L, 20L)) ++
       // group 4 exceeds the cap — contributes NOTHING
       (1L to 10L).map(i => (4L, 100L + i))
-    val got = CoOccur.pairCounts(rows.toDF("g", "it"), "g", "it",
-        maxBasket = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+    val got = rules(rows.toDF("g", "it"), maxBasket = 5)
+      .select("item_a", "item_b", "n_co").collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     assert(got === Map((10L, 20L) -> 3L, (10L, 30L) -> 1L,
       (20L, 30L) -> 1L))
@@ -30,9 +37,8 @@ class CoOccurSpec extends AnyFunSuite with SparkSpec {
       // group 2 has exactly cap distinct REAL items + a null row: the
       // null must not count toward the cap
       (2L, 10L), (2L, 20L), (2L, 30L), (2L, null))
-    val got = CoOccur.pairCounts(rows.toDF("g", "it"), "g", "it",
-        maxBasket = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+    val got = rules(rows.toDF("g", "it"), maxBasket = 3)
+      .select("item_a", "item_b", "n_co").collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     assert(got === Map((10L, 20L) -> 2L, (10L, 30L) -> 1L,
       (20L, 30L) -> 1L))
@@ -43,8 +49,7 @@ class CoOccurSpec extends AnyFunSuite with SparkSpec {
     // 4 baskets: {A,B} {A,B} {A,C} {C}; A=10, B=20, C=30
     val rows = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
       (3L, 10L), (3L, 30L), (4L, 30L))
-    val got = CoOccur.associationRules(rows.toDF("g", "it"), "g", "it",
-        maxBasket = 5)
+    val got = rules(rows.toDF("g", "it"), maxBasket = 5)
       .collect().map(r => (r.getAs[Long]("item_a"), r.getAs[Long]("item_b"))
         -> r).toMap
     // A,B: n_co=2, n_a=3, n_b=2, N=4
@@ -71,8 +76,7 @@ class CoOccurSpec extends AnyFunSuite with SparkSpec {
     val rows = Seq((1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L),
       (3L, 10L), (3L, 30L), (4L, 30L), (5L, 10L), (5L, 20L), (5L, 30L))
     def metrics(ids: Seq[(Long, Long)], unshift: Long) =
-      CoOccur.associationRules(ids.toDF("g", "it"), "g", "it",
-          maxBasket = 5)
+      rules(ids.toDF("g", "it"), maxBasket = 5)
         .collect()
         .map(r => (r.getAs[Long]("item_a") - unshift,
           r.getAs[Long]("item_b") - unshift) ->

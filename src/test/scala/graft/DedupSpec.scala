@@ -23,6 +23,15 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         concat_ws(" ", slice(ws, lit(1), greatest(size(ws) - 2, lit(1)))).as("text")))
   }
 
+  /** Stores the 3-shingle pair tables of `docs`; returns the dir. */
+  private def shinglePairs(docs: DataFrame, maxShingleDf: Int): String = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_shpairs_spec").toString
+    Dedup.buildShinglePairs(docs, "doc_id", "text", shingleN = 3,
+      maxShingleDf, dir)
+    dir
+  }
+
   test("exact dedup finds every planted exact duplicate, keeps first id") {
     val planted = withExactCopies
     val dups = Dedup.exact(planted, "doc_id", "text").filter(col("n_copies") > 1)
@@ -52,14 +61,37 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
   test("verified minhash LSH output equals exact ngramJaccard at the threshold") {
     // the property the driver oracle relies on: LSH recall ~1 at the
     // verify threshold makes candidates+exact-verify ≡ the full
-    // inverted-index exact pair set
+    // inverted-index exact pair set. Served the way dedup_minhash
+    // serves: a corpus-partition index ∪ a planted-partition index
+    // (two stored sub-indexes, unioned at read)
     val planted = withNearCopies
-    val verified = Dedup.minhashLshVerified(planted, "doc_id", "text",
-      shingleN = 3, k = 64, bands = 32, minJaccard = 0.5)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_minhash_stored_spec").toString
+    val originals = planted.filter(col("doc_id") < 1000000L)
+    val plantedOnly = planted.filter(col("doc_id") >= 1000000L)
+    val idxA = Dedup.buildBandIndex(originals, "doc_id", "text",
+      shingleN = 3, k = 64, bands = 32)
+    Dedup.saveBandIndex(idxA, s"$dir/a")
+    idxA.shingles.unpersist(blocking = false)
+    val idxB = Dedup.buildBandIndex(plantedOnly, "doc_id", "text",
+      shingleN = 3, k = 64, bands = 32)
+    Dedup.saveBandIndex(idxB, s"$dir/b")
+    idxB.shingles.unpersist(blocking = false)
+    def stored(maxBroadcastIdBytes: Long) = Dedup.minhashPairsFromStored(
+      Dedup.extendIndex(Dedup.loadBandIndex(spark, s"$dir/a"),
+        Dedup.loadBandIndex(spark, s"$dir/b")),
+      minJaccard = 0.5, maxBroadcastIdBytes = maxBroadcastIdBytes)
     val exact = Dedup.ngramJaccard(planted, "doc_id", "text",
       shingleN = 3, minJaccard = 0.5)
-    assert(verified.exceptAll(exact).isEmpty && exact.exceptAll(verified).isEmpty)
+    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    val verified = stored(64L * 1024 * 1024)
     assert(verified.count() > 0)
+    assert(multiset(verified) === multiset(exact))
+    // the broadcast guard's FALLBACK path (r16 verdict item 6: the
+    // guard is byte-based now; a zero budget forces the shuffle
+    // semi-join prune) must produce the identical pair set
+    assert(multiset(stored(0L)) === multiset(exact))
   }
 
   test("minhash LSH finds the planted near-duplicates") {
@@ -91,62 +123,32 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     assert(found.agg(min("jaccard")).head.getDouble(0) > 0.5)
   }
 
-  test("stored shingle-pair tables serve jaccard AND containment " +
-      "identically to the inline pipelines") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_shpairs_spec").toString
-    Dedup.buildShinglePairs(withNearCopies, "doc_id", "text",
-      shingleN = 3, maxShingleDf = 50, dir)
+  test("stored shingle-pair tables serve jaccard identically to ngramJaccard") {
+    val dir = shinglePairs(withNearCopies, maxShingleDf = 50)
     def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.mkString("|")).toSeq.sorted
     assert(multiset(Dedup.jaccardFromStored(spark, dir, minJaccard = 0.1)) ===
       multiset(Dedup.ngramJaccard(withNearCopies, "doc_id", "text",
         shingleN = 3, minJaccard = 0.1, maxShingleDf = 50)))
-    assert(multiset(
-      Dedup.containmentFromStored(spark, dir, minPermille = 500)) ===
-      multiset(Dedup.containment(withNearCopies, "doc_id", "text",
-        shingleN = 3, minPermille = 500, maxShingleDf = 50)))
   }
 
-  test("stored band index serves the corpus self-dedup identically to " +
-      "the inline minhashLshVerified pipeline") {
-    // the r16 serving shape behind dedup_minhash: corpus-partition
-    // index ∪ planted-partition index (two stored sub-indexes, unioned
-    // at read) must yield the exact pair set the inline front end
-    // computes over the union corpus — band arithmetic, candidate
-    // generation and the verify tail are shared definitions, so a
-    // divergence here means the stored tables themselves drifted
+  test("stored containment equals the plain-Scala containment model on " +
+      "the real corpus") {
+    // df cap 50 drops the corpus's boilerplate shingles from the
+    // candidate pairs, so both sides must apply it identically
     val planted = withNearCopies
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_minhash_stored_spec").toString
-    val originals = planted.filter(col("doc_id") < 1000000L)
-    val plantedOnly = planted.filter(col("doc_id") >= 1000000L)
-    val idxA = Dedup.buildBandIndex(originals, "doc_id", "text",
-      shingleN = 3, k = 64, bands = 32)
-    Dedup.saveBandIndex(idxA, s"$dir/a")
-    idxA.shingles.unpersist(blocking = false)
-    val idxB = Dedup.buildBandIndex(plantedOnly, "doc_id", "text",
-      shingleN = 3, k = 64, bands = 32)
-    Dedup.saveBandIndex(idxB, s"$dir/b")
-    idxB.shingles.unpersist(blocking = false)
-    val stored = Dedup.minhashPairsFromStored(
-      Dedup.extendIndex(Dedup.loadBandIndex(spark, s"$dir/a"),
-        Dedup.loadBandIndex(spark, s"$dir/b")),
-      minJaccard = 0.5)
-    val inline = Dedup.minhashLshVerified(planted, "doc_id", "text",
-      shingleN = 3, k = 64, bands = 32, minJaccard = 0.5)
-    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.mkString("|")).toSeq.sorted
-    assert(stored.count() > 0)
-    assert(multiset(stored) === multiset(inline))
-    // the broadcast guard's FALLBACK path (r16 verdict item 6: the
-    // guard is byte-based now; a zero budget forces the shuffle
-    // semi-join prune) must produce the identical pair set
-    val fallback = Dedup.minhashPairsFromStored(
-      Dedup.extendIndex(Dedup.loadBandIndex(spark, s"$dir/a"),
-        Dedup.loadBandIndex(spark, s"$dir/b")),
-      minJaccard = 0.5, maxBroadcastIdBytes = 0L)
-    assert(multiset(fallback) === multiset(inline))
+    val rows = planted.collect().toSeq.map(r =>
+      TextModels.Doc(r.getLong(0), null, r.getString(1)))
+    val dir = shinglePairs(planted, maxShingleDf = 50)
+    for (minPermille <- Seq(0L, 500L)) {
+      val got = Dedup.containmentFromStored(spark, dir, minPermille)
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val want = ContainmentModel.run(rows, shingleN = 3, maxShingleDf = 50,
+        minPermille)
+      assert(want.exists(_._3 === 1000L))
+      assert(got.sorted === want.sorted, s"minPermille $minPermille")
+    }
   }
 
   test("ngram jaccard with a df cap never reports higher similarity") {
@@ -404,9 +406,13 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val planted = withNearCopies
     val corpus = planted.filter(col("doc_id") < 1000000L)
     val batch = planted.filter(col("doc_id") >= 1000000L)
-    val expected = Dedup.minhashIncrementalVerified(corpus, batch,
-      "doc_id", "text", shingleN = 3, k = 64, bands = 32, minJaccard = 0.5)
+    // one-shot: an in-memory index of the corpus, admitted against
+    val inMemory = Dedup.buildBandIndex(corpus, "doc_id", "text",
+      shingleN = 3, k = 64, bands = 32)
+    val expected = Dedup.admitBatch(inMemory, batch, "doc_id", "text",
+        minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    inMemory.shingles.unpersist(blocking = false)
     assert(expected.nonEmpty)
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-minhash-idx")
@@ -469,10 +475,12 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val got = Dedup.admitBatch(idx1, day2, "doc_id", "text",
       minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val expected = Dedup.minhashIncrementalVerified(
-      corpus0.unionByName(day1), day2, "doc_id", "text",
-      shingleN = 3, k = 64, bands = 32, minJaccard = 0.5)
+    val grown = Dedup.buildBandIndex(corpus0.unionByName(day1),
+      "doc_id", "text", shingleN = 3, k = 64, bands = 32)
+    val expected = Dedup.admitBatch(grown, day2, "doc_id", "text",
+        minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    grown.shingles.unpersist(blocking = false)
     assert(got === expected)
     assert(got.nonEmpty)
   }
@@ -645,8 +653,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // every planted id is unique
     val planted = base.union(excerpts)
       .union(docs.filter(length(col("text")) <= 400).limit(20))
-    val pairs = Dedup.containment(planted, "doc_id", "text",
-      shingleN = 3, minPermille = 900)
+    val dir = shinglePairs(planted, maxShingleDf = Int.MaxValue)
+    val pairs = Dedup.containmentFromStored(spark, dir, minPermille = 900)
     val hits = pairs.filter(col("sub_id") >= 5000000L &&
       col("sup_id") === col("sub_id") - 5000000L)
     assert(hits.count() === base.count())
@@ -657,8 +665,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
         "transform(sequence(1, greatest(size(split(text,' ')) - 2, 0))," +
           " i -> array_join(slice(split(text,' '), i, 3), ' '))")))
         .cast("long").as("sz"))
-    val bad = Dedup.containment(planted, "doc_id", "text",
-        shingleN = 3, minPermille = 0)
+    val bad = Dedup.containmentFromStored(spark, dir, minPermille = 0)
       .join(szs.select(col("doc_id").as("sub_id"), col("sz").as("sz_sub")), "sub_id")
       .join(szs.select(col("doc_id").as("sup_id"), col("sz").as("sz_sup")), "sup_id")
       .filter(col("sz_sub") > col("sz_sup"))

@@ -37,10 +37,12 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("round-12 eager/scoped paths handle empty corpora") {
-    // minhashLshVerified is now EAGER (localCheckpoint + pin release):
-    // the empty corpus must round-trip the checkpoint, not throw
-    assert(Dedup.minhashLshVerified(noDocs, "doc_id", "text")
-      .count() === 0)
+    // stored self-dedup is EAGER (localCheckpoint + pin release): an
+    // index of the empty corpus must round-trip the checkpoint, not
+    // throw
+    val noIdx = Dedup.buildBandIndex(noDocs, "doc_id", "text")
+    assert(Dedup.minhashPairsFromStored(noIdx).count() === 0)
+    noIdx.shingles.unpersist(blocking = false)
     // cleanScoped on an empty corpus: empty result, release is a no-op
     val scoped = graft.pipeline.CleanCorpus.cleanScoped(
       noDocs, "doc_id", "text", minQuality = 0.0)
@@ -56,10 +58,11 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
   test("co-occurrence mining handles empty inputs") {
     // exercises the r13 in-array pair expansion on zero basket rows
     val none = noDocs.select(col("doc_id").as("g"), col("doc_id").as("it"))
-    assert(graft.operators.CoOccur.pairCounts(none, "g", "it",
-      maxBasket = 5).count() === 0)
-    assert(graft.operators.CoOccur.associationRules(none, "g", "it",
-      maxBasket = 5).count() === 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_rules_empty")
+      .toString + "/rules"
+    graft.operators.CoOccur.buildRulesTable(none, "g", "it",
+      maxBasket = 5, minCo = 1L, dir)
+    assert(spark.read.parquet(dir).count() === 0)
   }
 
   test("stored-IVF serving handles empty query sets") {
@@ -95,15 +98,25 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
       0.3, model, nprobe = 2).count() === 0)
   }
 
+  /** A postings snapshot of the empty corpus, and its 1-row n_docs. */
+  private lazy val noPostings = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_postings_empty")
+      .toString
+    graft.operators.Postings.build(noDocs, "doc_id", "source", "text", dir)
+    dir
+  }
+  private def noDocsN = noDocs.agg(count(lit(1)).as("n_docs"))
+
   test("relevance and fuzzy matching handle empty inputs") {
-    assert(Relevance.salientTerms(noDocs, "doc_id", "text", 3).count() === 0)
+    assert(Relevance.salientTermsStored(spark, noPostings, noDocsN, 3)
+      .count() === 0)
     assert(FuzzyMatch.dictionaryPairs(noDocs.select(col("text")), "text", 2)
       .count() === 0)
   }
 
   test("ranked retrieval, fusion, CMS and BPE-apply handle empty inputs") {
     import spark.implicits._
-    assert(Relevance.bm25Rank(noDocs, "doc_id", "text", Seq("x"), 5)
+    assert(Relevance.bm25RankStored(spark, noPostings, noDocsN, Seq("x"), 5)
       .count() === 0)
     val noRanks = Seq.empty[(Long, Long)].toDF("id", "rank")
     assert(Relevance.rrfFuse(noRanks, noRanks, "id", "rank", 5)
@@ -123,9 +136,11 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
       .collect()
     assert(est.length === 2 && est.forall(_.getAs[Long]("cms_est") === 0L))
     // applying an induced merge table to an empty corpus is empty
-    val ms = graft.operators.Bpe.induceMerges(
-      Tables.documents(spark, sf).limit(50), "text", 2)
-    assert(graft.operators.Bpe.tokenizeWith(noDocs, "text", "source", ms)
+    def terms(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("source"), explode(split(col("text"), " ")).as("word"))
+    val ms = graft.operators.Bpe.induceMergesFromTerms(
+      terms(Tables.documents(spark, sf).limit(50)).select(col("word")), 2)
+    assert(graft.operators.Bpe.tokenizeTermsWith(terms(noDocs), ms)
       .count() === 0)
   }
 

@@ -197,10 +197,10 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("BM25 index tables match the inline tf/dl/df derivations") {
-    // the expressions Relevance.bm25RankTok aggregates per run: tf
+    // the BM25 tokenization contract as plain Spark expressions: tf
     // over lowered [a-z]+ tokens, dl = Σtf per doc, df = docs per
-    // term. The stored tables must equal them row-for-row — that is
-    // what lets bm25RankStored serve with its output unchanged.
+    // term. The stored tables bm25RankStored serves from must equal
+    // them row-for-row.
     val dir = java.nio.file.Files.createTempDirectory("graft_post6").toString
     built(dir)
     val tok = corpus.select(col("doc_id"),

@@ -1,15 +1,37 @@
 package graft
 
-import graft.operators.Relevance
+import graft.operators.{Postings, Relevance}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class RelevanceSpec extends AnyFunSuite with SparkSpec {
 
-  test("salient terms: exact integer scores, rare terms outrank common") {
+  /** Builds a postings snapshot of `(doc_id, source, text)` docs. */
+  private def postings(docs: DataFrame): String = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_relevance_spec").toString
+    Postings.build(docs, "doc_id", "source", "text", dir)
+    dir
+  }
+
+  private def nDocs(docs: DataFrame) = docs.agg(count(lit(1)).as("n_docs"))
+
+  private def toyDocs(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
-    val docs = Seq(1L -> "a a b", 2L -> "a c").toDF("doc_id", "text")
-    val got = Relevance.salientTerms(docs, "doc_id", "text", 3)
+    rows.toDF("doc_id", "text").withColumn("source", lit("s"))
+  }
+
+  private lazy val corpus = Tables.documents(spark, sf)
+  private lazy val corpusDir = postings(corpus)
+  private lazy val corpusRows = corpus.collect().toSeq.map(r =>
+    TextModels.Doc(r.getAs[Long]("doc_id"), r.getAs[String]("source"),
+      r.getAs[String]("text")))
+
+  test("salient terms: exact integer scores, rare terms outrank common") {
+    val docs = toyDocs(1L -> "a a b", 2L -> "a c")
+    val got = Relevance.salientTermsStored(spark, postings(docs),
+        nDocs(docs), 3)
       .collect()
       .map(r => (r.getLong(0), r.getString(1)) -> (r.getInt(2), r.getLong(3)))
       .toMap
@@ -21,9 +43,8 @@ class RelevanceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("salient terms on the corpus: ≤k per doc, dense ranks, all docs") {
-    val docs = Tables.documents(spark, sf)
-    val out = Relevance.salientTerms(docs, "doc_id", "text", 3)
-    assert(out.select("doc_id").distinct().count() === docs.count())
+    val out = Relevance.salientTermsStored(spark, corpusDir, nDocs(corpus), 3)
+    assert(out.select("doc_id").distinct().count() === corpus.count())
     val bad = out.groupBy("doc_id")
       .agg(count(lit(1)).as("n"), max("rank").as("mr"))
       .filter(col("n") > 3 || col("mr") =!= col("n"))
@@ -31,22 +52,21 @@ class RelevanceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bm25: tf saturation and length normalization order as BM25 must") {
-    import spark.implicits._
     // same tf, shorter doc wins; higher tf wins at equal length;
     // saturation: tf 10 vs 20 in equal-length docs differ by less
     // than tf 1 vs 2 does
     // docs 6-8 don't contain x: with df = N the rational idf is 0
     // (the correct BM25 degeneracy for a ubiquitous term), so the
     // discrimination cases need x-free documents in the corpus
-    val docs = Seq(
+    val docs = toyDocs(
       1L -> ("x " * 1 + "f " * 9).trim,   // tf=1, dl=10
       2L -> ("x " * 2 + "f " * 8).trim,   // tf=2, dl=10
       3L -> ("x " * 2 + "f " * 18).trim,  // tf=2, dl=20 (longer, penalized)
       4L -> ("x " * 10 + "f " * 10).trim, // tf=10, dl=20
       5L -> ("x " * 20).trim,             // tf=20, dl=20
-      6L -> ("f " * 10).trim, 7L -> ("f " * 10).trim, 8L -> ("f " * 10).trim
-    ).toDF("doc_id", "text")
-    val got = Relevance.bm25Rank(docs, "doc_id", "text", Seq("x"), k = 5)
+      6L -> ("f " * 10).trim, 7L -> ("f " * 10).trim, 8L -> ("f " * 10).trim)
+    val got = Relevance.bm25RankStored(spark, postings(docs), nDocs(docs),
+        Seq("x"), k = 5)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got(2L) > got(1L)) // more tf at same length
     assert(got(2L) > got(3L)) // same tf, longer doc penalized
@@ -56,50 +76,30 @@ class RelevanceSpec extends AnyFunSuite with SparkSpec {
     assert(gain10 < gain1) // ...but saturating
   }
 
-  test("bm25 stored serving equals the inline token-stream path") {
-    // the r16 serving shape: bm25RankStored over a built postings
-    // snapshot must return exactly what bm25RankTok computes from the
-    // token stream — same docs, same ranks, same integer scores —
-    // for several query-term sets over the real corpus (the two
-    // paths share one scoring tail; this gates the stored tf/dl/df
-    // derivations end to end).
-    val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_bm25_stored").toString
-    graft.operators.Postings.build(docs, "doc_id", "source", "text", dir)
-    val tok = graft.operators.Postings.tokens(spark, dir)
-      .select(col("doc_id"), col("term"))
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.mkString("|")).toSeq.sorted
-    Seq(Seq("the", "of", "and"), Seq("data", "a"), Seq("zzz_absent"))
-      .foreach { terms =>
-        assert(
-          rows(Relevance.bm25RankStored(spark, dir, nDocs, terms, k = 10))
-            === rows(Relevance.bm25RankTok(tok, nDocs, terms, k = 10)),
-          s"stored != inline for terms $terms")
-      }
+  test("bm25 stored serving equals the plain-Scala BM25 model on the " +
+      "real corpus") {
+    // every scored doc (k = 500 covers the corpus) and the top-10 cut,
+    // integer scores exact, for frequent, mixed and absent term sets
+    for (terms <- Seq(Seq("the", "of", "and"), Seq("data", "a"),
+           Seq("zzz_absent")); k <- Seq(10, 500)) {
+      val got = Relevance.bm25RankStored(spark, corpusDir, nDocs(corpus),
+          terms, k)
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val want = Bm25Model.run(corpusRows, terms, k)
+      assert(got === want, s"terms $terms, k $k")
+      if (terms.head == "the") assert(got.size >= 10)
+    }
   }
 
-  test("tfidf stored serving equals the inline token-stream path") {
-    // the r17 serving shape (r16 verdict task 3): salientTermsStored
-    // over a built postings snapshot (tf_raw/df_raw) must return
-    // exactly what salientTermsTok computes from the token stream —
-    // same docs, same terms, same ranks, same integer scores. The two
-    // paths share one scoring tail; this gates the stored tf_raw
-    // aggregation, the Σtf document lengths, and the df_raw
-    // dictionary end to end over the real corpus.
-    val docs = Tables.documents(spark, sf)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_tfidf_stored").toString
-    graft.operators.Postings.build(docs, "doc_id", "source", "text", dir)
-    val tok = graft.operators.Postings.tokens(spark, dir)
-      .select(col("doc_id"), col("term"))
-    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.mkString("|")).toSeq.sorted
-    assert(rows(Relevance.salientTermsStored(spark, dir, nDocs, 3))
-      === rows(Relevance.salientTermsTok(tok, nDocs, 3)))
+  test("tfidf stored serving equals the plain-Scala TF-IDF model on the " +
+      "real corpus") {
+    val got = Relevance.salientTermsStored(spark, corpusDir, nDocs(corpus), 3)
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getLong(3)))
+    val want = TfIdfModel.run(corpusRows, 3)
+    assert(want.size > 1000)
+    assert(got.sorted === want.sorted)
   }
 
   test("rrf: one-sided candidates survive, two-system agreement wins") {

@@ -136,8 +136,9 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("IVF top-k achieves reasonable recall vs brute force") {
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", 9, 5)
       .select("q_id", "neighbor_id")
-    val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", 9, 5,
-      nlist = 8, nprobe = 4)
+    val approx = Similarity.ivfSearch(
+        Similarity.ivfTrain(emb, "vec_id", "embedding", nlist = 8),
+        emb, "vec_id", "embedding", 9, 5, nprobe = 4)
       .select("q_id", "neighbor_id")
     val hit = exact.join(approx, Seq("q_id", "neighbor_id")).count()
     // probing half the lists (4/8) must beat the random-half baseline
@@ -186,8 +187,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
   test("IVF trained on a sample still achieves reasonable recall") {
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", 9, 5)
       .select("q_id", "neighbor_id")
-    val approx = Similarity.ivfTopK(emb, "vec_id", "embedding", 9, 5,
-      nlist = 8, nprobe = 4, trainFraction = 0.3)
+    val approx = Similarity.ivfSearch(
+        Similarity.ivfTrain(emb, "vec_id", "embedding", nlist = 8,
+          trainFraction = 0.3),
+        emb, "vec_id", "embedding", 9, 5, nprobe = 4)
       .select("q_id", "neighbor_id")
     val hit = exact.join(approx, Seq("q_id", "neighbor_id")).count()
     assert(hit >= 20, s"sampled-training recall too low: $hit/50")

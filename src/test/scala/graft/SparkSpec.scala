@@ -4,18 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (forked test JVM). */
 object SparkSpec {
-  lazy val session: SparkSession = {
-    // UI on (random port) so MetricsSpec can scrape the Prometheus
-    // servlet GraftStreams.withPrometheus configures
-    val builder = graft.streaming.GraftStreams.withPrometheus(
-      SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.port", "0"))
-    builder.getOrCreate()
-  }
+  lazy val session: SparkSession =
+    // the served config (GraftSession) on 4 threads, plus the UI on a
+    // random port so MetricsSpec can scrape the Prometheus servlet
+    // GraftStreams.withPrometheus configures
+    graft.streaming.GraftStreams.withPrometheus(
+      GraftSession.builder(4, "graft-test"))
+      .config("spark.ui.port", "0")
+      .getOrCreate()
 }
 
 trait SparkSpec {
