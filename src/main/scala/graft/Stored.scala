@@ -78,11 +78,14 @@ object Stored {
     (out, seen.asScala.toSet)
   }
 
-  /** The temp dirs of every stored table, deleted by one shutdown hook.
-    * The stored streams are corpus-scale (the postings tables run to
-    * several times the raw text), so orphaning them per bench JVM —
-    * a sweep runs several SFs plus reruns — accumulates multi-GB /tmp
-    * garbage; the hook bounds live disk to the running JVMs' sets.
+  /** Every dir [[tempDir]] made — the stored tables' and the specs'
+    * scratch dirs — deleted by one shutdown hook. The stored streams
+    * are corpus-scale (the postings tables run to several times the
+    * raw text), so orphaning them per bench JVM — a sweep runs several
+    * SFs plus reruns — accumulates multi-GB /tmp garbage; the hook
+    * bounds live disk to the running JVMs' sets. Spec dirs keep clear
+    * of the `graft_spec_` prefix, which `StoredSpec` reads as its own
+    * test-local stored tables'.
     */
   private val dirs = new ConcurrentLinkedQueue[java.io.File]()
 
@@ -95,7 +98,8 @@ object Stored {
     f.delete(): Unit
   }
 
-  private def tempDir(prefix: String): String = {
+  /** A fresh temp dir named `prefix…`, deleted at JVM exit. */
+  private[graft] def tempDir(prefix: String): String = {
     cleanup
     val p = java.nio.file.Files.createTempDirectory(prefix).toFile
     dirs.add(p)

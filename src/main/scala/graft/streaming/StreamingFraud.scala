@@ -5,7 +5,6 @@ import java.nio.ByteBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Structured Streaming re-expression of the reference's streaming
   * fraud jobs ({Inorder,OutofOrder}{Tumbling,Sliding} FraudDetectionJob).
@@ -188,61 +187,6 @@ object StreamingFraud {
           events.foreach { t => sum += t.amount; cnt += 1 }
           state.update((sum, cnt))
           (accountId, sum, cnt)
-      }
-  }
-
-  /** Welford accumulator: count, running mean, running Σ(x−mean)². */
-  case class ZScoreState(n: Long, mean: Double, m2: Double)
-
-  /** An adaptive anomaly: the amount sat `zMilli`/1000 sample
-    * standard deviations from the account's own running mean.
-    */
-  case class AnomalyAlert(accountId: Long, tsMs: Long, amount: Double,
-                          zMilli: Long)
-
-  /** Adaptive per-account anomaly detector — the data-driven upgrade
-    * of the reference's fixed `sum > 10000` rule (FraudDetector2.java:
-    * 22-30): each account keeps its own online mean/variance (Welford's
-    * algorithm — numerically stable, O(1) state per key) and a
-    * transaction alerts when it deviates more than `zThreshold` sample
-    * standard deviations from that account's OWN history. A fixed
-    * threshold misses a compromised low-spend account and spams a
-    * legitimately high-spend one; the per-key distribution does not.
-    *
-    * State is three doubles per account (bounded, RocksDB-friendly at
-    * any key cardinality). Batch events fold in (event-time, amount)
-    * order so replays are deterministic; each event is scored against
-    * the history BEFORE it (an anomaly does not mask itself), after a
-    * `minSamples` warm-up. The z-score is emitted in integer milli
-    * units for engine-portable downstream handling.
-    */
-  def zScoreDetector(tx: Dataset[Transaction], zThreshold: Double = 3.0,
-                     minSamples: Long = 10): Dataset[AnomalyAlert] = {
-    implicit val outEnc: Encoder[AnomalyAlert] = Encoders.product[AnomalyAlert]
-    implicit val keyEnc: Encoder[Long] = Encoders.scalaLong
-    implicit val stEnc: Encoder[ZScoreState] = Encoders.product[ZScoreState]
-
-    tx.groupByKey(_.accountId)
-      .flatMapGroupsWithState[ZScoreState, AnomalyAlert](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (accountId: Long, events: Iterator[Transaction],
-         state: GroupState[ZScoreState]) =>
-          var st = state.getOption.getOrElse(ZScoreState(0L, 0d, 0d))
-          val out = List.newBuilder[AnomalyAlert]
-          events.toSeq.sortBy(t => (t.ts.getTime, t.amount)).foreach { t =>
-            if (st.n >= minSamples) {
-              val sd = math.sqrt(st.m2 / (st.n - 1))
-              if (sd > 0 && math.abs(t.amount - st.mean) > zThreshold * sd)
-                out += AnomalyAlert(accountId, t.ts.getTime, t.amount,
-                  math.round(1000d * (t.amount - st.mean) / sd))
-            }
-            val n1 = st.n + 1
-            val d = t.amount - st.mean
-            val mean1 = st.mean + d / n1
-            st = ZScoreState(n1, mean1, st.m2 + d * (t.amount - mean1))
-          }
-          state.update(st)
-          out.result().iterator
       }
   }
 

@@ -9,8 +9,7 @@ class CoOccurSpec extends AnyFunSuite with SparkSpec {
 
   /** The stored rule table of `rows` (every pair: support floor 1). */
   private def rules(rows: DataFrame, maxBasket: Int): DataFrame = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_rules_spec").toString + "/rules"
+    val dir = Stored.tempDir("graft_rules_spec") + "/rules"
     CoOccur.buildRulesTable(rows, "g", "it", maxBasket, minCo = 1L, dir)
     spark.read.parquet(dir)
   }

@@ -25,8 +25,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
 
   /** Stores the 3-shingle pair tables of `docs`; returns the dir. */
   private def shinglePairs(docs: DataFrame, maxShingleDf: Int): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_shpairs_spec").toString
+    val dir = Stored.tempDir("graft_shpairs_spec")
     Dedup.buildShinglePairs(docs, "doc_id", "text", shingleN = 3,
       maxShingleDf, dir)
     dir
@@ -65,8 +64,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     // serves: a corpus-partition index ∪ a planted-partition index
     // (two stored sub-indexes, unioned at read)
     val planted = withNearCopies
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_minhash_stored_spec").toString
+    val dir = Stored.tempDir("graft_minhash_stored_spec")
     val originals = planted.filter(col("doc_id") < 1000000L)
     val plantedOnly = planted.filter(col("doc_id") >= 1000000L)
     val idxA = Dedup.buildBandIndex(originals, "doc_id", "text",
@@ -415,8 +413,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     inMemory.shingles.unpersist(blocking = false)
     assert(expected.nonEmpty)
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-minhash-idx")
-      .toFile.getAbsolutePath
+    val tmp = Stored.tempDir("graft-minhash-idx")
     corpus.write.parquet(s"$tmp/corpus")
     val idx = Dedup.buildBandIndex(spark.read.parquet(s"$tmp/corpus"),
       "doc_id", "text", shingleN = 3, k = 64, bands = 32)
@@ -527,8 +524,7 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
           shingleN = 3, k = 64, bands = 32),
         day1, "doc_id", "text"),
       day2, "doc_id", "text")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-resave")
-      .toFile.getAbsolutePath
+    val tmp = Stored.tempDir("graft-resave")
     Dedup.saveBandIndex(extended, tmp)
     val roundTripped = Dedup.loadBandIndex(spark, tmp)
 

@@ -58,16 +58,14 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
   test("co-occurrence mining handles empty inputs") {
     // exercises the r13 in-array pair expansion on zero basket rows
     val none = noDocs.select(col("doc_id").as("g"), col("doc_id").as("it"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_rules_empty")
-      .toString + "/rules"
+    val dir = Stored.tempDir("graft_rules_empty") + "/rules"
     graft.operators.CoOccur.buildRulesTable(none, "g", "it",
       maxBasket = 5, minCo = 1L, dir)
     assert(spark.read.parquet(dir).count() === 0)
   }
 
   test("stored-IVF serving handles empty query sets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_empty")
-      .toString
+    val dir = Stored.tempDir("graft_ivf_empty")
     val embAll = Tables.embeddings(spark, sf)
     val model = Similarity.ivfTrain(embAll, "vec_id", "embedding",
       nlist = 4, iters = 1)
@@ -80,8 +78,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
     // the composed stored path has the same bounded probe-pull /
     // isin(empty) prologue plus an ADC shortlist — an empty query set
     // must flow through BOTH phases (empty shortlist join included)
-    val pqDir = java.nio.file.Files.createTempDirectory("graft_ivfpq_empty")
-      .toString
+    val pqDir = Stored.tempDir("graft_ivfpq_empty")
     val pq = Similarity.pqTrain(embAll, "vec_id", "embedding",
       m = 4, ksub = 4, iters = 1)
     Similarity.saveIvfPqIndex(model, pq, embAll, "vec_id", "embedding",
@@ -100,8 +97,7 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
 
   /** A postings snapshot of the empty corpus, and its 1-row n_docs. */
   private lazy val noPostings = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_postings_empty")
-      .toString
+    val dir = Stored.tempDir("graft_postings_empty")
     graft.operators.Postings.build(noDocs, "doc_id", "source", "text", dir)
     dir
   }

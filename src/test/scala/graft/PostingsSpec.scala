@@ -36,7 +36,7 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
     df.collect().map(_.mkString("|")).toSeq.sorted
 
   test("tokens stream matches posexplode(split) exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_post1").toString
+    val dir = Stored.tempDir("graft_post1")
     built(dir)
     val expected = corpus.select(col("doc_id"), col("source"),
       posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
@@ -45,7 +45,7 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pair stream mirrors the consumers' zip_with at d=1 and d=2") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_post2").toString
+    val dir = Stored.tempDir("graft_post2")
     built(dir)
     def expectedAt(d: Int) = corpus
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
@@ -73,7 +73,7 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("distinct streams match the in-array distincts they replace") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_post3").toString
+    val dir = Stored.tempDir("graft_post3")
     built(dir)
     val expectedD = corpus.select(col("doc_id"), col("source"),
       explode(array_distinct(split(col("text"), " "))).as("term"))
@@ -97,7 +97,7 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("bigram tables match the inline hash-then-distinct pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_post5").toString
+    val dir = Stored.tempDir("graft_post5")
     built(dir)
     // the expression the consumers previously ran inline: adjacent
     // bigrams → 16-byte (xxhash64, len) keys → DISTINCT per doc
@@ -144,10 +144,8 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
       "tf_lower", "dl_lower", "df_lower", "tf_hashed", "df_raw", "dl_raw")
     Seq(7, 13, 29).foreach { seed =>
       val inBase = pmod(xxhash64(col("doc_id"), lit(seed)), lit(2)) === 0
-      val dirInc = java.nio.file.Files
-        .createTempDirectory(s"graft_post_adm$seed").toString
-      val dirFull = java.nio.file.Files
-        .createTempDirectory(s"graft_post_reb$seed").toString
+      val dirInc = Stored.tempDir(s"graft_post_adm$seed")
+      val dirFull = Stored.tempDir(s"graft_post_reb$seed")
       Postings.build(full.filter(inBase), "doc_id", "source", "text", dirInc)
       Postings.admitBatch(full.filter(!inBase), "doc_id", "source", "text",
         dirInc)
@@ -160,16 +158,14 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
     }
     // a second admission on top of the first must also fold exactly
     // (the daily-pipeline shape: admissions stack)
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft_post_adm2").toString
+    val dir2 = Stored.tempDir("graft_post_adm2")
     val third = pmod(col("doc_id"), lit(3))
     Postings.build(full.filter(third === 0), "doc_id", "source", "text", dir2)
     Postings.admitBatch(full.filter(third === 1), "doc_id", "source", "text",
       dir2)
     Postings.admitBatch(full.filter(third === 2), "doc_id", "source", "text",
       dir2)
-    val dirF2 = java.nio.file.Files
-      .createTempDirectory("graft_post_reb2").toString
+    val dirF2 = Stored.tempDir("graft_post_reb2")
     Postings.build(full, "doc_id", "source", "text", dirF2)
     tables.foreach { t =>
       assert(rows(spark.read.parquet(s"$dir2/$t")) ===
@@ -179,7 +175,7 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an empty corpus builds readable empty streams") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_post4").toString
+    val dir = Stored.tempDir("graft_post4")
     Postings.build(corpus.filter(lit(false)), "doc_id", "source", "text", dir)
     assert(Postings.tokens(spark, dir).count() === 0)
     assert(Postings.pairsAll(spark, dir).count() === 0)
@@ -201,7 +197,7 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
     // over lowered [a-z]+ tokens, dl = Σtf per doc, df = docs per
     // term. The stored tables bm25RankStored serves from must equal
     // them row-for-row.
-    val dir = java.nio.file.Files.createTempDirectory("graft_post6").toString
+    val dir = Stored.tempDir("graft_post6")
     built(dir)
     val tok = corpus.select(col("doc_id"),
         explode(split(col("text"), " ")).as("term"))

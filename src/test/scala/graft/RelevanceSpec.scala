@@ -9,8 +9,7 @@ class RelevanceSpec extends AnyFunSuite with SparkSpec {
 
   /** Builds a postings snapshot of `(doc_id, source, text)` docs. */
   private def postings(docs: DataFrame): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_relevance_spec").toString
+    val dir = Stored.tempDir("graft_relevance_spec")
     Postings.build(docs, "doc_id", "source", "text", dir)
     dir
   }

@@ -40,8 +40,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("stored IVF index: search matches ivfSearch row-for-row and " +
       "partition pruning reaches the list files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx")
-      .toString
+    val dir = Stored.tempDir("graft_ivf_idx")
     val model = Similarity.ivfTrain(emb, "vec_id", "embedding",
       nlist = 8, iters = 2)
     Similarity.saveIvfIndex(model, emb, "vec_id", "embedding", dir)
@@ -72,8 +71,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("stored IVFPQ index: matches ivfPqSearch row-for-row; the ADC " +
       "scan reads codes, never vectors") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx")
-      .toString
+    val dir = Stored.tempDir("graft_ivfpq_idx")
     val coarse = Similarity.ivfTrain(emb, "vec_id", "embedding",
       nlist = 8, iters = 2)
     val pq = Similarity.pqTrain(emb, "vec_id", "embedding",

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SinksSpec extends AnyFunSuite with SparkSpec {
 
   test("partitioned write creates prunable directories, round-trips rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = Stored.tempDir("graft_part")
     val docs = Tables.documents(spark, sf)
     val back = GraftSinks.writePartitioned(docs, s"$dir/out", Seq("lang"))
     assert(back.count() === docs.count())
@@ -24,7 +24,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("range-bucketed write produces the requested file count, sorted") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rb").toString
+    val dir = Stored.tempDir("graft_rb")
     val orders = Tables.orders(spark, sf)
     val back = GraftSinks.writeSortedBuckets(orders, s"$dir/out", 4,
       Seq("o_custkey"))
@@ -35,7 +35,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("json and csv round-trips preserve the documents table exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
+    val dir = Stored.tempDir("graft_fmt")
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
     docs.write.json(s"$dir/j")
@@ -54,7 +54,7 @@ class SinksSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compaction collapses a many-small-files table, preserving rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cp").toString
+    val dir = Stored.tempDir("graft_cp")
     val orders = Tables.orders(spark, sf).select("o_orderkey", "o_custkey")
     // simulate a sink that accumulated many tiny files
     orders.repartition(40).write.parquet(s"$dir/t")

@@ -12,7 +12,7 @@ class WarehouseSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   test("time travel reads an exact or as-of snapshot version") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tt").toString
+    val dir = Stored.tempDir("graft_tt")
     Seq(0L, 2L, 5L).foreach { v =>
       Seq((v, s"state at v$v")).toDF("doc_id", "text")
         .write.parquet(s"$dir/snap/v=$v")
@@ -31,7 +31,7 @@ class WarehouseSpec extends AnyFunSuite with SparkSpec {
 
   test("uncommitted snapshot versions are invisible to readers and " +
       "swept by vacuum") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cm").toString
+    val dir = Stored.tempDir("graft_cm")
     Seq(0L, 3L).foreach { v =>
       Seq((v, s"state at v$v")).toDF("doc_id", "text")
         .write.parquet(s"$dir/snap/v=$v")
@@ -88,7 +88,7 @@ class WarehouseSpec extends AnyFunSuite with SparkSpec {
     // re-publication must not take v=<batchId> — at that moment the
     // latest committed version — offline for a delete-to-rename
     // window under a concurrent reader.
-    val dir = java.nio.file.Files.createTempDirectory("graft_retry").toString
+    val dir = Stored.tempDir("graft_retry")
     val batch = Seq((1L, "a", "I"), (2L, "b", "I"))
       .toDF("doc_id", "text", "op")
     graft.streaming.GraftStreams.applyCdcBatch(
@@ -114,7 +114,7 @@ class WarehouseSpec extends AnyFunSuite with SparkSpec {
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_dpo").toString
+      val dir = Stored.tempDir("graft_dpo")
       Seq((1L, "d1"), (2L, "d2"), (3L, "d3"))
         .toDF("id", "day").write.partitionBy("day").parquet(s"$dir/t")
       // overwrite ONLY day d2 with new content
@@ -137,7 +137,7 @@ class WarehouseSpec extends AnyFunSuite with SparkSpec {
     // a long-lived table gains a column mid-life; readers must see the
     // union schema with nulls for pre-evolution files, and writers of
     // the old schema must keep working untouched
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = Stored.tempDir("graft_evo")
     Seq((1L, "alpha")).toDF("doc_id", "text").write.parquet(s"$dir/t/p1")
     Seq((2L, "beta", "en")).toDF("doc_id", "text", "lang")
       .write.parquet(s"$dir/t/p2")

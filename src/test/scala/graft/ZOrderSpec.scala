@@ -29,7 +29,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
     val e = Tables.events(spark, sf).select(
       pmod(xxhash64(col("event_id")), lit(65536L)).as("x"),
       pmod(xxhash64(col("event_id"), lit(7)), lit(65536L)).as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = Stored.tempDir("zorder")
     ZOrder.writeZOrdered(e, "x", "y", numFiles = 16, s"$dir/z")
     e.withColumn("_k", col("x"))
       .repartitionByRange(16, col("_k")).sortWithinPartitions("_k")
