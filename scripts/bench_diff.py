@@ -14,9 +14,10 @@ window since r13, so wall-vs-clean comparisons are structurally
 unfalsifiable, while per-query CPU-seconds and shuffle bytes are
 window-robust — a CPU or shuffle-bytes regression is a plan/code
 regression, not scheduling. The wall table stays as context, and
-risers the bench re-ran in-window (`wall_rerun`, r15 task 3) are
-adjudicated from data: a riser whose same-window re-run lands near
-prev is a transient, not a regression.
+risers re-run in-window are adjudicated from data: a riser whose
+same-window re-run lands near prev is a transient, not a regression.
+Only the r15-r17 artifacts carry those re-runs (`wall_rerun`); the
+bench no longer writes the field, so it is read through `.get`.
 """
 import json, re, sys
 

@@ -215,55 +215,6 @@ object Bench {
       (name, timesCpu.map(_._1), err, timesCpu.map(_._2),
         timesCpu.map(_._3), res0)
     }
-    // AUTOMATED RISER RE-RUN (round-15 verdict task 3): on this host,
-    // single-row wall spikes inside an otherwise steady run are
-    // routinely transient (q_textrank read 6.99 s in the r15 pin pass
-    // and 3.10 s re-measured minutes later, identical plan + shuffle
-    // bytes). When SPARK_GRAFT_BENCH_PREV names the previous round's
-    // artifact, every query whose best-rep wall rose >=1.3x vs that
-    // artifact (and costs >=0.5 s — below that, scheduler jitter
-    // dominates the ratio) is re-run ONCE at the end of the session,
-    // and both readings ship in the JSON as `wall_rerun`, so the
-    // BENCH_DIFF adjudication quotes same-window data instead of
-    // prose. Top 8 by ratio; `queries`/`reps` keep the original
-    // readings (the rerun is adjudication evidence, not a best-of-3).
-    val prevWall: Map[String, Double] = sys.env.get("SPARK_GRAFT_BENCH_PREV")
-      .flatMap { p =>
-        try Some(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p)), java.nio.charset.StandardCharsets.UTF_8))
-        catch { case e: Throwable =>
-          System.err.println(s"bench: could not read prev artifact $p: $e")
-          None
-        }
-      }
-      .flatMap { txt =>
-        """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt).map(_.group(1))
-      }
-      .map(_.split(",").toSeq.flatMap { kv =>
-        kv.split(":") match {
-          case Array(k, v) =>
-            try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-            catch { case _: Throwable => None }
-          case _ => None
-        }
-      }.toMap)
-      .getOrElse(Map.empty)
-    val curWall = results.filter(_._3.isEmpty)
-      .map { case (k, t, _, _, _, _) => k -> t.min }.toMap
-    val rerun: Seq[(String, Double)] = curWall.toSeq
-      .filter { case (k, _) => !k.startsWith("_build_") }
-      .flatMap { case (k, w) =>
-        prevWall.get(k).filter(_ > 0).map(p => (k, w, w / p)) }
-      .filter { case (_, w, r) => r >= 1.3 && w >= 0.5 }
-      .sortBy(-_._3).take(8)
-      .map { case (k, _, _) =>
-        drainState()
-        drainBus()
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(k)(spark, sfDir).count()
-        catch { case _: Throwable => () }
-        k -> (System.nanoTime() - t0) / 1e9
-      }
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
@@ -302,9 +253,7 @@ object Bench {
     val totalCpu = okQueries.map(_._4.min).sum
     val buildTotal = okBuilds.map(_._2.min).sum
     val buildCpu = okBuilds.map(_._4.min).sum
-    val rerunJson = rerun.map { case (k, w) => jstr(k) + ":" + w }
-      .mkString("{", ",", "}")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":$totalCpu,"build_total":$buildTotal,"build_cpu":$buildCpu,"queries":$qs,"reps":$reps,"cpu":$cpu,"io":$io,"wall_rerun":$rerunJson,"errors":$errs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":$totalCpu,"build_total":$buildTotal,"build_cpu":$buildCpu,"queries":$qs,"reps":$reps,"cpu":$cpu,"io":$io,"errors":$errs,"sf":"$sfDir"}"""
     println(json)
     // round-10 lesson: the graded artifact preserved only a 2,000-char
     // stdout tail — the full per-query telemetry was lost to the capture

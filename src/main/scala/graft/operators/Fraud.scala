@@ -10,10 +10,13 @@ import org.apache.spark.sql.types._
   * over per-window sums; FraudDetector.java:94-119 with a 5 s timer
   * buffer).
   *
-  * Batch form: tumbling-window sum per key, filtered on the
-  * threshold. The filter sits above a partial-aggregated shuffle, so
-  * at 100 TB the only wide exchange is the (key, window) aggregation;
-  * alerts are a tiny filtered result.
+  * Tumbling-window sum per key, filtered on the threshold. The filter
+  * sits above a partial-aggregated shuffle, so at 100 TB the only wide
+  * exchange is the (key, window) aggregation; alerts are a tiny
+  * filtered result. The same operator is the streaming FraudDetectionJob
+  * (window sum → FraudDetector2 threshold): on a stream the caller has
+  * given `withWatermark`, append mode emits each window once, when the
+  * watermark passes its end.
   */
 object Fraud {
 

@@ -21,14 +21,18 @@ import org.apache.spark.sql.types._
   *    already-tiny partials. The naive plan replicates every input row
   *    size/slide times *before* the shuffle; the pane plan replicates
   *    only pane partials, which is the whole point at 100 TB.
-  *    Both sliding operators run on a batch frame or on a watermarked
-  *    stream.
   *  - incremental window-sum merge across firings (reference persists
   *    windowStart_accountId sums in RocksDB and re-adds; batch analog
   *    is the per-key running total over window sums)
   *  - count-or-time hybrid trigger chunks (reference: CustomTrigger
   *    .java:35-55 fires every maxCount elements or at window end;
   *    batch analog chunks each window's elements by arrival rank)
+  *
+  * Tumbling, sliding, pane-sliding and session aggregation share one
+  * grouping stage and run on a batch frame or on a stream the caller
+  * has given `withWatermark` (Structured Streaming's one query for
+  * table and stream); the cumulative sum and trigger chunks use window
+  * functions and run on frames only.
   *
   * Conventions for oracle parity: window starts are emitted as BIGINT
   * epoch seconds; double measures are summed as DECIMAL (exact and
@@ -44,9 +48,35 @@ object Windows {
   val Dec: DecimalType = DecimalType(18, 2)
   val DecOut: DecimalType = DecimalType(38, 2)
 
-  /** Epoch-aligned window start (BIGINT seconds) for a timestamp. */
-  def windowStart(ts: Column, sizeSec: Long): Column =
-    (floor(unix_timestamp(ts) / sizeSec) * sizeSec).cast(LongType)
+  /** The one time-window grouping stage: groups by `key` and the
+    * window struct `w` (a `window` or `session_window` column) and
+    * emits `sum_dec` (exact DECIMAL), `cnt`, and `ws`, the window start
+    * as BIGINT epoch seconds. Rows with a null time fall in no window
+    * and are dropped. It groups on the struct, not on `w.start`: a
+    * watermarked stream in append mode accepts only the struct. `w`
+    * stays in the output, since on a stream it carries the watermark
+    * that a second stage over `window_time(w)` needs. Runs on a batch
+    * frame or on a stream the caller has given `withWatermark`.
+    */
+  private def windowAgg(df: DataFrame, key: String, w: Column,
+                        sumDec: Column, cnt: Column): DataFrame =
+    df.groupBy(col(key), w.as("w"))
+      .agg(sumDec.cast(DecOut).as("sum_dec"), cnt.as("cnt"))
+      .select(col(key), col("w"), unix_timestamp(col("w.start")).as("ws"),
+        col("sum_dec"), col("cnt"))
+
+  /** [[windowAgg]] over raw rows: SUM of `valCol` and a row count. */
+  private def windowSum(df: DataFrame, key: String, w: Column,
+                        valCol: String): DataFrame =
+    windowAgg(df, key, w, sum(col(valCol).cast(Dec)), count(lit(1)))
+
+  /** Projects `keys`, then `sum_val` (the DECIMAL sum cast to DOUBLE),
+    * `cnt` and `mean_cents` (integer cents of the exact mean).
+    */
+  private def withMean(df: DataFrame, keys: Column*): DataFrame =
+    df.select(keys ++ Seq(
+      col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"),
+      expr("cast(sum_dec * 100 as bigint) div cnt").as("mean_cents")): _*)
 
   /** Keyed tumbling-window SUM + count with the exact DECIMAL sum kept
     * (column `sum_dec`) — internal building block for operators that
@@ -54,15 +84,13 @@ object Windows {
     */
   def tumblingAggDec(events: DataFrame, key: String, tsCol: String,
                      valCol: String, sizeSec: Long): DataFrame =
-    events
-      .groupBy(col(key), windowStart(col(tsCol), sizeSec).as("ws"))
-      .agg(
-        sum(col(valCol).cast(Dec)).cast(DecOut).as("sum_dec"),
-        count(lit(1)).as("cnt"))
+    windowSum(events, key, window(col(tsCol), s"$sizeSec seconds"), valCol)
+      .select(col(key), col("ws"), col("sum_dec"), col("cnt"))
 
   /** Keyed tumbling-window SUM + count; the fraud pipeline's core
     * aggregation. One shuffle on (key, window); partial aggregation
-    * happens map-side before it.
+    * happens map-side before it. On a stream in append mode a window
+    * emits once, when the watermark passes its end.
     */
   def tumblingAgg(events: DataFrame, key: String, tsCol: String,
                   valCol: String, sizeSec: Long): DataFrame =
@@ -73,13 +101,13 @@ object Windows {
   /** Keyed sliding-window aggregation via the built-in assigner.
     * Spark explodes each row into size/slide windows, then shuffles
     * on (key, window); on a stream each row updates size/slide window
-    * states. Baseline for `paneSlidingAgg`. Runs on a batch frame or
-    * on a stream the caller has given a watermark.
+    * states. Baseline for `paneSlidingAgg`.
     */
   def slidingAgg(events: DataFrame, key: String, tsCol: String,
                  valCol: String, sizeSec: Long, slideSec: Long): DataFrame =
-    slidingWindows(events, key, col(tsCol), sizeSec, slideSec,
-      sum(col(valCol).cast(Dec)), count(lit(1)))
+    withMean(windowSum(events, key,
+      window(col(tsCol), s"$sizeSec seconds", s"$slideSec seconds"), valCol),
+      col(key), col("ws"))
 
   /** Pane/slice-optimized sliding-window aggregation (same result set
     * as [[slidingAgg]]), as two chained time-window aggregations:
@@ -96,50 +124,25 @@ object Windows {
     * contain the whole pane (ws < paneStart+pane ⟺ ws ≤ paneStart for
     * pane-aligned ws; instant < ws+size ⟺ paneStart+pane ≤ ws+size),
     * which makes pane partials lossless (reference:
-    * CustomSlidingWindow.java:25-127 pane slicing). Runs on a batch
-    * frame or on a stream the caller has given a watermark; there the
-    * streaming planner propagates the watermark across both stateful
-    * operators.
+    * CustomSlidingWindow.java:25-127 pane slicing). On a stream the
+    * planner propagates the watermark across both stateful operators.
     */
   def paneSlidingAgg(events: DataFrame, key: String, tsCol: String,
                      valCol: String, sizeSec: Long, slideSec: Long): DataFrame = {
     val paneSec = gcd(sizeSec, slideSec)
-    val panes = events
-      .groupBy(col(key), window(col(tsCol), s"$paneSec seconds").as("pw"))
-      .agg(sum(col(valCol).cast(Dec)).as("psum"), count(lit(1)).as("pcnt"))
-    slidingWindows(panes, key, window_time(col("pw")), sizeSec, slideSec,
-      sum(col("psum")), sum(col("pcnt")))
+    val panes = windowSum(events, key, window(col(tsCol), s"$paneSec seconds"), valCol)
+    withMean(windowAgg(panes, key,
+      window(window_time(col("w")), s"$sizeSec seconds", s"$slideSec seconds"),
+      sum(col("sum_dec")), sum(col("cnt"))), col(key), col("ws"))
   }
-
-  /** Groups by key and the sliding windows containing `ts`, then
-    * projects the sliding operators' shared output: `ws` (BIGINT
-    * epoch seconds), `sum_val`, `cnt`, `mean_cents`.
-    */
-  private def slidingWindows(df: DataFrame, key: String, ts: Column,
-                             sizeSec: Long, slideSec: Long,
-                             sumDec: Column, cnt: Column): DataFrame =
-    df.groupBy(col(key),
-        window(ts, s"$sizeSec seconds", s"$slideSec seconds").as("w"))
-      .agg(sumDec.cast(DecOut).as("sum_dec"), cnt.as("cnt"))
-      .select(
-        col(key),
-        unix_timestamp(col("w.start")).as("ws"),
-        col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"),
-        expr("cast(sum_dec * 100 as bigint) div cnt").as("mean_cents"))
 
   /** Gap-based session windows per key (generalizes the reference's
     * 5 s event-time timer buffer, FraudDetector.java:94-119).
     */
   def sessionAgg(events: DataFrame, key: String, tsCol: String,
                  valCol: String, gapSec: Long): DataFrame =
-    events
-      .groupBy(col(key), session_window(col(tsCol), s"$gapSec seconds").as("w"))
-      .agg(
-        sum(col(valCol).cast(Dec)).cast(DecOut).as("sum_dec"),
-        count(lit(1)).as("cnt"))
-      .select(
-        col(key),
-        unix_timestamp(col("w.start")).as("sess_start"),
+    windowSum(events, key, session_window(col(tsCol), s"$gapSec seconds"), valCol)
+      .select(col(key), col("ws").as("sess_start"),
         col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"))
 
   /** Per-key running total across tumbling windows, ordered by window
@@ -171,21 +174,19 @@ object Windows {
   def triggerChunks(events: DataFrame, key: String, tsCol: String,
                     tieBreak: String, valCol: String,
                     sizeSec: Long, maxCount: Int): DataFrame = {
-    val ws = windowStart(col(tsCol), sizeSec).as("ws")
+    val ws = (floor(unix_timestamp(col(tsCol)) / sizeSec) * sizeSec)
+      .cast(LongType).as("ws")
     val rankW = Window.partitionBy(col(key), col("ws"))
       .orderBy(col(tsCol), col(tieBreak))
-    events
+    withMean(events
       .select(col(key), ws, col(tsCol), col(tieBreak), col(valCol))
       .withColumn("chunk",
         floor((row_number().over(rankW) - 1) / maxCount).cast(LongType))
       .groupBy(col(key), col("ws"), col("chunk"))
       .agg(
         sum(col(valCol).cast(Dec)).cast(DecOut).as("sum_dec"),
-        count(lit(1)).as("cnt"))
-      .select(
-        col(key), col("ws"), col("chunk"),
-        col("sum_dec").cast(DoubleType).as("sum_val"), col("cnt"),
-        expr("cast(sum_dec * 100 as bigint) div cnt").as("mean_cents"))
+        count(lit(1)).as("cnt")),
+      col(key), col("ws"), col("chunk"))
   }
 
   @annotation.tailrec

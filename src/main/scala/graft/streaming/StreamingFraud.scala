@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming re-expression of the reference's streaming
@@ -14,32 +13,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    `withWatermark(ts, 0s / 5s)`; late rows beyond the watermark are
   *    dropped by Spark exactly like Flink discards late elements.
   *  - custom tumbling/sliding window assigner + event-time trigger →
-  *    `groupBy(window(...))` in append mode (emits when the watermark
-  *    passes window end — the FIRE_AND_PURGE of
-  *    CustomTumblingTrigger.java:33-89). Sliding means are
-  *    `Windows.slidingAgg` / `Windows.paneSlidingAgg` on the
-  *    watermarked stream.
+  *    the batch operators on the watermarked stream in append mode
+  *    (a window emits when the watermark passes its end — the
+  *    FIRE_AND_PURGE of CustomTumblingTrigger.java:33-89): tumbling
+  *    alerts are `Fraud.windowAlerts`, sliding means
+  *    `Windows.slidingAgg` / `Windows.paneSlidingAgg`. This object
+  *    keeps only the operators that need keyed state beyond a window
+  *    aggregation.
   *  - ValueState/ListState + event-time timers (FraudDetector.java) →
   *    `flatMapGroupsWithState` with `EventTimeTimeout` GroupState.
   *  - RocksDB state backend → RocksDBStateStoreProvider (see
   *    [[GraftStreams]]).
   */
 object StreamingFraud {
-
-  /** Tumbling per-account sums with threshold alerts — the
-    * FraudDetectionJob pipeline (window sum → FraudDetector2
-    * threshold). Append mode: a window emits once, when the watermark
-    * passes its end.
-    */
-  def tumblingAlerts(tx: DataFrame, sizeSec: Long, threshold: Double,
-                     watermarkDelay: String = "5 seconds"): DataFrame =
-    tx.withWatermark("ts", watermarkDelay)
-      .groupBy(col("accountId"), window(col("ts"), s"$sizeSec seconds").as("w"))
-      .agg(sum(col("amount")).as("total"), count(lit(1)).as("cnt"))
-      .filter(col("total") > threshold)
-      .select(col("accountId"),
-        unix_millis(col("w.start")).as("windowStartMs"),
-        col("total"), col("cnt"))
 
   /** Per-element timer emulation state: every element's pending fire
     * time plus the record buffer as parallel (tsMs, amount) arrays in

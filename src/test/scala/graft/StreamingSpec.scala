@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.{Fraud, Windows}
 import graft.streaming._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.plans.logical.FlatMapGroupsWithState
@@ -119,8 +120,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("tumbling window alerts fire when the watermark passes window end") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val alerts = StreamingFraud.tumblingAlerts(input.toDF(), sizeSec = 10,
-      threshold = 100.0, watermarkDelay = "5 seconds")
+    val alerts = Fraud.windowAlerts(input.toDF().withWatermark("ts", "5 seconds"),
+      "accountId", "ts", "amount", sizeSec = 10, threshold = 100.0)
     val sink = runToSink(alerts, "t_alerts", "append") { step =>
       input.addData(tx(1, 60, 1), tx(1, 70, 3), tx(2, 30, 2))
       step(0)
@@ -132,15 +133,15 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val rows = sink.collect()
     assert(rows.map(_.getLong(0)).toSet === Set(1L)) // only acct 1 crossed
     val r = rows.head
-    assert(r.getLong(1) === Base)
+    assert(r.getLong(1) === Base / 1000)
     assert(math.abs(r.getDouble(2) - 130.0) < 1e-9)
   }
 
   test("late data beyond the watermark is dropped (out-of-order handling)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val agg = StreamingFraud.tumblingAlerts(input.toDF(), sizeSec = 10,
-      threshold = 0.0, watermarkDelay = "5 seconds")
+    val agg = Fraud.windowAlerts(input.toDF().withWatermark("ts", "5 seconds"),
+      "accountId", "ts", "amount", sizeSec = 10, threshold = 0.0)
     val sink = runToSink(agg, "t_late", "append") { step =>
       input.addData(tx(1, 50, 1))
       step(0)
@@ -161,16 +162,16 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     // the full reference pipeline: source → ±500 s hash perturbation →
     // 5 s watermark → tumbling sum. Because perturb() is a pure
-    // projection, the EXPECTED output computes in batch mode over the
-    // same rows — the stream must agree exactly.
+    // projection, the EXPECTED output is the same operator in batch
+    // mode over the same rows — the stream must agree exactly.
     val phase1 = Seq(tx(1, 60, 10), tx(1, 70, 400), tx(2, 30, 200))
     val phase3 = Seq(tx(7, 999, 20), tx(7, 5, 300))
     val sizeSec = 10L
 
     val input = MemoryStream[Transaction]
-    val piped = StreamingFraud.tumblingAlerts(
-      TransactionGen.perturb(input.toDF()), sizeSec = sizeSec,
-      threshold = 0.0, watermarkDelay = "5 seconds")
+    val piped = Fraud.windowAlerts(
+      TransactionGen.perturb(input.toDF()).withWatermark("ts", "5 seconds"),
+      "accountId", "ts", "amount", sizeSec, threshold = 0.0)
     val sink = runToSink(piped, "t_ooo", "append") { step =>
       input.addData(phase1: _*)
       step(0)
@@ -185,12 +186,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       step(0)
     }
 
-    val expected = TransactionGen.perturb(phase1.toDF())
-      .groupBy(col("accountId"),
-        window(col("ts"), s"$sizeSec seconds").as("w"))
-      .agg(sum(col("amount")).as("total"), count(lit(1)).as("cnt"))
-      .select(col("accountId"), unix_millis(col("w.start")).as("windowStartMs"),
-        col("total"), col("cnt"))
+    val expected = Fraud.windowAlerts(TransactionGen.perturb(phase1.toDF()),
+      "accountId", "ts", "amount", sizeSec, threshold = 0.0)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getLong(3))).toSet
     val got = sink.filter(col("accountId").isin(1L, 2L, 7L))
@@ -281,8 +278,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = Stored.tempDir("graft_sink")
     val input = MemoryStream[Transaction]
-    val alerts = StreamingFraud.tumblingAlerts(input.toDF(), sizeSec = 10,
-      threshold = 100.0, watermarkDelay = "5 seconds")
+    val alerts = Fraud.windowAlerts(input.toDF().withWatermark("ts", "5 seconds"),
+      "accountId", "ts", "amount", sizeSec = 10, threshold = 100.0)
     val q = GraftStreams.parquetAlertSink(alerts, s"$dir/out", s"$dir/ckpt")
     try {
       input.addData(tx(1, 200, 1))
@@ -395,7 +392,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("sliding window means emit per-slide panes (reference pane slicing)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val means = graft.operators.Windows.slidingAgg(
+    val means = Windows.slidingAgg(
       input.toDF().withWatermark("ts", "5 seconds"), "accountId", "ts",
       "amount", sizeSec = 10, slideSec = 5)
     val sink = runToSink(means, "t_slide", "append") { step =>
@@ -436,8 +433,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val metrics = Metrics.attach(spark)
     try {
       val input = MemoryStream[Transaction]
-      val agg = StreamingFraud.tumblingAlerts(input.toDF(), sizeSec = 10,
-        threshold = 0.0, watermarkDelay = "5 seconds")
+      val agg = Fraud.windowAlerts(input.toDF().withWatermark("ts", "5 seconds"),
+        "accountId", "ts", "amount", sizeSec = 10, threshold = 0.0)
       val q = agg.writeStream.format("memory").queryName("t_metrics")
         .outputMode("append").start()
       try {
@@ -550,8 +547,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
   test("in-order streams work with a zero-delay (ascending) watermark") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    val agg = StreamingFraud.tumblingAlerts(input.toDF(), sizeSec = 10,
-      threshold = 0.0, watermarkDelay = "0 seconds")
+    val agg = Fraud.windowAlerts(input.toDF().withWatermark("ts", "0 seconds"),
+      "accountId", "ts", "amount", sizeSec = 10, threshold = 0.0)
     val sink = runToSink(agg, "t_inorder", "append") { step =>
       input.addData(tx(1, 5, 1), tx(1, 5, 9))
       step(0)
@@ -697,7 +694,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
     val data = Seq(tx(1, 10, 6), tx(1, 30, 8), tx(1, 5, 12), tx(2, 7, 3))
-    val paned = graft.operators.Windows.paneSlidingAgg(
+    val paned = Windows.paneSlidingAgg(
       input.toDF().withWatermark("ts", "5 seconds"), "accountId", "ts",
       "amount", sizeSec = 10, slideSec = 5)
     var planStr = ""
@@ -723,7 +720,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       .select("accountId", "ws", "sum_val", "cnt", "mean_cents").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3),
         r.getLong(4))).toSet
-    val expected = graft.operators.Windows.slidingAgg(
+    val expected = Windows.slidingAgg(
       data.toDF(), "accountId", "ts", "amount", sizeSec = 10, slideSec = 5)
       .filter(col("accountId") === 1)
       .select("accountId", "ws", "sum_val", "cnt", "mean_cents").collect()
@@ -743,11 +740,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100),
           r.getLong(3), r.getLong(4))).toSeq.sorted
     val uninterrupted = assertRestartEquivalent(shortFeed)(ds =>
-      graft.operators.Windows.paneSlidingAgg(
+      Windows.paneSlidingAgg(
         ds.toDF().withWatermark("ts", "2 seconds"), "accountId", "ts",
         "amount", sizeSec = 10, slideSec = 4))(windows)
     // the closing row's watermark has emitted every other window whole
-    val batch = windows(graft.operators.Windows.slidingAgg(
+    val batch = windows(Windows.slidingAgg(
       shortFeed.flatten.toDF(), "accountId", "ts", "amount",
       sizeSec = 10, slideSec = 4)).filter(_._1 != 99L)
     assert(batch.nonEmpty)
@@ -758,11 +755,15 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "emit the uninterrupted run's windows (RocksDB, changelog)") {
     // open window sums live in RocksDB state; the closing row's
     // watermark (198 s) closes every window but its own
+    def windows(df: DataFrame): Seq[(Long, Long, Long, Long)] =
+      df.select("accountId", "ws", "sum_val", "cnt").collect()
+        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100),
+          r.getLong(3))).toSeq.sorted
     val uninterrupted = assertRestartEquivalent(shortFeed)(ds =>
-      StreamingFraud.tumblingAlerts(ds.toDF(), sizeSec = 10,
-        threshold = 100.0, watermarkDelay = "2 seconds"))(alertKeys)
+      Fraud.windowAlerts(ds.toDF().withWatermark("ts", "2 seconds"),
+        "accountId", "ts", "amount", sizeSec = 10, threshold = 100.0))(windows)
     val batch = shortFeed.flatten.filter(_.accountId != 99L)
-      .groupBy(t => (t.accountId, t.ts.getTime / 10000 * 10000)).toSeq
+      .groupBy(t => (t.accountId, t.ts.getTime / 10000 * 10)).toSeq
       .map { case ((a, ws), rows) =>
         (a, ws, math.round(rows.map(_.amount).sum * 100), rows.size.toLong)
       }
@@ -848,8 +849,8 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = Stored.tempDir("graft_recover")
     val input = MemoryStream[Transaction]
-    val alerts = StreamingFraud.tumblingAlerts(input.toDF(), sizeSec = 10,
-      threshold = 100.0, watermarkDelay = "5 seconds")
+    val alerts = Fraud.windowAlerts(input.toDF().withWatermark("ts", "5 seconds"),
+      "accountId", "ts", "amount", sizeSec = 10, threshold = 100.0)
     val q1 = GraftStreams.parquetAlertSink(alerts, s"$dir/out", s"$dir/ckpt")
     try {
       input.addData(tx(1, 200, 1)) // acct 1 in window [0,10)
@@ -876,15 +877,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       "overlapping activity") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
-    // same session_window aggregation as the batch sessionAgg
-    // (Windows.scala), run as a stream: a session emits when the
+    // the batch sessionAgg run as a stream: a session emits when the
     // watermark passes its (last event + gap) end
-    val sessions = input.toDF()
-      .withWatermark("ts", "2 seconds")
-      .groupBy(col("accountId"),
-        session_window(col("ts"), "10 seconds").as("w"))
-      .agg(count(lit(1)).as("n_tx"), sum(col("amount")).as("total"))
-      .select(col("accountId"), col("n_tx"), col("total"))
+    val sessions = Windows.sessionAgg(input.toDF().withWatermark("ts", "2 seconds"),
+      "accountId", "ts", "amount", gapSec = 10)
+      .select(col("accountId"), col("cnt"), col("sum_val"))
     val sink = runToSink(sessions, "t_sess", "append") { step =>
       // events 1s,5s,12s chain into ONE session (gaps < 10s) even
       // though 1→12 exceeds the gap; account 2 is a separate session

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Fraud, Windows}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,15 +16,37 @@ class WindowsSpec extends AnyFunSuite with SparkSpec {
     assert(direct.exceptAll(pane).isEmpty && pane.exceptAll(direct).isEmpty)
   }
 
-  test("pane-sliced sliding agg equals direct for non-divisible shapes") {
+  // edge rows: a null ts, timestamps before 1970 (negative epoch
+  // seconds, off any window boundary), one on a boundary and keys
+  // with one row
+  private def at(sec: Long) = new java.sql.Timestamp(sec * 1000)
+  private val edgeRows = Seq[(String, java.sql.Timestamp, Double)](
+    ("a", null, 5.0), ("a", at(-50), 1.5), ("a", at(-7200), 2.25),
+    ("a", at(600), 3.0), ("b", at(-302181904L), 7.0),
+    ("c", at(1704067201L), 4.0))
+  private lazy val edges = {
     import spark.implicits._
-    // edge rows: a null ts, timestamps before 1970 (negative epoch
-    // seconds, off any window boundary) and keys with one row
-    def at(sec: Long) = new java.sql.Timestamp(sec * 1000)
-    val edges = Seq[(String, java.sql.Timestamp, Double)](
-      ("a", null, 5.0), ("a", at(-50), 1.5), ("a", at(-7200), 2.25),
-      ("a", at(600), 3.0), ("b", at(-302181904L), 7.0),
-      ("c", at(1704067201L), 4.0)).toDF("event_type", "ts", "value")
+    edgeRows.toDF("event_type", "ts", "value")
+  }
+
+  /** Plain-Scala tumbling windows over `edgeRows`: (key, floor-aligned
+    * start in epoch seconds, sum in cents, count). A null-ts row falls
+    * in no window.
+    */
+  private def tumblingModel(sizeSec: Long): Seq[(String, Long, Long, Long)] =
+    edgeRows.filter(_._2 != null)
+      .groupBy { case (k, ts, _) =>
+        (k, Math.floorDiv(Math.floorDiv(ts.getTime, 1000L), sizeSec) * sizeSec) }
+      .toSeq.map { case ((k, ws), rows) =>
+        (k, ws, math.round(rows.map(_._3).sum * 100), rows.size.toLong) }
+      .sorted
+
+  private def windowRows(df: DataFrame) =
+    df.select("event_type", "ws", "sum_val", "cnt").collect()
+      .map(r => (r.getString(0), r.getLong(1), math.round(r.getDouble(2) * 100),
+        r.getLong(3))).toSeq.sorted
+
+  test("pane-sliced sliding agg equals direct for non-divisible shapes") {
     // gcd-pane generality: slide does not divide size (pane < slide)
     for ((input, name) <- Seq(events -> "events", edges -> "edges");
          (size, slide) <- Seq((3600L, 1000L), (3000L, 900L), (5400L, 2400L))) {
@@ -38,6 +61,19 @@ class WindowsSpec extends AnyFunSuite with SparkSpec {
   test("tumbling agg partitions every row into exactly one window") {
     val agg = Windows.tumblingAgg(events, "user_id", "ts", "value", 21600)
     assert(agg.agg(sum("cnt")).head.getLong(0) === events.count())
+  }
+
+  test("tumbling agg and fraud alerts equal the floor-aligned model on " +
+      "edge rows, null ts dropped") {
+    // off-boundary, pre-1970 and on-boundary starts, for sizes that do
+    // and do not divide a day; the threshold splits the windows
+    for (size <- Seq(7L, 900L, 3600L, 86400L)) {
+      val model = tumblingModel(size)
+      assert(windowRows(Windows.tumblingAgg(edges, "event_type", "ts", "value",
+        size)) === model, s"tumbling size=$size")
+      assert(windowRows(Fraud.windowAlerts(edges, "event_type", "ts", "value",
+        size, 2.0)) === model.filter(_._3 > 200), s"alerts size=$size")
+    }
   }
 
   test("session agg covers all rows and respects the gap") {
