@@ -2,11 +2,13 @@
 """Per-query bench deltas between two rounds.
 
 Usage: python3 scripts/bench_diff.py <prev.json> <cur.json>
+  e.g. python3 scripts/bench_diff.py history/bench_full_r16.json \
+         history/bench_full_r17.json
 
 Accepts either a full Bench line ({"metric":"total",...,"queries":
-{...}} — as committed in bench_full_r*.json) or a driver BENCH_r*.json
-whose "tail" field holds a truncated suffix of that line (partial
-queries recovered by regex).
+{...}} — as committed in history/bench_full_r*.json) or a round
+BENCH_r*.json whose "tail" field holds a truncated suffix of that line
+(partial queries recovered by regex).
 
 Since r16 the PRIMARY regression gate is best-rep CPU + shuffle bytes
 (round-15 verdict task 4): the host has not offered a clean wall

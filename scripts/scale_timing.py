@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
-"""Scale-timing table for SCALE_SWEEP.md (round-10 verdict #4).
+"""Scale-timing table for history/SCALE_SWEEP.md (round-10 verdict #4).
 
 Usage: python3 scripts/scale_timing.py <bench_sf0.1.json> <bench_sf0.5.json> [N]
+  e.g. python3 scripts/scale_timing.py history/bench_full_r17.json \
+         history/bench_sf0.5_r17.json
 
 Reads two full Bench artifacts (graft.Bench JSON with "queries"/"cpu")
 and prints a markdown table of the N (default 25) heaviest queries by
@@ -19,7 +21,7 @@ def load(path):
     if "queries" not in doc:
         raise SystemExit(
             f"{path}: no 'queries' key — this reader needs a FULL "
-            "graft.Bench artifact (bench_full_r*.json / "
+            "graft.Bench artifact (history/bench_full_r*.json / "
             "SPARK_GRAFT_BENCH_OUT output); truncated driver tails are "
             "bench_diff.py territory")
     wall = dict(doc["queries"])

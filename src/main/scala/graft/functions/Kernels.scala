@@ -71,9 +71,6 @@ object Kernels {
     fp
   }
 
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
   /** Unicode NFC normalization (UAX#15 canonical compose — the JVM's
     * java.text.Normalizer, same algorithm utf8proc/ICU implement, so
     * DuckDB's `nfc_normalize` is a value-exact oracle for it).

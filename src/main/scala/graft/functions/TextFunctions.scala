@@ -38,12 +38,6 @@ object TextFunctions {
           i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k)): _*))))
       .otherwise(array().cast(ArrayType(StringType)))
 
-  /** Shingles straight from a text column (convenience; see
-    * [[shinglesOfWords]] for the fast two-projection form).
-    */
-  def wordShingles(text: Column, n: Int): Column =
-    shinglesOfWords(words(text), n)
-
   /** Number of whitespace tokens. */
   def wordCount(text: Column): Column = size(words(text))
 

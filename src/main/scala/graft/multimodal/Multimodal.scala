@@ -162,19 +162,6 @@ object Multimodal {
     out
   }
 
-  /** Resize stage: maps each payload to a fixed (w, h) thumbnail
-    * payload with updated metadata. Runs narrow (no shuffle).
-    */
-  def resize(withPayload: DataFrame, w: Int, h: Int): DataFrame = {
-    val resizeUdf = udf((p: Array[Byte]) => resizeBytes(p, w, h))
-    withPayload
-      .withColumn("payload", resizeUdf(col("payload")))
-      .withColumn("meta", struct(
-        octet_length(col("payload")).as("n_bytes"),
-        lit(w).as("width"), lit(h).as("height"),
-        col("meta.frames").as("frames")))
-  }
-
   /** Driver-checkable scalar digest of the feature output. A raw
     * `array<float>` column crashes generic tabular comparators, so the
     * shipped query projects exact integer digests derived from the

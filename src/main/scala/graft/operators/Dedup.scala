@@ -453,32 +453,23 @@ object Dedup {
   }
 
   /** Fold an admitted batch into an index: the batch's own
-    * band/shingle/size tables (one batch scan — [[buildBandIndex]]
-    * on the batch) unioned onto the corpus tables, so a daily
-    * pipeline maintains its index at batch cost and never rebuilds
-    * from corpus text.
+    * band/shingle/size tables (a [[buildBandIndex]] of the batch,
+    * built by the caller so it can release the batch's shingle pin
+    * after saving the extension) unioned onto the corpus tables, so a
+    * daily pipeline maintains its index at batch cost and never
+    * rebuilds from corpus text. Parameters must match; the base is
+    * typically [[loadBandIndex]]-ed, so extension never re-shingles
+    * the corpus.
     *
     * Compaction cadence: each extend deepens the in-memory union
-    * lineage by one level (and pins one more batch-shingle cache), so
-    * a long-lived admission loop should re-[[saveBandIndex]] every
-    * ~10 extends and [[loadBandIndex]] back — the save compacts the
-    * union tree into three flat parquet tables and the reload's plan
-    * depth is constant again. Save-after-extends is exact: the
-    * re-saved index equals a fresh [[buildBandIndex]] of the grown
-    * corpus (spec: "re-save discipline"), because the three tables
-    * are row-wise unions with no ordering dependence.
-    */
-  def extendIndex(index: MinhashIndex, batch: DataFrame,
-                  idCol: String, textCol: String): MinhashIndex =
-    extendIndex(index, buildBandIndex(batch, idCol, textCol,
-      index.shingleN, index.k, index.nBands))
-
-  /** Union an existing index with a PREBUILT batch sub-index — the
-    * overload for callers that need to release the batch's shingle
-    * pin after saving the extension (the DataFrame variant above
-    * builds the sub-index internally, where its pin is unreachable).
-    * Parameters must match; the base is typically
-    * [[loadBandIndex]]-ed, so extension never re-shingles the corpus.
+    * lineage by one level, so a long-lived admission loop should
+    * re-[[saveBandIndex]] every ~10 extends and [[loadBandIndex]]
+    * back — the save compacts the union tree into three flat parquet
+    * tables and the reload's plan depth is constant again.
+    * Save-after-extends is exact: the re-saved index equals a fresh
+    * [[buildBandIndex]] of the grown corpus (spec: "re-save
+    * discipline"), because the three tables are row-wise unions with
+    * no ordering dependence.
     */
   def extendIndex(index: MinhashIndex, batch: MinhashIndex): MinhashIndex = {
     require(batch.shingleN == index.shingleN && batch.k == index.k &&

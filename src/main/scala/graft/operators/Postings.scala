@@ -47,8 +47,7 @@ import org.apache.spark.sql.functions._
 object Postings {
 
   /** `(doc_id, source, w)` tokenized rows — the one tokenize pass all
-    * seven stream writers share (build AND batch admission, so the two
-    * paths cannot drift).
+    * stream writers share.
     */
   private def tokenized(docs: DataFrame, idCol: String, srcCol: String,
                         textCol: String): DataFrame =
@@ -74,15 +73,6 @@ object Postings {
     toks.select(col("doc_id"), col("source"),
       explode(array_distinct(col("w"))).as("term"))
 
-  // the BM25 term-pick tokenization: per-doc distinct of LOWERCASED
-  // [a-z]+ tokens (distinct after lowering — "The the" is ONE
-  // distinct lowered token)
-  private def dtokenLowerRows(toks: DataFrame): DataFrame =
-    toks.select(col("doc_id"), col("source"),
-      explode(array_distinct(expr(
-        "filter(transform(w, x -> lower(x))," +
-          " x -> x rlike '^[a-z]+$')"))).as("term"))
-
   // per-doc distinct adjacent bigrams, hashed to 16-byte
   // (xxhash64, len) keys IN-ARRAY (hash first, distinct on the
   // hashed struct — exactly the consumers' previous
@@ -107,9 +97,8 @@ object Postings {
     "filter(transform(w, x -> lower(x)), x -> x rlike '^[a-z]+$')")
 
   /** `(doc_id, term, tf)` — the BM25 term-frequency table over the
-    * lowered `[a-z]+` tokens. Per-document rows (docs contribute
-    * disjoint row sets), so batch admission is a plain append; the
-    * map-side partial aggregation means the build's exchange carries
+    * lowered `[a-z]+` tokens, one row per (doc, term); the map-side
+    * partial aggregation means the build's exchange carries
     * (doc, term)-distinct rows, i.e. the table itself.
     */
   private def tfLowerRows(toks: DataFrame): DataFrame =
@@ -136,10 +125,8 @@ object Postings {
     * table measured 2× the token-stream CPU at bench conf, because the
     * small hash-scattered table reads as one scan task and its
     * single-task hash agg thrashes), and the stored rows are
-    * fixed-width. Per-document row sets, so batch admission is a
-    * plain append (the hashes are deterministic). Term strings
-    * re-attach per run through the vocabulary-sized `df_raw`
-    * dictionary.
+    * fixed-width. Term strings re-attach per run through the
+    * vocabulary-sized `df_raw` dictionary.
     */
   private def tfHashedRows(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"), explode(col("w")).as("term"))
@@ -162,29 +149,6 @@ object Postings {
         size(col("w")).cast("long").as("dl"))
       .filter(col("dl") >= 1)
 
-  /** Write the seven stream tables sequentially from one persisted
-    * tokenize pass — the APPEND path [[admitBatch]] uses (batch-sized
-    * inputs; [[build]] runs the same row expressions through the
-    * concurrent writer pool instead).
-    */
-  private def writeStreams(docs: DataFrame, idCol: String, srcCol: String,
-                           textCol: String, path: String,
-                           mode: String): Unit = {
-    val toks = tokenized(docs, idCol, srcCol, textCol)
-      .persist() // seven writers, one tokenize pass
-    try {
-      tokenRows(toks).write.mode(mode).parquet(s"$path/tokens")
-      pairRows(toks).write.mode(mode).parquet(s"$path/pairs")
-      dtokenRows(toks).write.mode(mode).parquet(s"$path/dtokens")
-      dtokenLowerRows(toks).write.mode(mode).parquet(s"$path/dtokens_lower")
-      dbigramRows(toks).write.mode(mode).parquet(s"$path/dbigrams")
-      tfLowerRows(toks).write.mode(mode).parquet(s"$path/tf_lower")
-      dlLowerRows(toks).write.mode(mode).parquet(s"$path/dl_lower")
-      tfHashedRows(toks).write.mode(mode).parquet(s"$path/tf_hashed")
-      dlRawRows(toks).write.mode(mode).parquet(s"$path/dl_raw")
-    } finally toks.unpersist(blocking = false)
-  }
-
   /** Tokenize once and write the stream + dictionary tables under
     * `path`.
     * The per-doc-DISTINCT streams are computed IN-ARRAY here — while
@@ -206,18 +170,16 @@ object Postings {
     *
     * The independent stream writers are submitted from a small thread
     * pool (guide §2.6: concurrent jobs back-fill each other's task tails —
-    * the seven writers are independent jobs over the one PRE-FILLED
+    * the writers are independent jobs over the one PRE-FILLED
     * tokenize cache, so run sequentially each writer's straggler tail
     * leaves cores idle; measured r16 at `local[32]`: sequential
     * 4.4-4.9 s vs concurrent 2.2-2.3 s steady at sf0.1, 22.0-26.6 vs
-    * 11.5-12.4 s at 10× data — interleaved reps, OPTIMIZATION_r16.md).
-    * The two dictionary derivations chain INSIDE the future of the
-    * stream they aggregate (bigram dictionaries after the dbigrams
-    * write, df_lower after the dtokens_lower write), so they overlap
-    * the remaining writers too. Same expressions, same tables, same
-    * rows as the sequential [[writeStreams]] path admission uses —
-    * only job submission order changes; the cache is filled eagerly
-    * BEFORE the pool starts (the ngramJaccard lock finding:
+    * 11.5-12.4 s at 10× data — interleaved reps, history/OPTIMIZATION_r16.md).
+    * The dictionary derivations chain INSIDE the future of the stream
+    * they aggregate (bigram dictionaries after the dbigrams write,
+    * df_raw after dtokens, df_lower after tf_lower), so they overlap
+    * the remaining writers too. The cache is filled eagerly BEFORE
+    * the pool starts (the ngramJaccard lock finding:
     * concurrent first-consumers of a lazy persist serialize on
     * per-block fill locks).
     */
@@ -240,27 +202,26 @@ object Postings {
           Future {
             dtokenRows(toks).write.mode("overwrite")
               .parquet(s"$path/dtokens")
-            // df_raw chains off the dtokens write the way df_lower
-            // chains off dtokens_lower: dtokens is per-doc DISTINCT,
-            // so a per-term count IS the raw document frequency (and
-            // its term set IS the raw-term dictionary)
+            // dtokens is per-doc DISTINCT, so a per-term count IS the
+            // raw document frequency (and its term set IS the raw-term
+            // dictionary)
             ParquetIO.read(spark, s"$path/dtokens")
               .groupBy(col("term")).agg(count(lit(1)).as("df"))
               .write.mode("overwrite").parquet(s"$path/df_raw")
           },
-          Future(tfLowerRows(toks).write.mode("overwrite")
-            .parquet(s"$path/tf_lower")),
+          Future {
+            tfLowerRows(toks).write.mode("overwrite")
+              .parquet(s"$path/tf_lower")
+            // tf_lower has one row per (doc, term), so a per-term
+            // count IS the lowered document frequency
+            ParquetIO.read(spark, s"$path/tf_lower")
+              .groupBy(col("term")).agg(count(lit(1)).as("df"))
+              .write.mode("overwrite").parquet(s"$path/df_lower")
+          },
           Future(dlLowerRows(toks).write.mode("overwrite")
             .parquet(s"$path/dl_lower")),
           Future(dlRawRows(toks).write.mode("overwrite")
             .parquet(s"$path/dl_raw")),
-          Future {
-            dtokenLowerRows(toks).write.mode("overwrite")
-              .parquet(s"$path/dtokens_lower")
-            ParquetIO.read(spark, s"$path/dtokens_lower")
-              .groupBy(col("term")).agg(count(lit(1)).as("df"))
-              .write.mode("overwrite").parquet(s"$path/df_lower")
-          },
           Future(tfHashedRows(toks).write.mode("overwrite")
             .parquet(s"$path/tf_hashed")),
           Future {
@@ -284,95 +245,6 @@ object Postings {
     } finally toks.unpersist(blocking = false)
   }
 
-
-  /** Admit a BATCH of new documents into an existing postings
-    * snapshot at BATCH cost — the stored corpus is never re-read and
-    * never re-tokenized (round-15 verdict task 2: a daily 100 TB
-    * pipeline admits a batch; full rebuilds are for new snapshots).
-    *
-    *  - The seven stream tables append the batch's own rows, computed
-    *    by the SAME expressions as [[build]] (shared one-definition
-    *    helpers, so the two paths cannot drift). Appends are exact
-    *    because every stream table is a per-document row set:
-    *    admission ≡ rebuild on corpus ∪ batch as multisets (spec:
-    *    "admission equals rebuild", random batch splits).
-    *  - `bigram_df` count-merges: the batch's per-bigram doc counts
-    *    (batch-aggregated, vocabulary-sized) sum into the stored
-    *    dictionary — exact because df is a per-doc-distinct COUNT and
-    *    doc sets are disjoint by precondition.
-    *  - `source_bigrams` distinct-unions the batch vocabulary.
-    *
-    * The two dictionaries are replaced via a staged write + atomic
-    * directory rename (a parquet dir cannot be overwritten while
-    * serving as its own write's input). Admission is idempotent only
-    * per batch — PRECONDITION as [[build]] plus: batch doc_ids must
-    * be disjoint from every already-admitted document's (re-admitting
-    * a doc would double its stream rows and df contributions).
-    * Concurrent readers of the dictionary dirs during the rename see
-    * either snapshot, not a mix; the stream appends are visible to
-    * new reads as soon as each write commits.
-    */
-  def admitBatch(batch: DataFrame, idCol: String, srcCol: String,
-                 textCol: String, path: String): Unit = {
-    writeStreams(batch, idCol, srcCol, textCol, path, "append")
-    val spark = batch.sparkSession
-    // batch-cost dictionary folds: aggregate the BATCH's bigram rows
-    // once (vocabulary × sources-sized), then merge into the stored
-    // dictionaries — the stored dbigrams stream is never re-scanned
-    val batchCounts = dbigramRows(
-      tokenized(batch, idCol, srcCol, textCol))
-      .groupBy(col("source"), col("bh"), col("bl"))
-      .agg(count(lit(1)).as("n"))
-      .persist() // two dictionary folds, one batch aggregation
-    try {
-      replaceTable(
-        ParquetIO.read(spark, s"$path/bigram_df")
-          .unionByName(batchCounts.groupBy(col("bh"), col("bl"))
-            .agg(sum(col("n")).as("df")))
-          .groupBy(col("bh"), col("bl")).agg(sum(col("df")).as("df")),
-        s"$path/bigram_df")
-      replaceTable(
-        ParquetIO.read(spark, s"$path/source_bigrams")
-          .unionByName(batchCounts.select(col("source"), col("bh"), col("bl")))
-          .distinct(),
-        s"$path/source_bigrams")
-    } finally batchCounts.unpersist(blocking = false)
-    // df_lower count-merges exactly like bigram_df: the batch's
-    // per-term doc counts (vocabulary-sized, from the batch's own
-    // per-doc-distinct lowered tokens) sum into the stored dictionary
-    // — exact because doc sets are disjoint by precondition
-    replaceTable(
-      ParquetIO.read(spark, s"$path/df_lower")
-        .unionByName(dtokenLowerRows(tokenized(batch, idCol, srcCol, textCol))
-          .groupBy(col("term")).agg(count(lit(1)).as("df")))
-        .groupBy(col("term")).agg(sum(col("df")).as("df")),
-      s"$path/df_lower")
-    // df_raw count-merges the same way (dtokens is per-doc distinct,
-    // so the batch's per-term row count is its df contribution; doc
-    // sets disjoint by precondition)
-    replaceTable(
-      ParquetIO.read(spark, s"$path/df_raw")
-        .unionByName(dtokenRows(tokenized(batch, idCol, srcCol, textCol))
-          .groupBy(col("term")).agg(count(lit(1)).as("df")))
-        .groupBy(col("term")).agg(sum(col("df")).as("df")),
-      s"$path/df_raw")
-  }
-
-  /** Stage `df` beside `dir`, then swap directories — the
-    * read-merge-replace primitive for the dictionary folds (writing
-    * over the parquet dir a plan is reading throws mid-job).
-    */
-  private def replaceTable(df: DataFrame, dir: String): Unit = {
-    val staged = dir + "__staged"
-    df.write.mode("overwrite").parquet(staged)
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(conf)
-    fs.delete(target, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(staged), target))
-      sys.error(s"postings admission: rename $staged -> $dir failed")
-  }
-
   /** The positional postings stream `(doc_id, source, pos, term)`. */
   def tokens(spark: SparkSession, path: String): DataFrame =
     ParquetIO.read(spark, s"$path/tokens")
@@ -382,12 +254,6 @@ object Postings {
     */
   def distinctTokens(spark: SparkSession, path: String): DataFrame =
     ParquetIO.read(spark, s"$path/dtokens")
-
-  /** Per-doc-distinct LOWERCASED `[a-z]+` postings — the BM25
-    * term-pick stream.
-    */
-  def distinctTokensLower(spark: SparkSession, path: String): DataFrame =
-    ParquetIO.read(spark, s"$path/dtokens_lower")
 
   /** The word-pair stream at distance `d` — the `d` filter reaches
     * the parquet scan as a pushed predicate, so a d=1 consumer never

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Z-order (Morton) data layout — multi-dimensional file clustering
-  * for min/max skipping.
+/** Z-order (Morton) key — the sort key of multi-dimensional file
+  * clustering for min/max skipping.
   *
   * A range sort on one column makes parquet min/max stats prune that
   * column perfectly and every other column not at all: each file
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.LongType
   * overlaps a vanishing fraction of files. At 100 TB this is the
   * difference between scanning every file for a secondary-dim filter
   * and scanning a few percent; the key is computed map-side (5
-  * shift/mask steps per dim, whole-stage codegen) and feeds a single
-  * range repartition — the same shuffle a plain sorted write pays.
+  * shift/mask steps per dim, whole-stage codegen), so a range
+  * repartition on it costs the same shuffle a plain sorted write pays.
   *
   * The bit-spreading uses the classic magic-mask doubling trick
   * (Morton 1966; the form in Bit Twiddling Hacks): spread the low 16
@@ -41,24 +41,4 @@ object ZOrder {
   /** 32-bit Morton key of two 16-bit dims: x at even bits, y at odd. */
   def mortonKey(x: Column, y: Column): Column =
     spreadBits16(x).bitwiseOR(shiftleft(spreadBits16(y), 1))
-
-  /** Write `df` as `numFiles` parquet files range-clustered on the
-    * Morton key of (xCol, yCol) — every file's min/max stats are then
-    * tight on BOTH dims. One range shuffle, same cost as a plain
-    * sorted write.
-    */
-  def writeZOrdered(df: DataFrame, xCol: String, yCol: String,
-                    numFiles: Int, path: String): Unit =
-    df.withColumn("_zkey", mortonKey(col(xCol), col(yCol)))
-      .repartitionByRange(numFiles, col("_zkey"))
-      .sortWithinPartitions("_zkey")
-      .drop("_zkey")
-      .write.mode("overwrite").parquet(path)
-
-  /** Per-file min/max of a column for a written table — the stats a
-    * scan's file-skipping sees (spec/diagnostic helper).
-    */
-  def fileRanges(df: DataFrame, dim: String): DataFrame =
-    df.groupBy(input_file_name().as("file"))
-      .agg(min(col(dim)).as("lo"), max(col(dim)).as("hi"))
 }

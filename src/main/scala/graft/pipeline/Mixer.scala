@@ -6,29 +6,18 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Training-mix assembly operators: deterministic stratified sampling
-  * by source and token-budget truncation — the last mile between a
-  * cleaned corpus and a training shard list.
+/** Training-mix assembly operators: token-budget truncation,
+  * sequence packing, temperature mixing by source, DSIR importance
+  * weights and systematic sampling — the last mile between a cleaned
+  * corpus and a training shard list.
   *
   * Determinism matters more than statistical niceties here: a mix
   * must be reproducible run-over-run and machine-over-machine, so
-  * selection is keyed on a hash of the row id, not on RNG state
-  * (`sampleBy` draws from per-partition RNG streams and changes with
-  * partitioning; xxhash64(id, seed) does not).
+  * selection is a pure function of the row id and the data, not of
+  * RNG state (`sampleBy` draws from per-partition RNG streams and
+  * changes with partitioning; a Lehmer draw of the id does not).
   */
 object Mixer {
-
-  /** Keep each row iff hash(id, seed) mod 1e6 < fraction(source)·1e6 —
-    * a per-source deterministic Bernoulli sample. Scale: narrow (no
-    * shuffle), fully pushed into the scan stage.
-    */
-  def stratifiedSample(docs: DataFrame, idCol: String, strataCol: String,
-                       fractions: Map[String, Double], seed: Long): DataFrame = {
-    val frac = typedlit(fractions)
-    val draw = pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
-      .cast(DoubleType) / 1000000.0
-    docs.filter(draw < coalesce(frac(col(strataCol)), lit(0.0)))
-  }
 
   /** Greedy token-budget cut: order documents deterministically
     * (quality desc, id asc), keep the prefix whose running token sum

@@ -112,90 +112,4 @@ object Snapshots {
           .as("sum_m"))
       .filter(col("n") > 0)
   }
-
-  /** The COMMITTED versions under a `v=<n>` snapshot layout, sorted
-    * ascending. A version counts only with its committer `_SUCCESS`
-    * marker present: a writer that crashed mid-population (or a
-    * legacy in-place overwrite caught in flight) leaves a directory
-    * without one, and no reader may select it as "latest". The CDC
-    * sink's atomic-rename publication plus this filter is the
-    * two-sided guarantee.
-    */
-  def committedVersions(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return Nil
-    // ONE glob listing for the markers, not one exists() RPC per
-    // version: this runs on every CDC micro-batch (latestVersionBelow),
-    // so on an object store the per-version probe would make apply
-    // cost grow O(version history) in round-trips until a vacuum.
-    Option(fs.globStatus(new Path(hPath, "v=*/_SUCCESS"))).toSeq.flatten
-      .map(_.getPath.getParent.getName.drop(2).toLong)
-      .sorted
-  }
-
-  /** Time travel over a versioned snapshot table: read an explicit
-    * version, or the newest one ≤ `asOf` when `asOf` is given — the
-    * query-side counterpart of the CDC sink's `v=<n>` layout. Listing
-    * is one directory scan of version names (uncommitted versions —
-    * no `_SUCCESS` — are invisible, see [[committedVersions]]); no
-    * data files open until the chosen version is read.
-    */
-  def readVersion(spark: org.apache.spark.sql.SparkSession, path: String,
-                  asOf: Option[Long] = None): DataFrame = {
-    val versions = committedVersions(spark, path)
-    val eligible = asOf.fold(versions)(a => versions.filter(_ <= a))
-    require(eligible.nonEmpty,
-      s"no snapshot version${asOf.fold("")(a => s" <= $a")} under $path")
-    spark.read.parquet(s"$path/v=${eligible.last}")
-  }
-
-  /** Retention for a versioned snapshot table (the `v=<n>` directories
-    * [[graft.streaming.GraftStreams.cdcSnapshotSink]] maintains):
-    * delete every COMMITTED version except the newest `keepLast`, and
-    * sweep writer debris — `_tmp_v=` staging directories at or below
-    * the newest committed version and uncommitted `v=` directories
-    * (no `_SUCCESS`) older than it; debris NEWER than the newest
-    * commit is left alone, because it may be the streaming writer's
-    * in-flight publication. Retention counts committed versions
-    * only, so a trailing crashed write can never cause the last good
-    * snapshots to be vacuumed away. Deletion order is oldest-first
-    * and each result is checked, so a crash mid-vacuum leaves a
-    * contiguous suffix of versions — readers of "latest" are never
-    * broken, and re-running completes the job. Returns the committed
-    * versions deleted.
-    */
-  def vacuumVersions(spark: org.apache.spark.sql.SparkSession, path: String,
-                     keepLast: Int): Seq[Long] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    import org.apache.hadoop.fs.Path
-    val hPath = new Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return Nil
-    def del(dir: Path): Unit =
-      if (!fs.delete(dir, true))
-        throw new java.io.IOException(s"vacuum: delete of $dir failed")
-    val committed = committedVersions(spark, path)
-    val doomed = committed.dropRight(keepLast)
-    doomed.foreach(v => del(new Path(s"$path/v=$v")))
-    val names = fs.listStatus(hPath).map(_.getPath.getName)
-    // both debris sweeps are guarded by `<= / < newest committed`: a
-    // staging dir or uncommitted version NEWER than the newest commit
-    // may be an in-flight publication by the streaming writer, and a
-    // concurrent vacuum must never race it (delete its output between
-    // write and rename). Anything at-or-below the newest commit is by
-    // construction dead — the CDC sink publishes versions in batch-id
-    // order, so an in-flight batch id is always > the newest commit.
-    committed.lastOption.foreach { newest =>
-      names.collect { case n if n.startsWith("_tmp_v=") => n.drop(7).toLong }
-        .filter(_ <= newest)
-        .foreach(v => del(new Path(s"$path/_tmp_v=$v")))
-      names.collect { case n if n.startsWith("v=") => n.drop(2).toLong }
-        .filter(v => v < newest && !committed.contains(v))
-        .foreach(v => del(new Path(s"$path/v=$v")))
-    }
-    doomed
-  }
 }

@@ -69,82 +69,4 @@ object GraftStreams {
       }
       .option("checkpointLocation", checkpoint)
       .start()
-
-  /** One CDC micro-batch: read the latest COMMITTED snapshot version
-    * BELOW this batch id (a retry must fold from the same base it saw
-    * the first time, never from its own half-written output), apply
-    * the changeset, publish `v=<batchId>`.
-    *
-    * Publication is atomic-rename, not in-place: the multi-file
-    * parquet job lands in `_tmp_v=<batchId>` (underscore-prefixed —
-    * invisible to both the version listing and Spark's file readers)
-    * and a directory rename moves it into place, so a crash mid-write
-    * never leaves a half-populated `v=` directory and a concurrent
-    * reader of "latest" never observes one mid-population. Version
-    * consumers additionally require the committer's `_SUCCESS` marker
-    * (see [[graft.pipeline.Snapshots.readVersion]]), which covers
-    * directories produced before this discipline. Same base + same
-    * batch → same bytes, so at-least-once foreachBatch becomes
-    * exactly-once snapshot maintenance.
-    */
-  private[graft] def applyCdcBatch(batch: DataFrame, batchId: Long,
-                                   path: String, keyCol: String,
-                                   opCol: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_tmp_v=$batchId")
-    val dst = new org.apache.hadoop.fs.Path(s"$path/v=$batchId")
-    // a retry of an ALREADY-COMMITTED batch (failure after rename,
-    // before the checkpoint advanced) is a no-op: same base + same
-    // batch → same bytes, so skipping is exactly-once — and it keeps
-    // v=<batchId>, at that moment the latest committed version,
-    // continuously readable instead of vanishing for a
-    // delete-to-rename window under a concurrent reader.
-    if (fs.exists(new org.apache.hadoop.fs.Path(dst, "_SUCCESS"))) return
-    val baseSchema = org.apache.spark.sql.types.StructType(
-      batch.schema.filterNot(_.name == opCol))
-    val base = latestVersionBelow(spark, path, batchId) match {
-      case Some(p) => spark.read.schema(baseSchema).parquet(p)
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], baseSchema)
-    }
-    val folded =
-      graft.pipeline.Snapshots.applyChangeset(base, batch, keyCol, opCol)
-    fs.delete(tmp, true)
-    folded.write.mode("overwrite").parquet(tmp.toString)
-    // only a half-populated dst (exists but no _SUCCESS — handled
-    // above otherwise) can be standing here; clear it for the rename
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"cdc snapshot publish: rename $tmp -> $dst failed")
-  }
-
-  private def latestVersionBelow(spark: SparkSession, path: String,
-                                 batchId: Long): Option[String] =
-    graft.pipeline.Snapshots.committedVersions(spark, path)
-      .filter(_ < batchId)
-      .lastOption
-      .map(v => s"$path/v=$v")
-
-  /** Streaming CDC apply — fold a stream of keyed I/U/D change rows
-    * into a continuously maintained snapshot TABLE (the streaming
-    * face of [[graft.pipeline.Snapshots.applyChangeset]]): each
-    * micro-batch produces snapshot version `v=<batchId>` from the
-    * previous version plus the batch's changes; readers take the
-    * highest version. Within a batch the changeset contract is the
-    * batch one (at most one change row per key — conflation is the
-    * upstream CDC reader's job). Old versions are the retention/
-    * time-travel knob, compacted away by `GraftSinks.compact`-style
-    * maintenance.
-    */
-  def cdcSnapshotSink(changes: DataFrame, path: String, checkpoint: String,
-                      keyCol: String, opCol: String): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBatch(batch, batchId, path, keyCol, opCol)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

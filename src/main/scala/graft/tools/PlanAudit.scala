@@ -144,7 +144,7 @@ object PlanAudit {
       // broadcast-model collects — run as their own QueryExecutions
       // and are invisible in the returned frame's explain) plus the
       // returned frame's own plan. This is what the per-round
-      // plans/rNN/<query>_{before,after}.txt files are generated
+      // history/plans/rNN/<query>_{before,after}.txt files are generated
       // from: a checkpoint-pinned query's final frame alone reads as
       // a bare ExistingRDD scan and would hide the real shape.
       val fn = SparkEntry.queries(args(1))

@@ -468,7 +468,8 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
     val day2 = planted.filter(col("doc_id") >= 1000000L)
     val idx0 = Dedup.buildBandIndex(corpus0, "doc_id", "text",
       shingleN = 3, k = 64, bands = 32)
-    val idx1 = Dedup.extendIndex(idx0, day1, "doc_id", "text")
+    val idx1 = Dedup.extendIndex(idx0, Dedup.buildBandIndex(day1,
+      "doc_id", "text", shingleN = 3, k = 64, bands = 32))
     val got = Dedup.admitBatch(idx1, day2, "doc_id", "text",
       minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -518,12 +519,11 @@ class DedupSpec extends AnyFunSuite with SparkSpec {
       pmod(col("doc_id"), lit(100)) === 1)
     val probe = planted.filter(col("doc_id") >= 1000000L)
 
+    def index(docs: org.apache.spark.sql.DataFrame) =
+      Dedup.buildBandIndex(docs, "doc_id", "text",
+        shingleN = 3, k = 64, bands = 32)
     val extended = Dedup.extendIndex(
-      Dedup.extendIndex(
-        Dedup.buildBandIndex(corpus0, "doc_id", "text",
-          shingleN = 3, k = 64, bands = 32),
-        day1, "doc_id", "text"),
-      day2, "doc_id", "text")
+      Dedup.extendIndex(index(corpus0), index(day1)), index(day2))
     val tmp = Stored.tempDir("graft-resave")
     Dedup.saveBandIndex(extended, tmp)
     val roundTripped = Dedup.loadBandIndex(spark, tmp)

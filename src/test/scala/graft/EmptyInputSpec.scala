@@ -161,7 +161,8 @@ class EmptyInputSpec extends AnyFunSuite with SparkSpec {
     val idx = Dedup.buildBandIndex(docs, "doc_id", "text")
     assert(Dedup.admitBatch(idx, noDocs, "doc_id", "text").count() === 0)
     // extending with an empty batch preserves the index contents
-    val extended = Dedup.extendIndex(idx, noDocs, "doc_id", "text")
+    val extended = Dedup.extendIndex(idx,
+      Dedup.buildBandIndex(noDocs, "doc_id", "text"))
     assert(extended.bands.count() === idx.bands.count())
     assert(extended.sizes.count() === idx.sizes.count())
   }

@@ -8,26 +8,6 @@ class MixerSpec extends AnyFunSuite with SparkSpec {
 
   private lazy val docs = Tables.documents(spark, sf)
 
-  test("stratified sample hits requested per-source proportions, deterministic") {
-    val fr = Map("src0" -> 0.8, "src1" -> 0.2) // others default to 0
-    val s1 = Mixer.stratifiedSample(docs, "doc_id", "source", fr, seed = 7)
-    val s2 = Mixer.stratifiedSample(docs, "doc_id", "source", fr, seed = 7)
-    // deterministic: identical row sets across runs
-    assert(s1.exceptAll(s2).isEmpty && s2.exceptAll(s1).isEmpty)
-    val counts = s1.groupBy("source").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val totals = docs.groupBy("source").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(counts.keySet.subsetOf(Set("src0", "src1"))) // zero-rate strata dropped
-    val r0 = counts.getOrElse("src0", 0L).toDouble / totals("src0")
-    val r1 = counts.getOrElse("src1", 0L).toDouble / totals("src1")
-    assert(math.abs(r0 - 0.8) < 0.15, s"src0 rate $r0")
-    assert(math.abs(r1 - 0.2) < 0.15, s"src1 rate $r1")
-    // different seed draws a different set
-    val s3 = Mixer.stratifiedSample(docs, "doc_id", "source", fr, seed = 8)
-    assert(s3.exceptAll(s1).count() > 0)
-  }
-
   test("token budget keeps the best-quality prefix within the budget") {
     val scored = docs.withColumn("q",
       graft.functions.TextFunctions.qualityScore(col("text")))

@@ -50,16 +50,14 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     assert(digest.nonEmpty)
   }
 
-  test("resize produces fixed-size payloads with updated metadata") {
-    val resized = Multimodal.resize(payloads, 32, 16)
-    val bad = resized.filter(length(col("payload")) =!= 32 * 16)
-    assert(bad.count() === 0)
-    assert(resized.filter(col("meta.width") =!= 32).count() === 0)
-    // deterministic
-    val a = resized.select("doc_id", "payload").collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val b = Multimodal.resize(payloads, 32, 16).select("doc_id", "payload")
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(a === b)
+  test("resizeBytes produces fixed-size, deterministic payloads") {
+    val bytes = payloads.select("payload").collect()
+      .map(_.getAs[Array[Byte]](0))
+    assert(bytes.nonEmpty)
+    bytes.foreach { p =>
+      val out = Multimodal.resizeBytes(p, 32, 16)
+      assert(out.length === 32 * 16)
+      assert(out.sameElements(Multimodal.resizeBytes(p, 32, 16)))
+    }
   }
 }

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Freezes every query's physical-plan shape (shuffle / broadcast /
   * sort-merge-join / scan counts + parquet pushdown) against the
   * checked-in baseline, and bans data-sized unpartitioned windows —
-  * so a plan regression fails the suite instead of slipping past the
-  * manually refreshed PLANS.md artifact. When a plan change is
-  * intentional, refresh with `sbt "runMain graft.tools.PlanBaseline"`
-  * and commit the diff alongside the change that caused it.
+  * so a plan regression fails the suite. `graft.tools.PlanAudit
+  * [query]` prints the same counts, or one query's formatted plan,
+  * for reading. When a plan change is intentional, refresh with
+  * `sbt "runMain graft.tools.PlanBaseline"` and commit the diff
+  * alongside the change that caused it.
   */
 class PlanRegressionSpec extends AnyFunSuite with SparkSpec {
 

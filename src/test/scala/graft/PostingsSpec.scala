@@ -79,21 +79,22 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
       explode(array_distinct(split(col("text"), " "))).as("term"))
     assert(rows(Postings.distinctTokens(spark, dir)
       .select("doc_id", "source", "term")) === rows(expectedD))
-    // lowered stream: distinct AFTER lowering — doc 2's four case
-    // variants of "the" collapse to ONE row; non-[a-z]+ tokens drop
-    val expectedL = corpus.select(col("doc_id"), col("source"),
+    // the empty-string token of doc 4 survives dtokens (the
+    // case-sensitive stream is filterless)
+    assert(Postings.distinctTokens(spark, dir)
+      .filter(col("doc_id") === 4).count() === 1)
+    // lowered dictionary: distinct AFTER lowering — doc 2's four case
+    // variants of "the" count ONCE toward its df; non-[a-z]+ tokens
+    // (doc 4's empty string) never become terms
+    val lowered = corpus.select(col("doc_id"),
       explode(array_distinct(expr(
         "filter(transform(split(text, ' '), x -> lower(x))," +
           " x -> x rlike '^[a-z]+$')"))).as("term"))
-    val gotL = Postings.distinctTokensLower(spark, dir)
-    assert(rows(gotL.select("doc_id", "source", "term")) ===
-      rows(expectedL))
-    assert(gotL.filter(col("doc_id") === 2).count() === 1)
-    // the empty-string token of doc 4 survives dtokens (case-
-    // sensitive stream is filterless) but never dtokens_lower
-    assert(Postings.distinctTokens(spark, dir)
-      .filter(col("doc_id") === 4).count() === 1)
-    assert(gotL.filter(col("doc_id") === 4).count() === 0)
+    val dfL = Postings.dfLower(spark, dir)
+    assert(rows(dfL.select("term", "df")) ===
+      rows(lowered.groupBy(col("term")).agg(count(lit(1)).as("df"))))
+    assert(dfL.filter(col("term") === "the").head.getLong(1) === 2L)
+    assert(dfL.filter(col("term") === "").count() === 0)
   }
 
   test("bigram tables match the inline hash-then-distinct pipeline") {
@@ -124,63 +125,12 @@ class PostingsSpec extends AnyFunSuite with SparkSpec {
       .filter(col("doc_id").isin(3, 4)).count() === 0)
   }
 
-  test("batch admission equals a full rebuild on every table " +
-      "(random splits)") {
-    // the B77 gate property applied to the postings snapshot: build
-    // on a random subset, admit the complement as a batch, and every
-    // one of the seven tables must equal the from-scratch rebuild of
-    // the full corpus as a MULTISET (appends must neither drop nor
-    // duplicate stream rows; the dictionary folds must count-merge
-    // exactly). Seeded split per round so failures reproduce.
-    import spark.implicits._
-    val full = (1L to 40L).map { i =>
-      val src = if (i % 3 == 0) "web" else if (i % 3 == 1) "book" else "wiki"
-      val words = (0 until (i % 7).toInt + 1)
-        .map(j => s"w${(i * 31 + j * 17) % 23}")
-      (i, src, words.mkString(" "))
-    }.toDF("doc_id", "source", "text")
-    val tables = Seq("tokens", "pairs", "dtokens", "dtokens_lower",
-      "dbigrams", "bigram_df", "source_bigrams",
-      "tf_lower", "dl_lower", "df_lower", "tf_hashed", "df_raw", "dl_raw")
-    Seq(7, 13, 29).foreach { seed =>
-      val inBase = pmod(xxhash64(col("doc_id"), lit(seed)), lit(2)) === 0
-      val dirInc = Stored.tempDir(s"graft_post_adm$seed")
-      val dirFull = Stored.tempDir(s"graft_post_reb$seed")
-      Postings.build(full.filter(inBase), "doc_id", "source", "text", dirInc)
-      Postings.admitBatch(full.filter(!inBase), "doc_id", "source", "text",
-        dirInc)
-      Postings.build(full, "doc_id", "source", "text", dirFull)
-      tables.foreach { t =>
-        assert(rows(spark.read.parquet(s"$dirInc/$t")) ===
-          rows(spark.read.parquet(s"$dirFull/$t")),
-          s"table $t diverges after admission (seed=$seed)")
-      }
-    }
-    // a second admission on top of the first must also fold exactly
-    // (the daily-pipeline shape: admissions stack)
-    val dir2 = Stored.tempDir("graft_post_adm2")
-    val third = pmod(col("doc_id"), lit(3))
-    Postings.build(full.filter(third === 0), "doc_id", "source", "text", dir2)
-    Postings.admitBatch(full.filter(third === 1), "doc_id", "source", "text",
-      dir2)
-    Postings.admitBatch(full.filter(third === 2), "doc_id", "source", "text",
-      dir2)
-    val dirF2 = Stored.tempDir("graft_post_reb2")
-    Postings.build(full, "doc_id", "source", "text", dirF2)
-    tables.foreach { t =>
-      assert(rows(spark.read.parquet(s"$dir2/$t")) ===
-        rows(spark.read.parquet(s"$dirF2/$t")),
-        s"table $t diverges after stacked admissions")
-    }
-  }
-
   test("an empty corpus builds readable empty streams") {
     val dir = Stored.tempDir("graft_post4")
     Postings.build(corpus.filter(lit(false)), "doc_id", "source", "text", dir)
     assert(Postings.tokens(spark, dir).count() === 0)
     assert(Postings.pairsAll(spark, dir).count() === 0)
     assert(Postings.distinctTokens(spark, dir).count() === 0)
-    assert(Postings.distinctTokensLower(spark, dir).count() === 0)
     assert(Postings.docBigrams(spark, dir).count() === 0)
     assert(Postings.bigramDf(spark, dir).count() === 0)
     assert(Postings.sourceBigrams(spark, dir).count() === 0)

@@ -305,90 +305,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(written.filter(col("batch_id") === 0).count() === 5)
   }
 
-  test("streaming CDC apply maintains a snapshot across batches, " +
-      "retries idempotent") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = Stored.tempDir("graft_cdc")
-    val input = MemoryStream[(Long, String, String)]
-    val q = GraftStreams.cdcSnapshotSink(
-      input.toDF().toDF("doc_id", "text", "op"),
-      s"$dir/snap", s"$dir/ckpt", "doc_id", "op")
-    try {
-      input.addData((1L, "one", "I"), (2L, "two", "I"), (3L, "three", "I"))
-      q.processAllAvailable()
-      input.addData((2L, "two v2", "U"), (3L, null, "D"), (4L, "four", "I"))
-      q.processAllAvailable()
-    } finally q.stop()
-    // v=0 holds the first batch, v=1 the folded state
-    val v0 = spark.read.parquet(s"$dir/snap/v=0")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(v0 === Map(1L -> "one", 2L -> "two", 3L -> "three"))
-    val v1 = spark.read.parquet(s"$dir/snap/v=1")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(v1 === Map(1L -> "one", 2L -> "two v2", 4L -> "four"))
-    // a RETRY of batch 1 folds from v=0 again — byte-stable result
-    val retry = Seq((2L, "two v2", "U"), (3L, null.asInstanceOf[String], "D"),
-      (4L, "four", "I")).toDF("doc_id", "text", "op")
-    GraftStreams.applyCdcBatch(retry, 1L, s"$dir/snap", "doc_id", "op")
-    val v1b = spark.read.parquet(s"$dir/snap/v=1")
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(v1b === v1)
-  }
-
-  test("windowed distinct users via HLL state stays within tolerance " +
-      "and exact counts stay exact") {
-    // the sketch-table pattern under streaming state: per-window
-    // approx_count_distinct keeps HLL registers in the state store
-    // (constant bytes per window however many users), beside an exact
-    // count for the spec to gate against. Append mode: windows emit
-    // once the watermark passes.
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Transaction]
-    val agg = input.toDF()
-      .withWatermark("ts", "2 seconds")
-      .groupBy(window(col("ts"), "10 seconds").as("w"))
-      .agg(approx_count_distinct(col("accountId"), 0.02).as("n_est"),
-        count(lit(1)).as("n_rows"))
-      .select(unix_millis(col("w.start")).as("ws"), col("n_est"),
-        col("n_rows"))
-    val sink = runToSink(agg, "t_hll_win", "append") { step =>
-      // window [0,10): accounts 1..40, two events each
-      input.addData((1 to 40).flatMap(a =>
-        Seq(tx(a, 1.0, a % 5), tx(a, 2.0, (a % 5) + 4))): _*)
-      step(0)
-      input.addData(tx(9, 1, 30)) // watermark -> 28s: close [0,10)
-      step(0)
-      input.addData(tx(9, 1, 31))
-      step(0)
-    }
-    val w0 = sink.filter(col("ws") === Base).head
-    assert(w0.getLong(2) === 80L, "exact row count must be exact")
-    // 2%-rsd sketch, 5-sigma tolerance: 40 ± 4
-    assert(math.abs(w0.getLong(1) - 40L) <= 4,
-      s"distinct estimate out of tolerance: ${w0.getLong(1)}")
-  }
-
-  test("vacuum keeps the newest snapshot versions and reports the rest") {
-    import spark.implicits._
-    val dir = Stored.tempDir("graft_vac")
-    (0L to 4L).foreach { v =>
-      Seq((v, s"text$v")).toDF("doc_id", "text")
-        .write.parquet(s"$dir/snap/v=$v")
-    }
-    val deleted = graft.pipeline.Snapshots.vacuumVersions(
-      spark, s"$dir/snap", keepLast = 2)
-    assert(deleted === Seq(0L, 1L, 2L))
-    val left = new java.io.File(s"$dir/snap").listFiles()
-      .map(_.getName).filter(_.startsWith("v=")).sorted.toSeq
-    assert(left === Seq("v=3", "v=4"))
-    // latest version still reads cleanly after retention
-    assert(spark.read.parquet(s"$dir/snap/v=4").count() === 1)
-    // vacuum of a missing table is a no-op, not an error
-    assert(graft.pipeline.Snapshots.vacuumVersions(
-      spark, s"$dir/absent", 1) === Nil)
-  }
-
   test("sliding window means emit per-slide panes (reference pane slicing)") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Transaction]
@@ -472,57 +388,6 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       assert(stateRows >= 2L)
       assert(stateBytes > 0L)
     } finally spark.streams.removeListener(metrics)
-  }
-
-  test("stream-stream interval join matches events within the time bound") {
-    implicit val sqlCtx = spark.sqlContext
-    val inA = MemoryStream[Transaction]
-    val inB = MemoryStream[Transaction]
-    val a = inA.toDF().select(col("accountId").as("a_acct"),
-      col("amount").as("a_amount"), col("ts").as("a_ts"))
-      .withWatermark("a_ts", "5 seconds")
-    val b = inB.toDF().select(col("accountId").as("b_acct"),
-      col("amount").as("b_amount"), col("ts").as("b_ts"))
-      .withWatermark("b_ts", "5 seconds")
-    val joined = a.join(b,
-      col("a_acct") === col("b_acct") &&
-        col("b_ts") >= col("a_ts") &&
-        col("b_ts") <= col("a_ts") + expr("INTERVAL 10 seconds"))
-    val q = joined.writeStream.format("memory").queryName("t_ssj")
-      .outputMode("append").start()
-    try {
-      inA.addData(tx(1, 100, 0), tx(2, 5, 0))
-      inB.addData(tx(1, 7, 4))   // within 10s of a(1) -> match
-      inB.addData(tx(2, 9, 30))  // 30s after a(2) -> no match
-      q.processAllAvailable()
-      inA.addData(tx(9, 1, 100)); inB.addData(tx(9, 1, 100))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("t_ssj").collect()
-    assert(rows.exists(r => r.getLong(0) === 1L && r.getDouble(4) === 7.0))
-    assert(!rows.exists(r => r.getLong(0) === 2L))
-  }
-
-  test("streaming dedup within watermark drops duplicate event ids") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Transaction]
-    // accountId doubles as the event id for dedup purposes here
-    val deduped = input.toDF()
-      .withWatermark("ts", "5 seconds")
-      .dropDuplicatesWithinWatermark("accountId")
-    val q = deduped.writeStream.format("memory").queryName("t_dedup")
-      .outputMode("append").start()
-    try {
-      input.addData(tx(1, 10, 1), tx(1, 99, 2), tx(2, 20, 1))
-      q.processAllAvailable()
-      input.addData(tx(1, 77, 3)) // still within watermark -> dropped
-      q.processAllAvailable()
-      input.addData(tx(9, 1, 60))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("t_dedup").collect()
-    assert(rows.count(_.getLong(0) == 1L) === 1)
-    assert(rows.count(_.getLong(0) == 2L) === 1)
   }
 
   test("running totals accumulate across micro-batches (state merge)") {
@@ -898,44 +763,5 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     assert(rows.contains((1L, 3L, 60.0)),
       s"chained events must merge into one session: $rows")
     assert(rows.contains((2L, 1L, 7.0)))
-  }
-
-  test("stream-stream LEFT OUTER interval join emits unmatched rows " +
-      "once state can expire") {
-    implicit val sqlCtx = spark.sqlContext
-    val inA = MemoryStream[Transaction]
-    val inB = MemoryStream[Transaction]
-    val a = inA.toDF().select(col("accountId").as("a_acct"),
-      col("amount").as("a_amount"), col("ts").as("a_ts"))
-      .withWatermark("a_ts", "5 seconds")
-    val b = inB.toDF().select(col("accountId").as("b_acct"),
-      col("amount").as("b_amount"), col("ts").as("b_ts"))
-      .withWatermark("b_ts", "5 seconds")
-    val joined = a.join(b,
-      col("a_acct") === col("b_acct") &&
-        col("b_ts") >= col("a_ts") &&
-        col("b_ts") <= col("a_ts") + expr("INTERVAL 10 seconds"),
-      "left_outer")
-    val q = joined.writeStream.format("memory").queryName("t_ssj_lo")
-      .outputMode("append").start()
-    try {
-      inA.addData(tx(1, 100, 0), tx(2, 5, 0))
-      inB.addData(tx(1, 7, 4)) // matches a(1); a(2) never matches
-      q.processAllAvailable()
-      // watermark must pass a_ts + 10s + delay before the unmatched
-      // left row can be emitted with nulls
-      inA.addData(tx(9, 1, 60)); inB.addData(tx(9, 1, 60))
-      q.processAllAvailable()
-      inA.addData(tx(9, 1, 90)); inB.addData(tx(9, 1, 90))
-      q.processAllAvailable()
-    } finally { q.processAllAvailable(); q.stop() }
-    val rows = spark.table("t_ssj_lo").collect()
-    val matched = rows.filter(r => !r.isNullAt(4))
-    assert(matched.exists(r => r.getLong(0) == 1 && r.getDouble(4) == 7.0),
-      "in-interval pair must join")
-    val unmatchedAccts = rows.filter(_.isNullAt(4)).map(_.getLong(0)).toSet
-    assert(unmatchedAccts.contains(2L),
-      s"expired unmatched left row must emit with nulls, got " +
-        rows.mkString("; "))
   }
 }

@@ -71,7 +71,8 @@ class TextSpec extends AnyFunSuite with SparkSpec {
 
   test("shingles of short texts are empty, not inverted sequences") {
     val df = Seq((1L, "one two")).toDF("doc_id", "text")
-    val n = df.select(size(TextFunctions.wordShingles(col("text"), 3)).as("n"))
+    val n = df.select(TextFunctions.words(col("text")).as("w"))
+      .select(size(TextFunctions.shinglesOfWords(col("w"), 3)).as("n"))
       .head.getInt(0)
     assert(n === 0)
   }
